@@ -1,7 +1,9 @@
 """Capture .explain("formatted") for bench queries into plans/<round>/.
 
 Usage: python capture_plans.py before|after [query...]
+       python capture_plans.py refooter plans/r15/*.txt
 Defaults to every bench HEADLINE query that lives in the REGISTRY.
+``refooter`` recomputes the summary footer of already captured files.
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
        SPARK_GRAFT_PLANS_DIR (default plans/r15)
 
@@ -25,8 +27,12 @@ from collections import Counter
 
 # tree-section lines look like "   :  +- SortMergeJoin Inner (90)";
 # the details section repeats "(90) SortMergeJoin" — we parse the tree
-# (id-suffixed) form only.
-_NODE = re.compile(r"([A-Za-z][A-Za-z0-9_]*(?: [A-Za-z0-9_]+)*) \((\d+)\)\s*$")
+# (id-suffixed) form only.  Scan nodes render with an empty table-name
+# slot ("Scan parquet  (8)") or a dotted one ("Scan parquet
+# spark_catalog.default.t (8)"), so words may be dotted and separated
+# by runs of spaces; plan_summary collapses the runs.
+_NODE = re.compile(r"([A-Za-z][\w.]*(?: +[\w.]+)*) +\((\d+)\)\s*$")
+_FOOTER = "\n== NORMALIZED SUMMARY"
 
 _SUMMARY_OPS = (
     "Exchange",
@@ -60,14 +66,14 @@ def plan_summary(plan: str) -> str:
             break
         m = _NODE.search(line)
         if m:
-            seen.add((m.group(1), m.group(2)))
+            seen.add((" ".join(m.group(1).split()), m.group(2)))
     counts: Counter[str] = Counter()
     for name, _id in seen:
         for op in _SUMMARY_OPS:
             if name == op or name.startswith(op + " "):
                 counts[op] += 1
                 break
-    lines = ["", "== NORMALIZED SUMMARY (unique nodes; cached subtrees deduped) =="]
+    lines = ["", _FOOTER.strip() + " (unique nodes; cached subtrees deduped) =="]
     for op in _SUMMARY_OPS:
         if counts.get(op):
             lines.append(f"{op}={counts[op]}")
@@ -75,11 +81,26 @@ def plan_summary(plan: str) -> str:
     return "\n".join(lines) + "\n"
 
 
+def refooter(path: str) -> None:
+    """Recompute the summary footer of a captured plan file in place."""
+    with open(path) as f:
+        plan = f.read().split(_FOOTER, 1)[0]
+    with open(path, "w") as f:
+        f.write(plan)
+        f.write(plan_summary(plan))
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
+    if suffix == "refooter":
+        for path in sys.argv[2:]:
+            refooter(path)
+        return
     if suffix not in ("before", "after"):
-        raise SystemExit("usage: capture_plans.py before|after [query...]")
+        raise SystemExit(
+            "usage: capture_plans.py before|after [query...] | refooter FILE..."
+        )
     names = sys.argv[2:]
 
     from bench import HEADLINE

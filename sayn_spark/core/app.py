@@ -257,7 +257,7 @@ class App:
         and notebooks build many) and any cached query intermediates."""
         from sayn_spark.functions.registry import release_persisted
 
-        release_persisted()
+        release_persisted(all_threads=True)
         close = getattr(self.tracker, "close", None)
         if close is not None:
             close()
@@ -373,7 +373,7 @@ class App:
         # accumulate cached partitions
         from sayn_spark.functions.registry import release_persisted
 
-        release_persisted()
+        release_persisted(all_threads=True)
         n_ok = sum(s == TaskStatus.SUCCESS for s in statuses.values())
         self.tracker.finish_current_stage(
             summary=f"{n_ok} ok, {len(failed)} failed, {len(skipped)} skipped "

@@ -7,7 +7,7 @@ the driver (bounded iterations, converges in graph-diameter steps; for
 billion-edge graphs swap in the alternating large-star/small-star
 algorithm — same API).  The iterative loop is the one place this engine
 runs a driver-side loop over DataFrames; each iteration is a
-distributed join+agg and the convergence check is a tiny count.
+distributed join+agg, and the convergence sum rides on its checkpoint.
 
 The oracle computes the same fixpoint with a recursive CTE — this is
 the 'iterative algorithm' case the correctness harness usually can't
@@ -16,7 +16,7 @@ express in SQL; the transitive closure makes it expressible here.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sayn_spark.functions.dedup import (
@@ -34,6 +34,20 @@ class ComponentsNotConverged(RuntimeError):
     star contraction."""
 
 
+def _checkpoint_observed(df: DataFrame, *metrics) -> tuple[DataFrame, ...]:
+    """``df.localCheckpoint()`` plus the values of ``metrics``
+    (aggregate columns) over the checkpointed rows, read from the
+    checkpoint job itself through ``DataFrame.observe``.
+
+    A separate ``agg(...).collect()`` on the checkpointed frame cost two
+    more jobs per call.  The observed metrics are computed in the
+    checkpoint's result stage, whose accumulator updates Spark applies
+    exactly once per partition, so a retried task cannot double-count."""
+    obs = Observation()
+    out = df.observe(obs, *metrics).localCheckpoint()
+    return (out, *obs.get.values())
+
+
 def _label_prop(sym: DataFrame, max_iter: int) -> tuple[DataFrame, int, bool]:
     """Min-label propagation over a checkpointed symmetrised+self-looped
     edge frame -> (labels, iterations, converged)."""
@@ -45,24 +59,21 @@ def _label_prop(sym: DataFrame, max_iter: int) -> tuple[DataFrame, int, bool]:
     # xxhash64-derived (full-range BIGINT), and summing those raw
     # overflows long — ARITHMETIC_OVERFLOW under ANSI, or a silent
     # wraparound false-convergence with ANSI off (review r13, same
-    # shape as star_components' _summary)
-    _label_sum = F.sum(F.col("label").cast("decimal(38,0)"))
-    labels = (
-        sym.groupBy(F.col("src").alias("node"))
-        .agg(F.min("dst").alias("label"))
-        .localCheckpoint()
+    # shape as star_components' _summarised)
+    _label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+    labels, prev_sum = _checkpoint_observed(
+        sym.groupBy(F.col("src").alias("node")).agg(F.min("dst").alias("label")),
+        _label_sum,
     )
-    prev_sum = labels.agg(_label_sum).collect()[0][0]
     iterations = 1
     converged = False
     for _ in range(max_iter - 1):
-        new = (
+        new, new_sum = _checkpoint_observed(  # truncate lineage per iteration
             sym.join(labels, sym.dst == labels.node)
             .groupBy(F.col("src").alias("node"))
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint()  # truncate lineage per iteration
+            .agg(F.min("label").alias("label")),
+            _label_sum,
         )
-        new_sum = new.agg(_label_sum).collect()[0][0]
         iterations += 1  # count every executed pass, incl. the confirming one
         if new_sum == prev_sum:
             converged = True
@@ -121,7 +132,7 @@ def connected_components(
     "least(old, new)" join is needed.  Convergence is detected without
     any join at all: labels only ever decrease under min-propagation, so
     the global sum of labels strictly decreases until the fixpoint and
-    is read with a scalar agg off the just-checkpointed frame.
+    is observed on the checkpoint job itself (no extra job).
 
     Raises ComponentsNotConverged when max_iter passes don't reach the
     fixpoint — the partial labels would be silently wrong on graphs of
@@ -208,8 +219,20 @@ def star_components(
     self-loops (or fully contracted) are re-attached as singleton
     components from the node set captured up front.
     """
-    fwd = (
-        edges.select("src", "dst").where(F.col("src") != F.col("dst")).localCheckpoint()
+
+    def _summarised(e: DataFrame) -> tuple[DataFrame, tuple]:
+        """Checkpoint ``e`` and read its (row count, checksum) summary."""
+        e, n, h = _checkpoint_observed(
+            e,
+            F.count(F.lit(1)).alias("n"),
+            # decimal accumulator: summing raw 64-bit hashes overflows
+            # BIGINT under ANSI arithmetic
+            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h"),
+        )
+        return e, (n, h)
+
+    e, prev = _summarised(
+        edges.select("src", "dst").where(F.col("src") != F.col("dst"))
     )
     nodes = (
         edges.select(F.col("src").alias("node"))
@@ -217,18 +240,6 @@ def star_components(
         .distinct()
         .localCheckpoint()
     )
-
-    def _summary(e: DataFrame) -> tuple:
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal accumulator: summing raw 64-bit hashes overflows
-            # BIGINT under ANSI arithmetic
-            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    e = fwd
-    prev = _summary(e)
     rounds = 0
     fixpoint = False
     for _ in range(max_rounds):
@@ -254,15 +265,13 @@ def star_components(
             F.greatest("src", "dst").alias("a"), F.least("src", "dst").alias("b")
         )
         mins = dire.groupBy("a").agg(F.min("b").alias("m"))
-        e = (
+        e, cur = _summarised(
             dire.join(mins, "a")
             .select(F.col("b").alias("src"), F.col("m").alias("dst"))
             .unionByName(mins.select(F.col("a").alias("src"), F.col("m").alias("dst")))
             .where(F.col("src") != F.col("dst"))
             .distinct()
-            .localCheckpoint()
         )
-        cur = _summary(e)
         if cur == prev:
             fixpoint = True
             break

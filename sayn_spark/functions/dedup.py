@@ -2186,17 +2186,21 @@ def _containment_candidates(sigs: DataFrame, bands: dict[int, int]) -> DataFrame
     # alias band bits into part bits and join wrong candidate keys.
     # The index arm explodes the full signature, so the sig width (==
     # max band budget in every gate) is the bound that matters.
-    assert max(bands.values()) <= 1024, (
-        f"_containment_candidates: band budget {max(bands.values())} "
-        "overflows the 10-bit band field of the packed join key — "
-        "re-derive the packing before widening the gate"
-    )
+    if max(bands.values()) > 1024:
+        raise ValueError(
+            f"_containment_candidates: band budget {max(bands.values())} "
+            "overflows the 10-bit band field of the packed join key — "
+            "re-derive the packing before widening the gate"
+        )
     _bk = "shiftleft(cast(part as bigint), 41) + shiftleft(cast(band as bigint), 31) + v"
     index = sigs.select(
         F.col("doc_id").alias("id_x"), "part", F.posexplode("sig").alias("band", "v")
     ).select("id_x", F.expr(_bk).alias("bk"))
     gaps = sorted(bands)
-    assert gaps == list(range(len(gaps))), "gap arms must be contiguous from 0"
+    if gaps != list(range(len(gaps))):
+        raise ValueError(
+            f"_containment_candidates: gap arms {gaps} must be contiguous from 0"
+        )
     b_arr = "array(" + ", ".join(str(bands[g]) for g in gaps) + ")"
     gaps_for_band = (
         f"filter(sequence(0, {gaps[-1]}), g -> band < element_at({b_arr}, g + 1))"

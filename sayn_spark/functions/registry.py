@@ -3,10 +3,13 @@
 from __future__ import annotations
 
 import os
+import threading
 from dataclasses import dataclass
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from sayn_spark.sources.registry import read_parquet
 
 
 @dataclass
@@ -23,8 +26,12 @@ REGISTRY: dict[str, Query] = {}
 # intermediates — the terminal action happens in the caller.  Builders
 # persist via persist_tracked(); runners (bench, parity sweep, App)
 # call release_persisted() after the action so long-lived sessions
-# don't accumulate cached partitions across queries.
-_PERSISTED: list[DataFrame] = []
+# don't accumulate cached partitions across queries.  Each entry
+# records the thread that persisted it: App runs tasks on a thread
+# pool, and one task's release must not drop a frame a concurrent task
+# is still reading (Spark would silently recompute it).
+_PERSISTED: list[tuple[int, DataFrame]] = []
+_PERSISTED_LOCK = threading.Lock()
 
 
 def persist_tracked(df: DataFrame, level=None, eager: bool = False) -> DataFrame:
@@ -42,17 +49,27 @@ def persist_tracked(df: DataFrame, level=None, eager: bool = False) -> DataFrame
     from pyspark.storagelevel import StorageLevel
 
     df = df.persist(level or StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(df)
+    with _PERSISTED_LOCK:
+        _PERSISTED.append((threading.get_ident(), df))
     if eager:
         df.count()
     return df
 
 
-def release_persisted() -> int:
-    """Unpersist every tracked intermediate; returns the count released."""
+def release_persisted(all_threads: bool = False) -> int:
+    """Unpersist the tracked intermediates this thread persisted (every
+    thread's with ``all_threads=True``, for end-of-run cleanup); returns
+    the count released."""
+    me = threading.get_ident()
+
+    def owned(entry: tuple[int, DataFrame]) -> bool:
+        return all_threads or entry[0] == me
+
+    with _PERSISTED_LOCK:
+        mine = [df for _, df in filter(owned, _PERSISTED)]
+        _PERSISTED[:] = [e for e in _PERSISTED if not owned(e)]
     n = 0
-    while _PERSISTED:
-        df = _PERSISTED.pop()
+    for df in reversed(mine):
         try:
             df.unpersist()
             n += 1
@@ -85,11 +102,11 @@ def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql import functions as F
 
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        df = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))

@@ -125,10 +125,21 @@ _SQL_EMB = "emb AS (SELECT vec_id, label, list_transform(embedding, x -> x::DOUB
 _SQL_NORMED = "normed AS (SELECT vec_id, label, e, sqrt(list_dot_product(e, e)) AS nrm FROM emb)"
 
 
-def _as_local(df: DataFrame) -> DataFrame:
+# Row cap for _as_local: its frames are O(k x d) by construction, so a
+# frame past this is a misuse that would otherwise OOM the driver or
+# the SQL parser at corpus scale.
+_AS_LOCAL_MAX_ROWS = 10_000
+
+
+def _as_local(df: DataFrame, what: str | None = None) -> DataFrame:
     """Collect a PROVABLY TINY frame (centroids, codebooks, query heads
     — all O(k x d) regardless of corpus size) and rebuild it as a
     LocalRelation with the identical schema and values.
+
+    The collect fetches at most ``_AS_LOCAL_MAX_ROWS + 1`` rows; a
+    frame with more raises ValueError naming it (``what``, else its
+    schema), so a corpus-sized caller fails fast instead of OOMing the
+    driver.
 
     Why (r15, guide §5 / VERDICT r14 item 1): the IVF-PQ queries spent
     their wall on 24-37 SEQUENTIAL driver jobs — every F.broadcast of a
@@ -176,7 +187,13 @@ def _as_local(df: DataFrame) -> DataFrame:
             raise TypeError(f"_as_local: unsupported literal type {dt} for {v!r}")
         return f"CAST({v} AS {dt.simpleString()})"
 
-    rows = df.collect()
+    rows = df.limit(_AS_LOCAL_MAX_ROWS + 1).collect()
+    if len(rows) > _AS_LOCAL_MAX_ROWS:
+        raise ValueError(
+            f"_as_local({what or df.schema.simpleString()}): more than "
+            f"{_AS_LOCAL_MAX_ROWS} rows; it only inlines frames that stay "
+            "O(k x d) at any corpus size"
+        )
     if not rows:  # VALUES needs >= 1 tuple; an empty local frame is fine
         return spark.createDataFrame([], schema=df.schema)
     cols = ", ".join(f.name for f in df.schema.fields)
@@ -880,7 +897,9 @@ def q_ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic IVF-PQ index: probe a cell, ADC-scan its codes, re-rank.
     """
     n = persist_tracked(_normed(spark, sf_dir))
-    head = _as_local(n.where(F.col("vec_id") < 16).select("vec_id", "e", "nrm"))
+    head = _as_local(
+        n.where(F.col("vec_id") < 16).select("vec_id", "e", "nrm"), "query head"
+    )
     codes, lut = _pq_frames(n, head=head)
     adc = (
         codes.join(F.broadcast(lut), ["s", "c"])
@@ -977,8 +996,10 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cache instead of re-running the norm fold.
     """
     n = persist_tracked(_normed(spark, sf_dir))
-    head = _as_local(n.where(F.col("vec_id") < 16).select("vec_id", "e", "nrm"))
-    cent = _as_local(_centroid_arrays(n.select("label", "e")))
+    head = _as_local(
+        n.where(F.col("vec_id") < 16).select("vec_id", "e", "nrm"), "query head"
+    )
+    cent = _as_local(_centroid_arrays(n.select("label", "e")), "label centroids")
     d2 = F.round(
         F.expr(
             "aggregate(zip_with(e, ce, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
@@ -1343,8 +1364,10 @@ def q_ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     3.5s-wall query.
     """
     n = persist_tracked(_normed(spark, sf_dir))
-    head = _as_local(n.where(F.col("vec_id") < 16).select("vec_id", "e", "nrm"))
-    cent = _as_local(_centroid_arrays(n.select("label", "e")))
+    head = _as_local(
+        n.where(F.col("vec_id") < 16).select("vec_id", "e", "nrm"), "query head"
+    )
+    cent = _as_local(_centroid_arrays(n.select("label", "e")), "label centroids")
     d2 = F.round(
         F.expr(
             "aggregate(zip_with(e, ce, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
@@ -2838,11 +2861,11 @@ def q_ann_cascade_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = T(spark, sf_dir, "embeddings").select(
         "vec_id", F.expr("cast(embedding as array<double>)").alias("e")
     )
-    head = _as_local(emb.where(F.col("vec_id") < 10))
+    head = _as_local(emb.where(F.col("vec_id") < 10), "query head")
     # the SQ8 grid (and the binary words derived from it) is trained on
     # the CORPUS — collect it once and apply it to corpus and queries
     # alike; training it on the head would change every tier
-    rng = _as_local(sq8_range_row(emb))
+    rng = _as_local(sq8_range_row(emb), "sq8 range row")
     code_col = sq8_codes_col("e", 64)
 
     def words_of(frame: DataFrame) -> DataFrame:

@@ -10,6 +10,10 @@ a SparkSession + its catalog.  Conf choices are scale-first:
   cluster would set this to 2-3x total cores, and AQE coalesces down).
 - Arrow on: every pandas_udf / applyInPandas hop is Arrow-batched.
 - UTC session timezone: deterministic timestamp semantics vs the oracle.
+- A codegen class cache that holds a session's working set, so warm
+  queries compile once.  The conf is static: it cannot self-apply on a
+  session this module did not create, so the vanilla session the
+  ``__spark_entry__.py`` contract receives keeps Spark's default of 100.
 """
 
 from __future__ import annotations
@@ -47,6 +51,13 @@ _DEFAULTS = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
     "spark.sql.shuffle.partitions": "32",
+    # Spark's LRU of compiled codegen classes (static, JVM-global;
+    # default 100).  A warm pass over the near-dup lines cycles ~300
+    # distinct classes, so at 100 every class was evicted before reuse
+    # and each pass recompiled ~300 of them.  Sized from a measured
+    # count: one cold parity_sweep.py session (all registry queries,
+    # sf0.01) compiled 2657 classes with an unbounded cache; rounded up.
+    "spark.sql.codegen.cache.maxEntries": "3000",
     "spark.ui.showConsoleProgress": "false",
     "spark.ui.enabled": "false",
     "spark.driver.extraJavaOptions": "-Djava.net.preferIPv4Stack=true",

@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TESTDATA_TABLES = (
     "region",
@@ -26,6 +27,64 @@ TESTDATA_TABLES = (
     "documents",
     "embeddings",
 )
+
+# Parquet read confs that change the schema Spark infers from the same
+# bytes; each is part of the schema cache key below.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# real path -> (fingerprint, inferred schema); one entry per path, so a
+# rewritten file replaces its stale entry instead of accumulating.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _fingerprint(real: str) -> tuple | None:
+    """(relative name, st_ino, st_size, st_mtime_ns) of every file at or
+    under ``real``; None when the path is not a local file or directory
+    (object stores, ``file:`` URIs), which disables the cache for it."""
+    try:
+        if not os.path.isdir(real):
+            st = os.stat(real)
+            return (("", st.st_ino, st.st_size, st.st_mtime_ns),)
+        out = []
+        for root, _dirs, files in os.walk(real):
+            for f in files:
+                p = os.path.join(root, f)
+                st = os.stat(p)
+                out.append((os.path.relpath(p, real), st.st_ino, st.st_size, st.st_mtime_ns))
+        return tuple(sorted(out))
+    except OSError:
+        return None
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per
+    file version.
+
+    Schema inference is not free: Spark starts one job per read to merge
+    parquet footers (``parquet at NativeMethodAccessorImpl.java:0``).
+    A session that reads the same unchanged file on every query paid it
+    every time.  The inferred ``StructType`` is cached under the real
+    path, each file's inode, size and mtime, and the parquet confs that
+    change inference; repeat reads pass it to ``spark.read.schema()``
+    and start no job.  Rewriting, replacing or adding a file changes
+    the key, so the next read infers again."""
+    real = os.path.realpath(path)
+    stamp = _fingerprint(real)
+    if stamp is None:
+        return spark.read.parquet(path)
+    key = (stamp, tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS))
+    hit = _SCHEMAS.get(real)
+    if hit is None or hit[0] != key:
+        hit = _SCHEMAS[real] = (key, spark.read.parquet(path).schema)
+    # every read, the first included, goes through the explicit-schema
+    # path: its plans then match across passes and reuse their classes
+    return spark.read.schema(hit[1]).parquet(path)
 
 
 def load_tables(
@@ -45,7 +104,7 @@ def load_tables(
         path = os.path.join(sf_dir, f"{name}.parquet")
         if not os.path.exists(path):
             continue
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         if register:
             df.createOrReplaceTempView(name)
         out[name] = df

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sayn_spark.operators.copy import LOAD_TS_COL
+from sayn_spark.sources.registry import read_parquet
 
 
 def read_events_stream(
@@ -40,7 +41,7 @@ def read_events_stream(
         reader = reader.schema(schema)
     else:
         # streams need an explicit schema; borrow it from a batch read
-        reader = reader.schema(spark.read.parquet(path).schema)
+        reader = reader.schema(read_parquet(spark, path).schema)
     df = reader.load(path)
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":  # nanos-as-long testdata
