@@ -342,6 +342,64 @@ def drift_flag(pre: float, post: float, threshold: float = 0.25):
     return ratio, bool(abs(ratio - 1.0) > threshold)
 
 
+def _bench_payload(
+    samples: dict[str, list], pre: list, post: list, trials: int, sf_dir: str
+) -> tuple[dict, dict]:
+    """(full, compact) bench records from raw walls: ``samples`` maps
+    each line to its trials + 1 runs, ``pre``/``post`` are the
+    sentinel's runs before and after the sweep.  ``full`` is
+    BENCH_DETAIL.json; ``compact`` is the one stdout line."""
+
+    def warm(s: list) -> float:
+        return round(statistics.median(s[1:]), 3)
+
+    def cold(s: list) -> float:
+        return round(statistics.median(s[:trials]), 3)
+
+    def spread(s: list) -> float:
+        # warm min..max range: how trustworthy is this query's median on
+        # this box?  sub-1.5s queries historically swing +/-20-40%
+        return round(max(s[1:]) - min(s[1:]), 3)
+
+    queries = {n: warm(s) for n, s in samples.items()}
+    queries_cold = {n: cold(s) for n, s in samples.items()}
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    full = {
+        "metric": "headline_queries_total",
+        "value": round(sum(queries.values()), 3),
+        "unit": "sec",
+        "queries": queries,
+        "queries_spread": {n: spread(s) for n, s in samples.items()},
+        "queries_cold": queries_cold,
+        "value_cold": round(sum(queries_cold.values()), 3),
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "trials": trials,
+        "sentinel": warm(pre),
+        "sentinel_cold": cold(pre),
+        "sentinel_spread": spread(pre),
+        # pre/post twins (sentinel == sentinel_pre, kept for r13 artifact
+        # compatibility): post-vs-pre drift flags a contaminated sweep
+        "sentinel_pre": warm(pre),
+        "sentinel_pre_spread": spread(pre),
+        "sentinel_post": warm(post),
+        "sentinel_post_spread": spread(post),
+    }
+    # mid-sweep drift self-flag (VERDICT r14 item 9): post/pre ratio
+    # plus a boolean no close-out can silently ignore
+    full["sentinel_drift"], full["sentinel_contaminated"] = drift_flag(
+        warm(pre), warm(post)
+    )
+    # stdout carries exactly ONE compact JSON line: the driver keeps only a
+    # 2000-char tail of bench output, so the full per-line detail (cold
+    # medians, spreads, 3-decimal precision) goes to BENCH_DETAIL.json and
+    # stdout stays small enough to survive the capture intact.
+    compact = dict(full)
+    compact["queries"] = {k: round(v, 2) for k, v in queries.items()}
+    del compact["queries_spread"]
+    del compact["queries_cold"]
+    return full, compact
+
+
 def _sentinel(spark, sf_dir: str) -> None:
     """Code-free drift sentinel (VERDICT r12 item 2): a fixed trivial
     workload — a 48M-row range aggregate (JVM/codegen/scheduler cost)
@@ -455,14 +513,8 @@ def main() -> None:
             out.append(time.perf_counter() - t0)
         return out
 
-    s_samples = _sentinel_samples()
-    sentinel = round(statistics.median(s_samples[1:]), 3)
-    sentinel_cold = round(statistics.median(s_samples[:trials]), 3)
-    sentinel_spread = round(max(s_samples[1:]) - min(s_samples[1:]), 3)
-
-    warm: dict[str, float] = {}
-    cold: dict[str, float] = {}
-    spread: dict[str, float] = {}
+    pre = _sentinel_samples()
+    samples_by_name: dict[str, list] = {}
     for name in names:
         samples = []
         for _ in range(trials + 1):
@@ -477,52 +529,12 @@ def main() -> None:
             # every run (and every later query) starts uncached
             release_persisted()
             spark.catalog.clearCache()
-        cold[name] = round(statistics.median(samples[:trials]), 3)
-        w = samples[1:]
-        warm[name] = round(statistics.median(w), 3)
-        # warm min..max range: how trustworthy is this query's median on
-        # this box?  sub-1.5s queries historically swing +/-20-40%
-        spread[name] = round(max(w) - min(w), 3)
+        samples_by_name[name] = samples
 
     # post-sweep sentinel: same shape, run after the last query family
-    p_samples = _sentinel_samples()
-    sentinel_post = round(statistics.median(p_samples[1:]), 3)
-    sentinel_post_spread = round(max(p_samples[1:]) - min(p_samples[1:]), 3)
-
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    full = {
-        "metric": "headline_queries_total",
-        "value": round(sum(warm.values()), 3),
-        "unit": "sec",
-        "queries": warm,
-        "queries_spread": spread,
-        "queries_cold": cold,
-        "value_cold": round(sum(cold.values()), 3),
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "trials": trials,
-        "sentinel": sentinel,
-        "sentinel_cold": sentinel_cold,
-        "sentinel_spread": sentinel_spread,
-        # pre/post twins (sentinel == sentinel_pre, kept for r13 artifact
-        # compatibility): post-vs-pre drift flags a contaminated sweep
-        "sentinel_pre": sentinel,
-        "sentinel_pre_spread": sentinel_spread,
-        "sentinel_post": sentinel_post,
-        "sentinel_post_spread": sentinel_post_spread,
-    }
-    # mid-sweep drift self-flag (VERDICT r14 item 9): post/pre ratio
-    # plus a boolean no close-out can silently ignore
-    ratio, contaminated = drift_flag(sentinel, sentinel_post)
-    full["sentinel_drift"] = ratio
-    full["sentinel_contaminated"] = contaminated
-    # stdout carries exactly ONE compact JSON line: the driver keeps only a
-    # 2000-char tail of bench output, so the full per-line detail (cold
-    # medians, spreads, 3-decimal precision) goes to BENCH_DETAIL.json and
-    # stdout stays small enough to survive the capture intact.
-    compact = dict(full)
-    compact["queries"] = {k: round(v, 2) for k, v in warm.items()}
-    del compact["queries_spread"]
-    del compact["queries_cold"]
+    full, compact = _bench_payload(
+        samples_by_name, pre, _sentinel_samples(), trials, sf_dir
+    )
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"), "w") as f:
         json.dump(full, f, indent=1)
     print(json.dumps(compact, separators=(",", ":")))

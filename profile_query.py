@@ -67,10 +67,6 @@ def main() -> None:
         rows.sort(key=lambda s: -s.get("executorRunTime", 0))
         total_run = sum(s.get("executorRunTime", 0) for s in rows)
         total_gc = sum(s.get("jvmGcTime", 0) for s in rows)
-        total_py = sum(
-            (s.get("peakExecutorMetrics") or {}).get("x", 0) for s in rows
-        )
-        del total_py
         print(f"\n=== {name}: wall {wall:.2f}s, {len(jobs)} jobs, "
               f"{len(rows)} stages, executor-time sum {total_run/1000:.1f}s, "
               f"gc {total_gc/1000:.1f}s ===")

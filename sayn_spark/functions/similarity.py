@@ -517,32 +517,108 @@ def _assign_cells(emb: DataFrame, cent: DataFrame, nprobe: int = 1) -> DataFrame
     return out
 
 
-def ann_index_search(
-    spark: SparkSession,
-    index: str,
-    queries: DataFrame,
-    k: int = 3,
-    nprobe: int = 1,
-) -> DataFrame:
-    """Top-k cosine search against a catalog ANN index built by the
-    ``ann_index`` task (operators/ann.py): ``{index}_centroids``
-    (broadcast) route each query to its ``nprobe`` nearest cells, and
-    the exact cosine runs only against ``{index}_vectors`` rows in
-    those cells — the bucketed inverted file never reshuffles, only
-    query rows move.
+# --- The catalog ANN index (built by operators/ann.py) -----------------
 
-    ``queries``: (query_id, e: array<double>).  Returns
-    (query_id, neighbor_id, cos, rk<=k) with the engine's determinism
-    contract (rounded cosine, unique neighbor_id tie-break).
-    """
-    cent = spark.table(f"{index}_centroids")
+# The index format, declared once: every method stores
+# ``{index}_centroids`` and ``{index}_vectors`` (vec_id, cell, e, nrm);
+# these are the side tables each method adds.  The build, the
+# incremental/stream heal and the search dispatch all derive from here.
+_ANN_LAYOUT = {
+    "ivf": (),
+    "ivfpq": ("_codebook", "_codes"),
+    "ivfsq8": ("_sq8grid", "_sq8codes"),
+    "ivfbin": ("_sq8grid", "_binwords"),
+    "cascade": ("_sq8grid", "_sq8codes", "_binwords"),
+}
+
+
+def _stored_method(db, index: str) -> str:
+    """The method ``index`` was built with, read from the catalog: the
+    widest layout whose side tables all exist.  A full build drops the
+    side tables its method does not own, so at most one layout besides
+    ``ivf`` is complete."""
+    seen: dict[str, bool] = {}
+
+    def has(suffix: str) -> bool:
+        if suffix not in seen:
+            seen[suffix] = db.table_exists(f"{index}{suffix}")
+        return seen[suffix]
+
+    widest_first = sorted(_ANN_LAYOUT, key=lambda m: -len(_ANN_LAYOUT[m]))
+    return next(m for m in widest_first if all(has(s) for s in _ANN_LAYOUT[m]))
+
+
+def _stored_encoding(spark: SparkSession, index: str) -> str:
+    """The encoding the existing ``{index}_codebook`` was built with
+    ("vector" for pre-residual indexes that have no enc column)."""
+    cb = spark.table(f"{index}_codebook")
+    if "enc" not in cb.columns:
+        return "vector"
+    row = cb.select("enc").first()
+    return row["enc"] if row is not None else "vector"
+
+
+def _pq_subvectors():
+    """(s, sub) generator over ``e``: the 8 contiguous 8-dim sub-vectors
+    the PQ codebook quantizes, one row each."""
+    return F.posexplode(
+        F.expr("transform(sequence(0, 7), s -> slice(e, s * 8 + 1, 8))")
+    ).alias("s", "sub")
+
+
+def _probe(
+    spark: SparkSession, index: str, queries: DataFrame, nprobe: int
+) -> tuple[DataFrame, DataFrame]:
+    """Shared search front: ``queries`` (query_id, e) as the (vec_id,
+    e: array<double>) frame ``q``, and ``probes`` (query_id, cell) —
+    each query's ``nprobe`` nearest cells of ``{index}_centroids``
+    (broadcast)."""
     q = queries.select(
         F.col("query_id").alias("vec_id"),
         F.expr("cast(e as array<double>)").alias("e"),
     )
-    probes = _assign_cells(q, cent, nprobe=nprobe).select(
+    probes = _assign_cells(q, spark.table(f"{index}_centroids"), nprobe=nprobe).select(
         F.col("vec_id").alias("query_id"), "cell"
     )
+    return q, probes
+
+
+def _shortlist(scored: DataFrame, dist: str, n: int, rk: str = "rk") -> DataFrame:
+    """(query_id, neighbor_id): each query's ``n`` nearest candidates by
+    ``dist``, ties broken on neighbor_id."""
+    w = Window.partitionBy("query_id").orderBy(dist, "neighbor_id")
+    return (
+        scored.withColumn(rk, F.row_number().over(w))
+        .where(F.col(rk) <= n)
+        .select("query_id", "neighbor_id")
+    )
+
+
+def _cell_scan(codes: DataFrame, qframe: DataFrame, dist_sql: str, dist: str) -> DataFrame:
+    """(query_id, neighbor_id, dist): score the probed cells' code rows
+    in place against the broadcast per-(query, cell) frame ``qframe``."""
+    return (
+        codes.join(F.broadcast(qframe), "cell")
+        .where(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", F.expr(dist_sql).alias(dist))
+    )
+
+
+def _exact_topk(
+    spark: SparkSession,
+    index: str,
+    q: DataFrame,
+    cand: DataFrame,
+    k: int,
+    on: str = "neighbor_id",
+) -> DataFrame:
+    """Shared search tail: exact cosine of each candidate against
+    ``{index}_vectors``, then the top-``k`` window — (query_id,
+    neighbor_id, cos, rk<=k) with the engine's determinism contract
+    (rounded cosine, unique neighbor_id tie-break).  ``cand`` is a
+    tier's (query_id, neighbor_id) shortlist, or — ``on="cell"``, the
+    exact path — the (query_id, cell) probes themselves, whose cells
+    hold the query's own row."""
     # zero-norm guard, hoisted to the per-QUERY side (r14): a zero-norm
     # query has undefined cosine against everything, so it honestly
     # returns no neighbors — filtered ONCE here, on the tiny query
@@ -567,19 +643,36 @@ def ann_index_search(
         / (F.col("qnrm") * F.col("nrm")),
         6,
     )
-    scored = (
-        probes.join(qn, "query_id")
-        .join(vec, "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-    )
+    pairs = cand.join(qn, "query_id").join(vec, on)
+    if on == "cell":
+        pairs = pairs.where(F.col("neighbor_id") != F.col("query_id"))
+    scored = pairs.select("query_id", "neighbor_id", cos.alias("cos"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
+    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+
+
+def ann_index_search(
+    spark: SparkSession,
+    index: str,
+    queries: DataFrame,
+    k: int = 3,
+    nprobe: int = 1,
+) -> DataFrame:
+    """Top-k cosine search against a catalog ANN index built by the
+    ``ann_index`` task (operators/ann.py): ``{index}_centroids``
+    (broadcast) route each query to its ``nprobe`` nearest cells, and
+    the exact cosine runs only against ``{index}_vectors`` rows in
+    those cells — the bucketed inverted file never reshuffles, only
+    query rows move.
+
+    ``queries``: (query_id, e: array<double>).  Returns
+    (query_id, neighbor_id, cos, rk<=k) with the engine's determinism
+    contract (rounded cosine, unique neighbor_id tie-break).
+    """
+    q, probes = _probe(spark, index, queries, nprobe)
     # no distinct needed: every vector lives in exactly one cell, so a
     # neighbor appears at most once per query even with nprobe > 1
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-    )
+    return _exact_topk(spark, index, q, probes, k, on="cell")
 
 
 def ann_index_search_pq(
@@ -600,24 +693,18 @@ def ann_index_search_pq(
     tables.  Only 8-small-int code rows move in the wide stage; exact
     vectors are fetched for shortlist rows alone.
     """
-    cent = spark.table(f"{index}_centroids")
-    q = queries.select(
-        F.col("query_id").alias("vec_id"),
-        F.expr("cast(e as array<double>)").alias("e"),
-    )
-    probes = _assign_cells(q, cent, nprobe=nprobe).select(
-        F.col("vec_id").alias("query_id"), F.col("cell").alias("qcell")
-    )
-    cb = spark.table(f"{index}_codebook")
+    q, probes = _probe(spark, index, queries, nprobe)
+    probes = probes.select("query_id", F.col("cell").alias("qcell"))
     # residual-encoded index (enc column on the codebook): the LUT is
     # per (query, probe cell) — distances compare the query's
     # WITHIN-CELL residual against the residual codewords.  Exact for
     # the scanned cell: ||q - (c + r)||^2 = ||(q - c) - r||^2.
-    enc_row = cb.select("enc").first() if "enc" in cb.columns else None
-    residual = enc_row is not None and enc_row["enc"] == "residual"
-    cb = cb.drop("enc")
+    residual = _stored_encoding(spark, index) == "residual"
+    cb = spark.table(f"{index}_codebook").drop("enc")
     if residual:
-        cent_arr = cent.select(F.col("c_label").cast("bigint").alias("qcell"), "ce")
+        cent_arr = spark.table(f"{index}_centroids").select(
+            F.col("c_label").cast("bigint").alias("qcell"), "ce"
+        )
         qres = (
             probes.join(q.select(F.col("vec_id").alias("query_id"), "e"), "query_id")
             .join(F.broadcast(cent_arr), "qcell")
@@ -627,20 +714,9 @@ def ann_index_search_pq(
                 F.expr("zip_with(e, ce, (x, y) -> x - y)").alias("e"),
             )
         )
-        qsubs = qres.select(
-            "query_id",
-            "qcell",
-            F.posexplode(
-                F.expr("transform(sequence(0, 7), s -> slice(e, s * 8 + 1, 8))")
-            ).alias("s", "sub"),
-        )
+        qsubs = qres.select("query_id", "qcell", _pq_subvectors())
     else:
-        qsubs = q.select(
-            F.col("vec_id").alias("query_id"),
-            F.posexplode(
-                F.expr("transform(sequence(0, 7), s -> slice(e, s * 8 + 1, 8))")
-            ).alias("s", "sub"),
-        )
+        qsubs = q.select(F.col("vec_id").alias("query_id"), _pq_subvectors())
     sub_d2 = F.round(
         F.expr(
             "aggregate(zip_with(sub, cw, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
@@ -667,45 +743,7 @@ def ann_index_search_pq(
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("ld2").alias("ad2"))
     )
-    w_adc = Window.partitionBy("query_id").orderBy("ad2", "neighbor_id")
-    cand = (
-        adc.withColumn("rk", F.row_number().over(w_adc))
-        .where(F.col("rk") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    vec = spark.table(f"{index}_vectors")
-    # zero-norm guard, hoisted to the per-QUERY side (r14): a zero-norm
-    # query has undefined cosine against everything, so it honestly
-    # returns no neighbors — filtered ONCE here, on the tiny query
-    # frame, instead of try_divide + NULL-filter on every candidate row.
-    # Index-side zero norms cannot occur: ``{index}_vectors`` enforces
-    # nrm > 0 at build and ingest (operators/ann.py, streaming
-    # ann ingest), so the per-candidate division below is plain.
-    qn = q.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.sqrt(F.expr("aggregate(e, 0D, (acc, x) -> acc + x * x)")).alias("qnrm"),
-    ).where(F.col("qnrm") > 0)
-    cn = vec.select(F.col("vec_id").alias("neighbor_id"), "e", "nrm")
-    # plain division is ANSI-safe here: qnrm > 0 was filtered above and
-    # nrm > 0 is the ``{index}_vectors`` invariant (enforced at build
-    # and ingest since r14 — one empty doc used to DIVIDE_BY_ZERO-kill
-    # every search probing its cell, review r13)
-    cos = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-        / (F.col("qnrm") * F.col("nrm")),
-        6,
-    )
-    scored = (
-        cand.join(qn, "query_id")
-        .join(cn, "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-    )
-    w_out = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w_out))
-        .where(F.col("rk") <= k)
-    )
+    return _exact_topk(spark, index, q, _shortlist(adc, "ad2", shortlist), k)
 
 
 @register(
@@ -807,12 +845,7 @@ def _pq_frames(n: DataFrame, head: DataFrame | None = None) -> tuple[DataFrame, 
     re-scanning (and racing the cache of) the corpus frame.  The rows
     are by construction the same, so codes/lut values are unchanged."""
     def subs_of(frame: DataFrame) -> DataFrame:
-        return frame.select(
-            "vec_id",
-            F.posexplode(
-                F.expr("transform(sequence(0, 7), s -> slice(e, s * 8 + 1, 8))")
-            ).alias("s", "sub"),
-        )
+        return frame.select("vec_id", _pq_subvectors())
 
     subs = subs_of(n)
     hsubs = subs_of(head) if head is not None else subs
@@ -1500,6 +1533,16 @@ def sq8_codes_col(e: str = "e", dims: int | None = None):
     )
 
 
+def _sq8_encode(frame: DataFrame, grid: DataFrame, out: str = "c", keep=None) -> DataFrame:
+    """``keep`` (default: every column but ``e``) plus ``out``, the SQ8
+    codes of ``frame.e`` on the 1-row (lo_a, hi_a) ``grid`` (broadcast)
+    — the one encoder behind the SQ8 tables, their heal and the query
+    side of every SQ8 and binary search."""
+    if keep is None:
+        keep = [c for c in frame.columns if c != "e"]
+    return frame.crossJoin(F.broadcast(grid)).select(*keep, sq8_codes_col().alias(out))
+
+
 _SQ8_D2 = (
     "cast(aggregate(zip_with(qc, cc, (a, b) -> (a - b) * (a - b)), "
     "cast(0 as bigint), (acc, v) -> acc + v) as bigint)"
@@ -1598,67 +1641,15 @@ def ann_index_search_sq8(
     cell, so the wide scan reads nprobe/n_cells of a quarter-sized
     table in place; only query rows and the shortlist move.
     """
-    cent = spark.table(f"{index}_centroids")
-    q = queries.select(
-        F.col("query_id").alias("vec_id"),
-        F.expr("cast(e as array<double>)").alias("e"),
-    )
-    probes = _assign_cells(q, cent, nprobe=nprobe).select(
-        F.col("vec_id").alias("query_id"), "cell"
-    )
-    grid = spark.table(f"{index}_sq8grid")
-    qcodes = (
-        q.crossJoin(F.broadcast(grid))
-        .select(F.col("vec_id").alias("query_id"), sq8_codes_col().alias("qc"))
-        .join(probes, "query_id")
-    )
+    q, probes = _probe(spark, index, queries, nprobe)
+    qcodes = _sq8_encode(
+        q, spark.table(f"{index}_sq8grid"), "qc", [F.col("vec_id").alias("query_id")]
+    ).join(probes, "query_id")
     codes = spark.table(f"{index}_sq8codes").select(
         F.col("vec_id").alias("neighbor_id"), "cell", F.col("c").alias("cc")
     )
-    scored = (
-        codes.join(F.broadcast(qcodes), "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", F.expr(_SQ8_D2).alias("d2"))
-    )
-    w_d2 = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    cand = (
-        scored.withColumn("rk", F.row_number().over(w_d2))
-        .where(F.col("rk") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    vec = spark.table(f"{index}_vectors")
-    # zero-norm guard, hoisted to the per-QUERY side (r14): a zero-norm
-    # query has undefined cosine against everything, so it honestly
-    # returns no neighbors — filtered ONCE here, on the tiny query
-    # frame, instead of try_divide + NULL-filter on every candidate row.
-    # Index-side zero norms cannot occur: ``{index}_vectors`` enforces
-    # nrm > 0 at build and ingest (operators/ann.py, streaming
-    # ann ingest), so the per-candidate division below is plain.
-    qn = q.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.sqrt(F.expr("aggregate(e, 0D, (acc, x) -> acc + x * x)")).alias("qnrm"),
-    ).where(F.col("qnrm") > 0)
-    cn = vec.select(F.col("vec_id").alias("neighbor_id"), "e", "nrm")
-    # plain division is ANSI-safe here: qnrm > 0 was filtered above and
-    # nrm > 0 is the ``{index}_vectors`` invariant (enforced at build
-    # and ingest since r14 — one empty doc used to DIVIDE_BY_ZERO-kill
-    # every search probing its cell, review r13)
-    cos = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-        / (F.col("qnrm") * F.col("nrm")),
-        6,
-    )
-    scored_exact = (
-        cand.join(qn, "query_id")
-        .join(cn, "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-    )
-    w_out = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored_exact.withColumn("rk", F.row_number().over(w_out))
-        .where(F.col("rk") <= k)
-    )
+    scored = _cell_scan(codes, qcodes, _SQ8_D2, "d2")
+    return _exact_topk(spark, index, q, _shortlist(scored, "d2", shortlist), k)
 
 
 # --- Binary (1-bit) quantization + packed Hamming search ---------------
@@ -1685,6 +1676,20 @@ def _bq_pack_sql(code_col: str, lo: int, hi: int) -> str:
     )
 
 
+def _bq_words(codes: DataFrame, code: str = "c", prefix: str = "w") -> DataFrame:
+    """Every column of ``codes`` but ``code``, plus ``{prefix}1`` and
+    ``{prefix}2``: the SQ8 code array packed into two BIGINT words of
+    sign bits (code >= 128) — the one binary encoder."""
+    keep = [c for c in codes.columns if c != code]
+    return codes.select(
+        *keep,
+        *[
+            F.expr(_bq_pack_expr(code, lo, hi)).alias(f"{prefix}{i + 1}")
+            for i, (lo, hi) in enumerate(_BQ_WORDS)
+        ],
+    )
+
+
 def binary_codes_frame(emb: DataFrame, rng: DataFrame | None = None) -> DataFrame:
     """(vec_id, w1, w2): 64 sign bits against the SQ8 grid midpoint,
     packed into two BIGINT words — 16 bytes per vector, a 16x
@@ -1697,16 +1702,7 @@ def binary_codes_frame(emb: DataFrame, rng: DataFrame | None = None) -> DataFram
     the corpus grid must pass it, or the slice would train its own."""
     if rng is None:
         rng = sq8_range_row(emb)
-    codes = emb.crossJoin(F.broadcast(rng)).select(
-        "vec_id", sq8_codes_col().alias("c")
-    )
-    return codes.select(
-        "vec_id",
-        *[
-            F.expr(_bq_pack_expr("c", lo, hi)).alias(f"w{i + 1}")
-            for i, (lo, hi) in enumerate(_BQ_WORDS)
-        ],
-    )
+    return _bq_words(_sq8_encode(emb, rng, keep=["vec_id"]))
 
 
 _BQ_HAM = (
@@ -1967,72 +1963,16 @@ def ann_index_search_binary(
     per-pair work is two XOR+popcounts — the cheapest scan of the
     index family (the coarse tier under SQ8 when even 1 byte/dim is
     too much memory)."""
-    cent = spark.table(f"{index}_centroids")
-    q = queries.select(
-        F.col("query_id").alias("vec_id"),
-        F.expr("cast(e as array<double>)").alias("e"),
+    q, probes = _probe(spark, index, queries, nprobe)
+    qcodes = _sq8_encode(
+        q, spark.table(f"{index}_sq8grid"), keep=[F.col("vec_id").alias("query_id")]
     )
-    probes = _assign_cells(q, cent, nprobe=nprobe).select(
-        F.col("vec_id").alias("query_id"), "cell"
-    )
-    grid = spark.table(f"{index}_sq8grid")
-    qwords = (
-        q.crossJoin(F.broadcast(grid))
-        .select(F.col("vec_id").alias("query_id"), sq8_codes_col().alias("c"))
-        .select(
-            "query_id",
-            F.expr(_bq_pack_expr("c", *_BQ_WORDS[0])).alias("qw1"),
-            F.expr(_bq_pack_expr("c", *_BQ_WORDS[1])).alias("qw2"),
-        )
-        .join(probes, "query_id")
-    )
+    qwords = _bq_words(qcodes, prefix="qw").join(probes, "query_id")
     words = spark.table(f"{index}_binwords").select(
         F.col("vec_id").alias("neighbor_id"), "cell", "w1", "w2"
     )
-    scored = (
-        words.join(F.broadcast(qwords), "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", F.expr(_BQ_HAM).alias("ham"))
-    )
-    w_h = Window.partitionBy("query_id").orderBy("ham", "neighbor_id")
-    cand = (
-        scored.withColumn("rk", F.row_number().over(w_h))
-        .where(F.col("rk") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    vec = spark.table(f"{index}_vectors")
-    # zero-norm guard, hoisted to the per-QUERY side (r14): a zero-norm
-    # query has undefined cosine against everything, so it honestly
-    # returns no neighbors — filtered ONCE here, on the tiny query
-    # frame, instead of try_divide + NULL-filter on every candidate row.
-    # Index-side zero norms cannot occur: ``{index}_vectors`` enforces
-    # nrm > 0 at build and ingest (operators/ann.py, streaming
-    # ann ingest), so the per-candidate division below is plain.
-    qn = q.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.sqrt(F.expr("aggregate(e, 0D, (acc, x) -> acc + x * x)")).alias("qnrm"),
-    ).where(F.col("qnrm") > 0)
-    cn = vec.select(F.col("vec_id").alias("neighbor_id"), "e", "nrm")
-    # plain division is ANSI-safe here: qnrm > 0 was filtered above and
-    # nrm > 0 is the ``{index}_vectors`` invariant (enforced at build
-    # and ingest since r14 — one empty doc used to DIVIDE_BY_ZERO-kill
-    # every search probing its cell, review r13)
-    cos = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-        / (F.col("qnrm") * F.col("nrm")),
-        6,
-    )
-    scored_exact = (
-        cand.join(qn, "query_id")
-        .join(cn, "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-    )
-    w_out = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored_exact.withColumn("rk", F.row_number().over(w_out))
-        .where(F.col("rk") <= k)
-    )
+    scored = _cell_scan(words, qwords, _BQ_HAM, "ham")
+    return _exact_topk(spark, index, q, _shortlist(scored, "ham", shortlist), k)
 
 
 @register(
@@ -2183,88 +2123,34 @@ def ann_index_search_cascade(
     integers, so the only FP surface is the final rounded cosine —
     identical determinism contract to the registered query.
     """
-    cent = spark.table(f"{index}_centroids")
-    q = queries.select(
-        F.col("query_id").alias("vec_id"),
-        F.expr("cast(e as array<double>)").alias("e"),
-    )
-    probes = _assign_cells(q, cent, nprobe=nprobe).select(
-        F.col("vec_id").alias("query_id"), "cell"
-    )
-    grid = spark.table(f"{index}_sq8grid")
+    q, probes = _probe(spark, index, queries, nprobe)
     # NOT persisted: the query frame is batch-sized and this function
     # runs inside stream_ann_search's foreachBatch, where a tracked
     # persist per trigger would accumulate for the stream's lifetime
     # (release_persisted only runs at task/app boundaries); recomputing
     # the row-local quantization for the tier-2 join is cheaper
-    qcodes = q.crossJoin(F.broadcast(grid)).select(
-        F.col("vec_id").alias("query_id"), sq8_codes_col().alias("qc")
+    qcodes = _sq8_encode(
+        q, spark.table(f"{index}_sq8grid"), "qc", [F.col("vec_id").alias("query_id")]
     )
-    qwords = (
-        qcodes.select(
-            "query_id",
-            F.expr(_bq_pack_expr("qc", *_BQ_WORDS[0])).alias("qw1"),
-            F.expr(_bq_pack_expr("qc", *_BQ_WORDS[1])).alias("qw2"),
-        )
-        .join(probes, "query_id")
-    )
+    qwords = _bq_words(qcodes, code="qc", prefix="qw").join(probes, "query_id")
     words = spark.table(f"{index}_binwords").select(
         F.col("vec_id").alias("neighbor_id"), "cell", "w1", "w2"
     )
-    w_h = Window.partitionBy("query_id").orderBy("ham", "neighbor_id")
-    t1 = (
-        words.join(F.broadcast(qwords), "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", F.expr(_BQ_HAM).alias("ham"))
-        .withColumn("rk1", F.row_number().over(w_h))
-        .where(F.col("rk1") <= shortlist_binary)
-        .select("query_id", "neighbor_id")
+    t1 = _shortlist(
+        _cell_scan(words, qwords, _BQ_HAM, "ham"),
+        "ham",
+        shortlist_binary,
+        rk="rk1",
     )
     codes = spark.table(f"{index}_sq8codes").select(
         F.col("vec_id").alias("neighbor_id"), F.col("c").alias("cc")
     )
-    w_d = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
     t2 = (
         t1.join(qcodes, "query_id")
         .join(codes, "neighbor_id")
         .select("query_id", "neighbor_id", F.expr(_SQ8_D2).alias("d2"))
-        .withColumn("rk2", F.row_number().over(w_d))
-        .where(F.col("rk2") <= shortlist)
-        .select("query_id", "neighbor_id")
     )
-    vec = spark.table(f"{index}_vectors")
-    # zero-norm guard, hoisted to the per-QUERY side (r14): a zero-norm
-    # query has undefined cosine against everything, so it honestly
-    # returns no neighbors — filtered ONCE here, on the tiny query
-    # frame, instead of try_divide + NULL-filter on every candidate row.
-    # Index-side zero norms cannot occur: ``{index}_vectors`` enforces
-    # nrm > 0 at build and ingest (operators/ann.py, streaming
-    # ann ingest), so the per-candidate division below is plain.
-    qn = q.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.sqrt(F.expr("aggregate(e, 0D, (acc, x) -> acc + x * x)")).alias("qnrm"),
-    ).where(F.col("qnrm") > 0)
-    cn = vec.select(F.col("vec_id").alias("neighbor_id"), "e", "nrm")
-    # plain division is ANSI-safe here: qnrm > 0 was filtered above and
-    # nrm > 0 is the ``{index}_vectors`` invariant (enforced at build
-    # and ingest since r14 — one empty doc used to DIVIDE_BY_ZERO-kill
-    # every search probing its cell, review r13)
-    cos = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-        / (F.col("qnrm") * F.col("nrm")),
-        6,
-    )
-    scored_exact = (
-        t2.join(qn, "query_id")
-        .join(cn, "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-    )
-    w_out = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored_exact.withColumn("rk", F.row_number().over(w_out))
-        .where(F.col("rk") <= k)
-    )
+    return _exact_topk(spark, index, q, _shortlist(t2, "d2", shortlist, rk="rk2"), k)
 
 
 def ann_catalog_search(
@@ -2278,18 +2164,19 @@ def ann_catalog_search(
     shortlist_binary: int = 50,
 ) -> DataFrame:
     """Catalog-dispatched search over an ``ann_index``-built index —
-    the path comes from which code tables EXIST, not from caller
-    config (shared by the ann_search task and stream_ann_search):
-    ``{index}_binwords`` + ``{index}_sq8codes`` together -> the
-    three-tier cascade (Hamming shortlist_binary -> SQ8 shortlist ->
-    exact k), ``{index}_binwords`` alone -> packed Hamming,
-    ``{index}_sq8codes`` alone -> symmetric SQ8, ``{index}_codes`` ->
-    ADC (vector/residual via the codebook's enc column), else the
-    exact in-cell scan.  ``queries`` is a (query_id, e: array<double>)
+    the path comes from the method the index was built with, read from
+    the catalog by ``_stored_method`` against the one layout table
+    ``_ANN_LAYOUT``, not from caller config (shared by the ann_search
+    task and stream_ann_search): cascade -> the three-tier cascade
+    (Hamming shortlist_binary -> SQ8 shortlist -> exact k), ivfbin ->
+    packed Hamming, ivfsq8 -> symmetric SQ8, ivfpq -> ADC
+    (vector/residual via the codebook's enc column), ivf -> the exact
+    in-cell scan.  ``queries`` is a (query_id, e: array<double>)
     frame."""
-    has_bin = db.table_exists(f"{index}_binwords")
-    has_sq8 = db.table_exists(f"{index}_sq8codes")
-    if has_bin and has_sq8:
+    method = _stored_method(db, index)
+    if method == "ivf":
+        return ann_index_search(spark, index, queries, k=k, nprobe=nprobe)
+    if method == "cascade":
         return ann_index_search_cascade(
             spark,
             index,
@@ -2299,19 +2186,12 @@ def ann_catalog_search(
             shortlist=shortlist,
             shortlist_binary=shortlist_binary,
         )
-    if has_bin:
-        return ann_index_search_binary(
-            spark, index, queries, k=k, nprobe=nprobe, shortlist=shortlist
-        )
-    if has_sq8:
-        return ann_index_search_sq8(
-            spark, index, queries, k=k, nprobe=nprobe, shortlist=shortlist
-        )
-    if db.table_exists(f"{index}_codes"):
-        return ann_index_search_pq(
-            spark, index, queries, k=k, nprobe=nprobe, shortlist=shortlist
-        )
-    return ann_index_search(spark, index, queries, k=k, nprobe=nprobe)
+    search = {
+        "ivfpq": ann_index_search_pq,
+        "ivfsq8": ann_index_search_sq8,
+        "ivfbin": ann_index_search_binary,
+    }[method]
+    return search(spark, index, queries, k=k, nprobe=nprobe, shortlist=shortlist)
 
 
 # --- Embedding outlier report (mislabel / noise detection) -------------

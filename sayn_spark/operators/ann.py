@@ -24,7 +24,11 @@ demonstrate as queries, promoted to a catalog-managed artifact the way
                                   # the FAISS IVFPQ default — sharper
                                   # ADC on clustered corpora)
 
-Builds two catalog tables:
+Every method builds two catalog tables, plus the quantizer and code
+side tables the one layout table names (functions/similarity.py:
+``_ANN_LAYOUT``; e.g. ivfpq adds ``{index}_codebook`` and
+``{index}_codes``).  A full build owns exactly its method's side
+tables and drops any other method's:
 
 - ``{index}_centroids`` (c_label, ce: array<double>) — the coarse
   quantizer, small enough to broadcast at any scale.
@@ -34,7 +38,7 @@ Builds two catalog tables:
   query reads nprobe/k of the corpus.
 
 Search is a library call over the tables
-(functions/similarity.py:ann_index_search), so any task or ad-hoc
+(functions/similarity.py:ann_catalog_search), so any task or ad-hoc
 session can query an index built by a previous run — the index
 persists; rebuilds are full (replace_table semantics, like autosql
 ``table``).
@@ -50,6 +54,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from sayn_spark.functions.similarity import (
+    _ANN_LAYOUT,
+    _assign_cells,
+    _bq_words,
+    _centroid_arrays,
+    _pq_subvectors,
+    _sq8_encode,
+    _stored_encoding,
+    _stored_method,
+    sq8_range_row,
+)
 from sayn_spark.operators.base import Task, TaskStatus
 
 # MUST match spark.sql.shuffle.partitions (32 in session.py): Spark
@@ -57,6 +72,7 @@ from sayn_spark.operators.base import Task, TaskStatus
 # when the bucket count equals the expected partition count — with a
 # mismatch both sides re-shuffle and the bucketing buys nothing.
 _VEC_BUCKETS = 32
+_BY_CELL = (_VEC_BUCKETS, ["cell"])  # every per-vector table's bucket spec
 
 
 class AnnIndexTask(Task):
@@ -72,10 +88,9 @@ class AnnIndexTask(Task):
         self.vector_column = c.get("vector_column", "embedding")
         self.label_column = c.get("label_column")
         self.method = c.get("method", "ivf")
-        if self.method not in ("ivf", "ivfpq", "ivfsq8", "ivfbin", "cascade"):
+        if self.method not in _ANN_LAYOUT:
             raise ValueError(
-                f"ann_index task {self.name!r}: method must be "
-                "ivf|ivfpq|ivfsq8|ivfbin|cascade"
+                f"ann_index task {self.name!r}: method must be " + "|".join(_ANN_LAYOUT)
             )
         self.n_cells = int(c.get("n_cells", 16))
         if self.n_cells < 1:
@@ -132,15 +147,6 @@ class AnnIndexTask(Task):
         self.src_obj = self.context.obj_compiler.from_string(self.source)
         self.sources.add(self.src_obj)
         self.src_value = self.context.obj_compiler.src_value(self.src_obj)
-        suffixes = ("_centroids", "_vectors")
-        if self.method == "ivfpq":
-            suffixes += ("_codebook", "_codes")
-        elif self.method == "ivfsq8":
-            suffixes += ("_sq8grid", "_sq8codes")
-        elif self.method == "ivfbin":
-            suffixes += ("_sq8grid", "_binwords")
-        elif self.method == "cascade":
-            suffixes += ("_sq8grid", "_sq8codes", "_binwords")
         # the PHYSICAL base name all side tables derive from: routed
         # through the dev/prod stringify like every other destination —
         # writing the raw name would make a dev run (table_prefix: dev)
@@ -158,7 +164,7 @@ class AnnIndexTask(Task):
         # outputs that are never written (advice r12).  The base object
         # above carries the DAG edge and the --upstream-prod redirect,
         # both invariant to stringify rules.
-        for suffix in suffixes:
+        for suffix in ("_centroids", "_vectors", *_ANN_LAYOUT[self.method]):
             self.outputs.add(
                 self.context.obj_compiler.from_string(f"{self.index}{suffix}")
             )
@@ -215,12 +221,18 @@ class AnnIndexTask(Task):
         return fan_out_table(out, self.context.spark, self.src_value)
 
     def run(self) -> None:
-        from sayn_spark.functions.similarity import _assign_cells, _centroid_arrays
-
         db = self.context.db
         if self.mode == "incremental":
             self._run_incremental()
             return
+        # a full build owns exactly its method's side tables: another
+        # method's layers left behind would steer ann_catalog_search
+        # (which dispatches on the catalog) onto stale codes.  Dropped
+        # first, so no reader ever sees a stale layer over new vectors.
+        owned = _ANN_LAYOUT[self.method]
+        for suffix in dict.fromkeys(s for sides in _ANN_LAYOUT.values() for s in sides):
+            if suffix not in owned:
+                db.drop_object(f"{self.index}{suffix}")
         emb = self._emb().localCheckpoint()  # read by seed + every Lloyd pass
         cent = _centroid_arrays(emb.select("label", "e"))
         for _ in range(self.refine_iters):
@@ -254,55 +266,31 @@ class AnnIndexTask(Task):
         )
         # bucketed inverted file, rebuilt atomically: write to a staging
         # table, then rename over the old one (RENAME carries the bucket
-        # spec) — readers never observe a missing or half-written index
-        from sayn_spark.core.database import _tmp_name
-
-        staging = _tmp_name(f"{self.index}_vectors")
-        db.drop_object(staging)
-        db.create_table(
-            staging,
-            vectors,
-            mode="overwrite",
-            bucket_by=(_VEC_BUCKETS, ["cell"]),
+        # spec) — readers never observe a missing or half-written index.
+        # Every per-vector layer below is swapped the same way.
+        db.replace_table(
+            f"{self.index}_vectors", vectors, tmp_swap=True, bucket_by=_BY_CELL
         )
-        db.move_table(staging, f"{self.index}_vectors")
         if self.method == "ivfpq":
             self._build_pq()
-        elif self.method == "ivfsq8":
-            self._build_sq8()
-        elif self.method == "ivfbin":
-            self._build_binary()
-        elif self.method == "cascade":
-            self._build_cascade()
+        elif owned:
+            self._build_grid_layers()
 
     def _run_incremental(self) -> None:
         """Insert new source vectors into the existing index: assign to
         the FROZEN centroids, bucketed append to ``{index}_vectors``,
-        and (ivfpq) encode with the frozen codebook into
-        ``{index}_codes``.  Anti-joins on the target tables make every
-        write replay-safe and self-healing — a crash between the two
-        appends repairs on the next run."""
+        and encode every code layer under the frozen quantizers.
+        Anti-joins on the target tables make every write replay-safe
+        and self-healing — a crash between two appends repairs on the
+        next run."""
         db = self.context.db
-        spark = self.context.spark
         for t in (f"{self.index}_centroids", f"{self.index}_vectors"):
             if not db.table_exists(t):
                 raise ValueError(
                     f"ann_index task {self.name!r}: incremental insert needs an "
                     f"existing index ({t} missing) — run a full build first"
                 )
-        built_pq = db.table_exists(f"{self.index}_codes")
-        built_sq8 = db.table_exists(f"{self.index}_sq8codes")
-        built_bin = db.table_exists(f"{self.index}_binwords")
-        if built_pq:
-            built = "ivfpq"
-        elif built_sq8 and built_bin:
-            built = "cascade"
-        elif built_sq8:
-            built = "ivfsq8"
-        elif built_bin:
-            built = "ivfbin"
-        else:
-            built = "ivf"
+        built = _stored_method(db, self.index)
         if self.method != built:
             raise ValueError(
                 f"ann_index task {self.name!r}: {self.index} was built with "
@@ -310,23 +298,10 @@ class AnnIndexTask(Task):
                 "leave the quantizer layers stale; set method to match "
                 "(or rebuild full)"
             )
-        if self.method in ("ivfsq8", "ivfbin", "cascade") and not db.table_exists(
-            f"{self.index}_sq8grid"
-        ):
-            raise ValueError(
-                f"ann_index task {self.name!r}: {self.method} incremental insert "
-                f"needs the existing {self.index}_sq8grid — run a full build first"
-            )
         # ALL validation before any write: raising after the vector
         # append would strand a half-inserted batch behind the anti-join
-        stored_enc = "vector"
         if self.method == "ivfpq":
-            if not db.table_exists(f"{self.index}_codebook"):
-                raise ValueError(
-                    f"ann_index task {self.name!r}: ivfpq incremental insert needs "
-                    f"the existing {self.index}_codebook — run a full build first"
-                )
-            stored_enc = self._stored_encoding()
+            stored_enc = _stored_encoding(self.context.spark, self.index)
             if stored_enc != self.encode:
                 raise ValueError(
                     f"ann_index task {self.name!r}: {self.index} was built with "
@@ -336,128 +311,40 @@ class AnnIndexTask(Task):
                 )
         # the shared engine does the anti-join insert + codes self-heal
         # (stream_ann_ingest drives the same function per micro-batch)
-        ann_insert_batch(spark, db, self.index, self._emb().select("vec_id", "e"))
+        ann_insert_batch(
+            self.context.spark, db, self.index, self._emb().select("vec_id", "e")
+        )
 
-    def _build_sq8(self) -> None:
-        """SQ8 layer over the IVF cells: ``{index}_sq8grid`` (one row —
-        per-dimension lo/hi arrays, the trained scalar quantizer) and
-        ``{index}_sq8codes`` (vec_id, cell, c: array<bigint> 0..255)
-        bucketed by cell — q_ann_sq8_topk's symmetric-integer design,
-        persisted.  Encoding is a row-local fold against the broadcast
-        grid: building the codes table shuffles nothing beyond the
-        bucketed write."""
-        from sayn_spark.core.database import _tmp_name
-        from sayn_spark.functions.similarity import sq8_codes_col, sq8_range_row
-
+    def _build_grid_layers(self) -> None:
+        """The SQ8-grid layers over the IVF cells, as many as the
+        method's layout names: ``{index}_sq8grid`` (one row —
+        per-dimension lo/hi arrays, the trained scalar quantizer) and,
+        bucketed by cell, ``{index}_sq8codes`` (vec_id, cell, c:
+        array<bigint> 0..255 — q_ann_sq8_topk's symmetric-integer
+        design) and/or ``{index}_binwords`` (vec_id, cell, w1, w2: two
+        BIGINT words of packed sign bits, 16 bytes/vector —
+        q_ann_binary_hamming's design).  Binarisation is the top bit of
+        the SQ8 code, i.e. sign against the grid midpoint, so cascade's
+        two layers derive from ONE code frame and are consistent by
+        construction (a bit flip between them would break the tier-1 ->
+        tier-2 refinement monotonicity).  Encoding is a row-local fold
+        against the broadcast grid: the build shuffles nothing beyond
+        the bucketed writes."""
         db = self.context.db
         spark = self.context.spark
+        layers = _ANN_LAYOUT[self.method]
         vec = spark.table(f"{self.index}_vectors")
-        grid = sq8_range_row(vec.select("vec_id", "e"))
-        db.replace_table(f"{self.index}_sq8grid", grid)
-        codes = (
-            vec.select("vec_id", "cell", "e")
-            .crossJoin(F.broadcast(spark.table(f"{self.index}_sq8grid")))
-            .select("vec_id", "cell", sq8_codes_col().alias("c"))
+        db.replace_table(f"{self.index}_sq8grid", sq8_range_row(vec.select("vec_id", "e")))
+        codes = _sq8_encode(
+            vec.select("vec_id", "cell", "e"), spark.table(f"{self.index}_sq8grid")
         )
-        staging = _tmp_name(f"{self.index}_sq8codes")
-        db.drop_object(staging)
-        db.create_table(
-            staging,
-            codes,
-            mode="overwrite",
-            bucket_by=(_VEC_BUCKETS, ["cell"]),
-        )
-        db.move_table(staging, f"{self.index}_sq8codes")
-
-    def _build_binary(self) -> None:
-        """Binary layer over the IVF cells: ``{index}_sq8grid`` (the
-        shared trained grid — binarisation is the top bit of the SQ8
-        code, i.e. sign against the grid midpoint) and
-        ``{index}_binwords`` (vec_id, cell, w1, w2: two BIGINT words of
-        packed sign bits) bucketed by cell — q_ann_binary_hamming's
-        design, persisted.  16 bytes/vector: the cheapest tier of the
-        quantized-index family; encoding is a row-local fold, so
-        building the words table shuffles nothing beyond the bucketed
-        write."""
-        from sayn_spark.core.database import _tmp_name
-        from sayn_spark.functions.similarity import (
-            _BQ_WORDS,
-            _bq_pack_expr,
-            sq8_codes_col,
-            sq8_range_row,
-        )
-
-        db = self.context.db
-        spark = self.context.spark
-        vec = spark.table(f"{self.index}_vectors")
-        grid = sq8_range_row(vec.select("vec_id", "e"))
-        db.replace_table(f"{self.index}_sq8grid", grid)
-        words = (
-            vec.select("vec_id", "cell", "e")
-            .crossJoin(F.broadcast(spark.table(f"{self.index}_sq8grid")))
-            .select("vec_id", "cell", sq8_codes_col().alias("c"))
-            .select(
-                "vec_id",
-                "cell",
-                F.expr(_bq_pack_expr("c", *_BQ_WORDS[0])).alias("w1"),
-                F.expr(_bq_pack_expr("c", *_BQ_WORDS[1])).alias("w2"),
-            )
-        )
-        staging = _tmp_name(f"{self.index}_binwords")
-        db.drop_object(staging)
-        db.create_table(
-            staging,
-            words,
-            mode="overwrite",
-            bucket_by=(_VEC_BUCKETS, ["cell"]),
-        )
-        db.move_table(staging, f"{self.index}_binwords")
-
-    def _build_cascade(self) -> None:
-        """Both quantized layers over ONE frozen grid: ``{index}_sq8grid``
-        + ``{index}_sq8codes`` + ``{index}_binwords`` — the stored
-        tables the three-tier retrieval cascade
-        (functions/similarity.py:ann_index_search_cascade /
-        q_ann_cascade_topk) searches.  The SQ8 codes are computed once
-        and the binary words are their top bit, so the two layers are
-        consistent by construction (a bit flip between them would break
-        the tier-1 -> tier-2 refinement monotonicity)."""
-        from sayn_spark.core.database import _tmp_name
-        from sayn_spark.functions.similarity import (
-            _BQ_WORDS,
-            _bq_pack_expr,
-            sq8_codes_col,
-            sq8_range_row,
-        )
-
-        db = self.context.db
-        spark = self.context.spark
-        vec = spark.table(f"{self.index}_vectors")
-        grid = sq8_range_row(vec.select("vec_id", "e"))
-        db.replace_table(f"{self.index}_sq8grid", grid)
-        codes = (
-            vec.select("vec_id", "cell", "e")
-            .crossJoin(F.broadcast(spark.table(f"{self.index}_sq8grid")))
-            .select("vec_id", "cell", sq8_codes_col().alias("c"))
-        ).localCheckpoint()  # read by both layer writes
-        staging = _tmp_name(f"{self.index}_sq8codes")
-        db.drop_object(staging)
-        db.create_table(
-            staging, codes, mode="overwrite", bucket_by=(_VEC_BUCKETS, ["cell"])
-        )
-        db.move_table(staging, f"{self.index}_sq8codes")
-        words = codes.select(
-            "vec_id",
-            "cell",
-            F.expr(_bq_pack_expr("c", *_BQ_WORDS[0])).alias("w1"),
-            F.expr(_bq_pack_expr("c", *_BQ_WORDS[1])).alias("w2"),
-        )
-        staging = _tmp_name(f"{self.index}_binwords")
-        db.drop_object(staging)
-        db.create_table(
-            staging, words, mode="overwrite", bucket_by=(_VEC_BUCKETS, ["cell"])
-        )
-        db.move_table(staging, f"{self.index}_binwords")
+        if "_sq8codes" in layers and "_binwords" in layers:
+            codes = codes.localCheckpoint()  # read by both layer writes
+        for suffix, rows in (("_sq8codes", codes), ("_binwords", _bq_words(codes))):
+            if suffix in layers:
+                db.replace_table(
+                    f"{self.index}{suffix}", rows, tmp_swap=True, bucket_by=_BY_CELL
+                )
 
     def _train_pq(self, subs: DataFrame, seed_ids: DataFrame) -> DataFrame:
         """Per-subspace k-means codebook (s, c, cw): 16 codewords per
@@ -472,8 +359,6 @@ class AnnIndexTask(Task):
         position (no respawn heuristics).  The 8x16 codebook is
         broadcast-sized at any corpus scale — only the (vec_id, s,
         sub) assignment stage is distributed."""
-        from pyspark.sql.window import Window
-
         w_seed = Window.orderBy("vec_id")  # 16 rows: global window is fine
         seeds = seed_ids.select(
             "vec_id", (F.row_number().over(w_seed) - 1).alias("c")
@@ -516,15 +401,6 @@ class AnnIndexTask(Task):
             )
         return cb
 
-    def _residual_frame(self, vec: DataFrame) -> DataFrame:
-        return _residual_frame(self.context.spark, self.index, vec)
-
-    def _stored_encoding(self) -> str:
-        return _stored_encoding(self.context.spark, self.index)
-
-    def _encode_pq(self, vec: DataFrame, residual: bool) -> DataFrame:
-        return _encode_pq(self.context.spark, self.index, vec, residual)
-
     def _build_pq(self) -> None:
         """PQ layer over the IVF cells: ``{index}_codebook`` (s, c, cw)
         — 8 subspaces x 16 codewords, broadcast-sized — and
@@ -538,23 +414,16 @@ class AnnIndexTask(Task):
         Lloyd steps from those same seeds (see _train_pq), improving
         ADC recall on clustered corpora while staying deterministic.
         """
-        from sayn_spark.core.database import _tmp_name
-
         db = self.context.db
         spark = self.context.spark
+        residual = self.encode == "residual"
         vec = spark.table(f"{self.index}_vectors")
         enc_src = (
-            self._residual_frame(vec.select("vec_id", "cell", "e"))
-            if self.encode == "residual"
+            _residual_frame(spark, self.index, vec.select("vec_id", "cell", "e"))
+            if residual
             else vec
         )
-        subs = enc_src.select(
-            "vec_id",
-            "cell",
-            F.posexplode(
-                F.expr("transform(sequence(0, 7), s -> slice(e, s * 8 + 1, 8))")
-            ).alias("s", "sub"),
-        )
+        subs = enc_src.select("vec_id", "cell", _pq_subvectors())
         # TakeOrderedAndProject, not a global window: the 16 lowest ids
         seed_ids = vec.select("vec_id").orderBy("vec_id").limit(16)
         if self.codebook == "trained":
@@ -567,13 +436,12 @@ class AnnIndexTask(Task):
         db.replace_table(
             f"{self.index}_codebook", cb.withColumn("enc", F.lit(self.encode))
         )
-        codes = self._encode_pq(vec, residual=self.encode == "residual")
-        staging = _tmp_name(f"{self.index}_codes")
-        db.drop_object(staging)
-        db.create_table(
-            staging, codes, mode="overwrite", bucket_by=(_VEC_BUCKETS, ["cell"])
+        db.replace_table(
+            f"{self.index}_codes",
+            _encode_pq(spark, self.index, vec, residual),
+            tmp_swap=True,
+            bucket_by=_BY_CELL,
         )
-        db.move_table(staging, f"{self.index}_codes")
 
     def compile(self) -> None:
         return None
@@ -592,29 +460,13 @@ def _residual_frame(spark, index: str, vec: DataFrame) -> DataFrame:
     )
 
 
-def _stored_encoding(spark, index: str) -> str:
-    """The encoding the existing codebook was built with ("vector" for
-    pre-residual indexes that have no enc column)."""
-    cb = spark.table(f"{index}_codebook")
-    if "enc" not in cb.columns:
-        return "vector"
-    row = cb.select("enc").first()
-    return row["enc"] if row is not None else "vector"
-
-
 def _encode_pq(spark, index: str, vec: DataFrame, residual: bool) -> DataFrame:
     """(vec_id, cell, s, c) codes for ``vec`` rows under the existing
     (frozen) ``{index}_codebook``."""
     cb = spark.table(f"{index}_codebook").drop("enc")
     if residual:
         vec = _residual_frame(spark, index, vec.select("vec_id", "cell", "e"))
-    subs = vec.select(
-        "vec_id",
-        "cell",
-        F.posexplode(
-            F.expr("transform(sequence(0, 7), s -> slice(e, s * 8 + 1, 8))")
-        ).alias("s", "sub"),
-    )
+    subs = vec.select("vec_id", "cell", _pq_subvectors())
     sub_d2 = F.round(
         F.expr(
             "aggregate(zip_with(sub, cw, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
@@ -633,23 +485,20 @@ def _encode_pq(spark, index: str, vec: DataFrame, residual: bool) -> DataFrame:
 def ann_insert_batch(spark, db, index: str, vecs: DataFrame) -> None:
     """Insert (vec_id, e: array<double>) rows into an EXISTING index
     under frozen quantizers — the engine behind the ann_index task's
-    incremental mode and stream_ann_ingest.  The PQ layer is inferred
-    from the CATALOG (a ``{index}_codes`` table dispatches encoding;
-    its enc column picks vector vs residual), so callers cannot
-    disagree with the index.  Replay-safe: new rows come from an
-    anti-join on the vectors table, and the codes self-heal runs even
-    when no new rows exist (a crash between the two appends repairs on
-    the next call)."""
-    from sayn_spark.functions.similarity import _assign_cells
-
+    incremental mode and stream_ann_ingest.  The code layers come from
+    the CATALOG (the index's stored method names them in
+    ``_ANN_LAYOUT``; the codebook's enc column picks vector vs
+    residual PQ), so callers cannot disagree with the index.
+    Replay-safe: new rows come from an anti-join on the vectors table,
+    and every layer's self-heal runs even when no new rows exist (a
+    crash between two appends repairs on the next call)."""
     for t in (f"{index}_centroids", f"{index}_vectors"):
         if not db.table_exists(t):
             raise ValueError(
                 f"ann_insert_batch: index table {t} missing — run a full "
                 "ann_index build first"
             )
-    pq = db.table_exists(f"{index}_codes")
-    stored_enc = _stored_encoding(spark, index) if pq else "vector"
+    layers = _ANN_LAYOUT[_stored_method(db, index)]
     cent = spark.table(f"{index}_centroids")
     new = vecs.join(
         spark.table(f"{index}_vectors").select("vec_id"), "vec_id", "left_anti"
@@ -663,69 +512,33 @@ def ann_insert_batch(spark, db, index: str, vecs: DataFrame) -> None:
             F.sqrt(F.expr("aggregate(e, 0D, (acc, x) -> acc + x * x)")).alias("nrm"),
         ).where(F.col("nrm") > 0)  # index invariant (r14): see run()
         db.create_table(
-            f"{index}_vectors",
-            vectors,
-            mode="append",
-            bucket_by=(_VEC_BUCKETS, ["cell"]),
-        )
-    if pq:
-        codes_t = f"{index}_codes"
-        missing = spark.table(f"{index}_vectors").join(
-            spark.table(codes_t).select("vec_id").distinct(), "vec_id", "left_anti"
-        )
-        if not missing.isEmpty():
-            db.create_table(
-                codes_t,
-                _encode_pq(spark, index, missing, residual=stored_enc == "residual"),
-                mode="append",
-                bucket_by=(_VEC_BUCKETS, ["cell"]),
-            )
-    if db.table_exists(f"{index}_sq8codes"):
-        # frozen-grid SQ8 encode for any vector missing codes — like
-        # the PQ heal, it runs even when no new rows arrived so a
-        # crash between the two appends repairs on the next call.
-        # Independent `if` (not elif): a cascade index carries BOTH
-        # quantized layers and each must heal
-        from sayn_spark.functions.similarity import sq8_codes_col
-
-        codes_t = f"{index}_sq8codes"
-        missing = spark.table(f"{index}_vectors").join(
-            spark.table(codes_t).select("vec_id").distinct(), "vec_id", "left_anti"
-        )
-        if not missing.isEmpty():
-            db.create_table(
-                codes_t,
-                missing.select("vec_id", "cell", "e")
-                .crossJoin(F.broadcast(spark.table(f"{index}_sq8grid")))
-                .select("vec_id", "cell", sq8_codes_col().alias("c")),
-                mode="append",
-                bucket_by=(_VEC_BUCKETS, ["cell"]),
-            )
-    if db.table_exists(f"{index}_binwords"):
-        # frozen-grid binarisation for any vector missing packed words
-        # — same heal contract as the PQ/SQ8 branches
-        from sayn_spark.functions.similarity import (
-            _BQ_WORDS,
-            _bq_pack_expr,
-            sq8_codes_col,
+            f"{index}_vectors", vectors, mode="append", bucket_by=_BY_CELL
         )
 
-        words_t = f"{index}_binwords"
+    def sq8(vec: DataFrame) -> DataFrame:
+        return _sq8_encode(
+            vec.select("vec_id", "cell", "e"), spark.table(f"{index}_sq8grid")
+        )
+
+    # per-vector code layers, encoded under the FROZEN quantizers (the
+    # codebook and grid tables are never rewritten here).  Each layer
+    # heals on its own — a cascade index carries both SQ8 layers, and a
+    # crash may land between their appends.
+    encoders = {
+        "_codes": lambda vec: _encode_pq(
+            spark, index, vec, residual=_stored_encoding(spark, index) == "residual"
+        ),
+        "_sq8codes": sq8,
+        "_binwords": lambda vec: _bq_words(sq8(vec)),
+    }
+    for suffix in layers:
+        if suffix not in encoders:
+            continue
+        table = f"{index}{suffix}"
         missing = spark.table(f"{index}_vectors").join(
-            spark.table(words_t).select("vec_id").distinct(), "vec_id", "left_anti"
+            spark.table(table).select("vec_id").distinct(), "vec_id", "left_anti"
         )
         if not missing.isEmpty():
             db.create_table(
-                words_t,
-                missing.select("vec_id", "cell", "e")
-                .crossJoin(F.broadcast(spark.table(f"{index}_sq8grid")))
-                .select("vec_id", "cell", sq8_codes_col().alias("c"))
-                .select(
-                    "vec_id",
-                    "cell",
-                    F.expr(_bq_pack_expr("c", *_BQ_WORDS[0])).alias("w1"),
-                    F.expr(_bq_pack_expr("c", *_BQ_WORDS[1])).alias("w2"),
-                ),
-                mode="append",
-                bucket_by=(_VEC_BUCKETS, ["cell"]),
+                table, encoders[suffix](missing), mode="append", bucket_by=_BY_CELL
             )

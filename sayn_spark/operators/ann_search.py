@@ -14,18 +14,18 @@ declaratively — the search half of the similarity pipeline as YAML:
         shortlist: 20              # quantized tiers: re-rank width
         shortlist_binary: 50       # cascade only: Hamming-tier width
 
-The path is chosen from the CATALOG, not the config: an index with
-BOTH ``{index}_binwords`` and ``{index}_sq8codes`` (method: cascade)
-searches via the three-tier retrieval cascade — packed Hamming to
-``shortlist_binary``, symmetric SQ8 to ``shortlist``, exact cosine to
-``k`` (functions/similarity.py:ann_index_search_cascade, the
-registered q_ann_cascade_topk shape); one with only
-``{index}_binwords`` via the packed XOR+popcount scan + exact re-rank
-(ann_index_search_binary); one with ``{index}_sq8codes`` via the
-symmetric integer SQ8 scan + exact re-rank (ann_index_search_sq8);
-one with ``{index}_codes`` via ADC + exact re-rank
+The path is chosen from the CATALOG, not the config:
+functions/similarity.py:ann_catalog_search reads the method the index
+was built with from which side tables exist, against the one layout
+table ``_ANN_LAYOUT`` the build and the heal also use.  A cascade
+index searches via the three-tier retrieval cascade — packed Hamming
+to ``shortlist_binary``, symmetric SQ8 to ``shortlist``, exact cosine
+to ``k`` (ann_index_search_cascade, the registered q_ann_cascade_topk
+shape); ivfbin via the packed XOR+popcount scan + exact re-rank
+(ann_index_search_binary); ivfsq8 via the symmetric integer SQ8 scan +
+exact re-rank (ann_index_search_sq8); ivfpq via ADC + exact re-rank
 (ann_index_search_pq — residual encodings route automatically through
-the codebook's enc column); otherwise the exact in-cell scan
+the codebook's enc column); ivf via the exact in-cell scan
 (ann_index_search).  Only query rows shuffle; the
 bucketed inverted file is read in place.  The destination is a full
 rebuild (replace_table), so re-running a search after an incremental

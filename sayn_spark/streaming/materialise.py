@@ -647,16 +647,18 @@ def stream_ann_ingest(
     ``ann_index`` task: each micro-batch of (id, vector) rows inserts
     under FROZEN quantizers via the same engine as the task's
     incremental mode (operators/ann.py:ann_insert_batch) — anti-join
-    replay safety, bucketed appends, PQ codes inferred from the
-    catalog (vector or residual encoding follows the codebook's enc
-    column), and the codes self-heal runs every trigger, so a crash
-    between the two appends repairs on the next one.
+    replay safety, bucketed appends, code layers inferred from the
+    catalog (the index's method and its ``_ANN_LAYOUT`` entry; PQ's
+    vector or residual encoding follows the codebook's enc column),
+    and every layer's self-heal runs every trigger, so a crash between
+    two appends repairs on the next one.
 
     State discipline at 100 TB: the index tables grow by appends only;
     each trigger shuffles nothing but the batch's rows (centroids and
     codebook broadcast).  Retrain (full rebuild) stays a batch
     decision — the stream never moves centroids.
     """
+    from sayn_spark.functions.similarity import _ANN_LAYOUT, _stored_method
     from sayn_spark.operators.ann import ann_insert_batch
 
     outer_session = source.sparkSession
@@ -669,16 +671,14 @@ def stream_ann_ingest(
             F.col(id_column).alias("vec_id"),
             F.expr(f"cast({vector_column} as array<double>)").alias("e"),
         )
-        ann_insert_batch(spark, SparkDatabase(spark), index, vecs)
-        # every side table an insert appends to, across index kinds:
+        db = SparkDatabase(spark)
+        ann_insert_batch(spark, db, index, vecs)
+        # every table an insert may append to, per the index's layout:
         # a stale {index}_sq8codes/{index}_binwords in the outer
         # session would silently drop the new vectors from the SQ8 /
         # Hamming shortlist stages of catalog searches
-        db = SparkDatabase(spark)
-        for suffix in ("_vectors", "_codes", "_sq8codes", "_binwords"):
-            t = f"{index}{suffix}"
-            if db.table_exists(t):
-                outer_session.catalog.refreshTable(t)
+        for suffix in ("_vectors", *_ANN_LAYOUT[_stored_method(db, index)]):
+            outer_session.catalog.refreshTable(f"{index}{suffix}")
 
     return (
         source.writeStream.foreachBatch(_batch)
@@ -759,11 +759,11 @@ def stream_ann_search(
     FROZEN catalog index — the query half of the vector pipeline
     (stream_ann_ingest is the corpus half): each micro-batch routes
     through the same catalog dispatch as the ann_search task
-    (functions/similarity.py:ann_catalog_search — binary / SQ8 / ADC /
-    exact picked from which code tables exist) and MERGES its results
-    into ``dst_table`` on query_id, so a re-submitted query refreshes
-    its rows instead of duplicating them and trigger replays are
-    idempotent.
+    (functions/similarity.py:ann_catalog_search — cascade / binary /
+    SQ8 / ADC / exact picked by the method the catalog holds) and
+    MERGES its results into ``dst_table`` on query_id, so a
+    re-submitted query refreshes its rows instead of duplicating them
+    and trigger replays are idempotent.
 
     Scale: the index side is read in place (cell-bucketed, nprobe
     cells per query); each trigger shuffles only the batch's query

@@ -824,3 +824,85 @@ def test_ann_cascade_incremental_heals_both_layers(ctx, spark, emb_table):
     t.config()
     with pytest.raises(ValueError, match="cascade"):
         t.run()
+
+
+def test_ann_full_rebuild_drops_other_methods_layers(ctx, spark, emb_table):
+    """A full build owns exactly its method's side tables.  Rebuilding a
+    cascade index as ivf must drop the stale quantizer layers — the
+    catalog dispatch reads the method from the tables that exist, so
+    left-behind ones would route every search down the cascade over
+    codes of vectors the new index no longer holds."""
+    from sayn_spark.functions.similarity import ann_catalog_search
+
+    base = {"source": "ann_rb_src", "index": "ann_rb", "label_column": "label"}
+    ctx.db.replace_table("ann_rb_src", spark.table("ann_src"))
+    _build(ctx, spark, "ann_rb_casc", {**base, "method": "cascade"})
+    ctx.db.replace_table(
+        "ann_rb_src", spark.table("ann_src").where(F.col("vec_id") % 2 == 0)
+    )
+    _build(ctx, spark, "ann_rb_ivf", {**base, "method": "ivf"})
+    for stale in ("ann_rb_sq8grid", "ann_rb_sq8codes", "ann_rb_binwords"):
+        assert not ctx.db.table_exists(stale), stale
+    queries = (
+        spark.table("ann_src")
+        .where(F.col("vec_id") < 10)
+        .select(
+            F.col("vec_id").alias("query_id"),
+            F.expr("cast(embedding as array<double>)").alias("e"),
+        )
+    )
+    got = sorted(
+        tuple(r)
+        for r in ann_catalog_search(
+            spark, ctx.db, "ann_rb", queries, k=3, nprobe=1,
+            shortlist=3, shortlist_binary=3,
+        ).collect()
+    )
+    want = sorted(
+        tuple(r) for r in ann_index_search(spark, "ann_rb", queries, k=3, nprobe=1).collect()
+    )
+    assert got == want and len(got) == 30
+
+
+@pytest.mark.parametrize("method", ["ivf", "ivfpq", "ivfsq8", "ivfbin", "cascade"])
+def test_ann_search_survives_zero_norm_vectors(ctx, spark, method):
+    """ANN-layer review r13: a zero-norm vector in the index (exactly
+    what the embed task emits for an empty document, by r12 design)
+    made every catalog search probing its cell die with DIVIDE_BY_ZERO
+    under ANSI.  Since r14 the guard lives at the edges: the index
+    writer drops zero-norm vectors (they could never rank under the
+    NULL-cos-never-ranks semantics anyway) and the shared search tail
+    filters zero-norm QUERIES once up-front — pinned here on every
+    search path.  64-d rows: the PQ and binary layouts assume 64
+    dims."""
+    import math
+
+    from sayn_spark.functions.similarity import _stored_method, ann_catalog_search
+
+    rows = [
+        (i, [math.sin(i * 7.3 + j) for j in range(64)], i % 2) for i in range(40)
+    ]
+    rows.append((99, [0.0] * 64, 1))  # the empty-document embedding
+    ctx.db.replace_table(
+        "zvt_src",
+        spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int"),
+    )
+    ix = f"zvt_{method}"
+    _build(ctx, spark, ix, {"source": "zvt_src", "index": ix,
+                            "label_column": "label", "method": method})
+    assert _stored_method(ctx.db, ix) == method
+
+    def search(q):
+        return ann_catalog_search(
+            spark, ctx.db, ix, q, k=3, nprobe=2, shortlist=10, shortlist_binary=20
+        ).collect()
+
+    q = spark.createDataFrame(
+        [(1, [math.cos(j * 0.7) for j in range(64)])], "query_id long, e array<double>"
+    )
+    out = search(q)
+    assert len(out) == 3
+    assert 99 not in {r.neighbor_id for r in out}
+    assert all(r.cos is not None for r in out)
+    q0 = spark.createDataFrame([(2, [0.0] * 64)], "query_id long, e array<double>")
+    assert search(q0) == []

@@ -384,62 +384,6 @@ def test_connected_components_fullrange_ids(spark):
     assert m == ["label_prop"]
 
 
-def test_ann_search_survives_zero_norm_vectors(spark, tmp_path):
-    """ANN-layer review r13: a zero-norm vector in the index (exactly
-    what the embed task emits for an empty document, by r12 design)
-    made every catalog search probing its cell die with DIVIDE_BY_ZERO
-    under ANSI.  Since r14 the guard lives at the edges: the index
-    writer drops zero-norm vectors (they could never rank under the
-    NULL-cos-never-ranks semantics anyway) and the searches filter
-    zero-norm QUERIES once up-front — same observable behavior this
-    test pinned in r13, plain per-candidate division."""
-    from sayn_spark.core.compiler import Compiler
-    from sayn_spark.core.database import SparkDatabase
-    from sayn_spark.core.objects import DbObjectCompiler
-    from sayn_spark.functions.similarity import ann_index_search
-    from sayn_spark.operators import RunArguments, TaskContext
-    from sayn_spark.operators.ann import AnnIndexTask
-
-    db = SparkDatabase(spark)
-    for t in ("zvt_src", "zvt_ix_centroids", "zvt_ix_vectors"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    rows = [
-        (i, [float((i * 7 + j * 3) % 5 + 1) for j in range(8)], i % 2)
-        for i in range(20)
-    ]
-    rows.append((99, [0.0] * 8, 1))  # the empty-document embedding
-    db.replace_table(
-        "zvt_src",
-        spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>, label int"
-        ),
-    )
-    ctx = TaskContext(
-        spark=spark, db=db, compiler=Compiler(parameters={}),
-        obj_compiler=DbObjectCompiler(default_db="spark"),
-        run_arguments=RunArguments(), parameters={}, connections={},
-        project_dir=tmp_path,
-    )
-    ix = AnnIndexTask(
-        "zvt",
-        {"source": "zvt_src", "index": "zvt_ix", "label_column": "label",
-         "method": "ivf"},
-        ctx,
-    )
-    ix.config()
-    ix.run()
-    q = spark.createDataFrame(
-        [(1, [2.0, 3.0, 1.0, 2.0, 4.0, 1.0, 3.0, 2.0])],
-        "query_id long, e array<double>",
-    )
-    out = ann_index_search(spark, "zvt_ix", q, k=3, nprobe=2).collect()
-    assert len(out) == 3
-    assert 99 not in {r.neighbor_id for r in out}
-    assert all(r.cos is not None for r in out)
-    q0 = spark.createDataFrame([(2, [0.0] * 8)], "query_id long, e array<double>")
-    assert ann_index_search(spark, "zvt_ix", q0, k=2, nprobe=2).collect() == []
-
-
 def test_quality_score_zero_token_docs(spark):
     """Edge-value review r13: quality_score_col's unguarded ratios were
     ANSI DIVIDE_BY_ZERO — one empty or whitespace-only document killed

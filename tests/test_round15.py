@@ -24,13 +24,25 @@ def test_sentinel_drift_flag_thresholds():
 def test_bench_json_carries_drift_keys():
     """The contract keys must be additions-only: value/queries stay,
     the drift pair rides along."""
-    import inspect
+    from bench import _bench_payload
 
-    import bench
-
-    src = inspect.getsource(bench.main)
-    for key in ("sentinel_drift", "sentinel_contaminated", '"queries"', '"value"'):
-        assert key in src
+    samples = {"q_a": [3.0, 1.0, 1.2, 1.4], "q_b": [2.0, 0.5, 0.4, 0.6]}
+    full, compact = _bench_payload(
+        samples, [0.4, 0.3, 0.3, 0.3], [0.5, 0.2, 0.2, 0.2], 3, "/data/sf0.1"
+    )
+    assert full["queries"] == {"q_a": 1.2, "q_b": 0.5}
+    assert full["value"] == compact["value"] == 1.7
+    assert full["queries_cold"] == {"q_a": 1.2, "q_b": 0.5}
+    assert full["sf"] == 0.1 and full["trials"] == 3
+    assert full["sentinel"] == full["sentinel_pre"] == 0.3
+    # post/pre = 0.2 / 0.3: a drifted sweep flags itself
+    assert (full["sentinel_drift"], full["sentinel_contaminated"]) == (0.667, True)
+    # the stdout line: every key but the per-line detail, 2-dp queries
+    assert list(compact) == [
+        k for k in full if k not in ("queries_spread", "queries_cold")
+    ]
+    assert compact["queries"] == {"q_a": 1.2, "q_b": 0.5}
+    assert compact["sentinel_contaminated"] is True
 
 
 def test_as_local_is_bit_exact_and_local(spark):
