@@ -441,6 +441,39 @@ class SparkDatabase:
         self.move_table(staging, dst_name)
         self.drop_object(src_name)
 
+    def merge_frame(
+        self,
+        name: str,
+        df: DataFrame,
+        delete_key: str | Sequence[str],
+        staging_suffix: str = "",
+        **writer_opts: Any,
+    ) -> None:
+        """Incremental write of a frame (ref: tasks/autosql.py:349-358):
+        create ``name`` from ``df`` when it is missing, otherwise stage
+        ``df`` as ``_tmp_name(name, staging_suffix)`` and merge_tables
+        it on ``delete_key``.  ``writer_opts`` go to create_table.
+
+        A crash inside merge_tables' parquet swap — after move_table
+        dropped the destination, before the rename — leaves no
+        destination and a complete ``_sayn_merge`` table (Spark's CTAS
+        writes the data before the catalog entry, so a staging table
+        that exists is whole).  Creating the destination from ``df``
+        alone would lose every earlier row, and the next merge would
+        drop the orphan; so the create branch finishes that swap first
+        and then merges.
+        """
+        if not self.table_exists(name):
+            swap = _tmp_name(name, "_sayn_merge")
+            if not self.table_exists(swap):
+                self.create_table(name, df, mode="overwrite", **writer_opts)
+                return
+            self.move_table(swap, name)
+        staging = _tmp_name(name, staging_suffix)
+        self.drop_object(staging)
+        self.create_table(staging, df, mode="overwrite", **writer_opts)
+        self.merge_tables(staging, name, delete_key)
+
     # -- data loading (ref: database/__init__.py:513-587) ---------------
 
     def load_data(

@@ -924,30 +924,31 @@ class DedupTask(Task):
             prev = prev_matches.agg(F.max("ingest_id").alias("m")).collect()[0]["m"]
             ingest_id = int(prev) + 1 if prev is not None else 0
         batch = batch.localCheckpoint()  # several probe arms read it
-        dedup_ingest_batch(
-            batch,
-            ingest_id,
-            self.index_table,
-            self.matches_table,
-            self._sf_dir(),
-            threshold=self.threshold,
-            # the pre-bucketed band-key side table is a minhash-only
-            # optimisation; simhash derives combo keys from its 8-int
-            # signatures map-side, editdistance derives block keys from
-            # the indexed text map-side, phash derives (band, key) rows
-            # from its 4 stored band ints map-side
-            band_table=(
-                f"{self.index_table}_bands" if self.method == "minhash" else None
-            ),
-            method=self.method,
-            n_bands=self.n_bands,
-            max_hamming=self.max_hamming,
-            max_edit=self.max_edit,
-            block_chars=self.block_chars,
-            block_keys=self.block_keys,
-            max_compare_chars=self.max_compare_chars,
-            on_decode_error=self.on_decode_error,
-        )
+        if not batch.isEmpty():
+            dedup_ingest_batch(
+                batch,
+                ingest_id,
+                self.index_table,
+                self.matches_table,
+                self._sf_dir(),
+                threshold=self.threshold,
+                # the pre-bucketed band-key side table is a minhash-only
+                # optimisation; simhash derives combo keys from its 8-int
+                # signatures map-side, editdistance derives block keys from
+                # the indexed text map-side, phash derives (band, key) rows
+                # from its 4 stored band ints map-side
+                band_table=(
+                    f"{self.index_table}_bands" if self.method == "minhash" else None
+                ),
+                method=self.method,
+                n_bands=self.n_bands,
+                max_hamming=self.max_hamming,
+                max_edit=self.max_edit,
+                block_chars=self.block_chars,
+                block_keys=self.block_keys,
+                max_compare_chars=self.max_compare_chars,
+                on_decode_error=self.on_decode_error,
+            )
         if self.dst_value is not None:
             # SELF-HEALING: the destination is defined as "source docs
             # whose signatures made the index" (the non-duplicates),

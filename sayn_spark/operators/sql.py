@@ -17,7 +17,6 @@ from __future__ import annotations
 from pathlib import Path
 from typing import Any, Optional
 
-from sayn_spark.core.database import _tmp_name
 from sayn_spark.operators.base import Task, TaskStatus
 from sayn_spark.plans.quality import standard_tests_plan
 
@@ -152,15 +151,13 @@ class SqlTask(Task):
                 **self._writer_opts(),
             )
         elif self.materialisation == "incremental":
-            full = self.context.run_arguments.full_load or not db.table_exists(self.dst_value)
-            if full:
+            if self.context.run_arguments.full_load:
                 # full-rebuild fallback (ref: tasks/autosql.py:326-347)
                 db.replace_table(self.dst_value, self._select_df(), **self._writer_opts())
             else:
-                tmp = _tmp_name(self.dst_value)
-                db.drop_object(tmp)
-                db.create_table(tmp, self._select_df(), **self._writer_opts())
-                db.merge_tables(tmp, self.dst_value, self.delete_key)
+                db.merge_frame(
+                    self.dst_value, self._select_df(), self.delete_key, **self._writer_opts()
+                )
         for hook in self.post_hook:
             # ref: database/__init__.py:299-318
             db.execute(self.task_compiler.compile(hook["sql"]))

@@ -42,7 +42,9 @@ def merge_dataframes(
     check_merge_columns(src.columns, dst.columns)
     keys = [delete_key] if isinstance(delete_key, str) else list(delete_key)
     src_keys = src.select(*keys).distinct()
-    kept = dst.join(src_keys, on=keys, how="left_anti")
+    # a USING join puts its key columns first; the select keeps dst's
+    # column order when the delete key is not its leading column
+    kept = dst.join(src_keys, on=keys, how="left_anti").select(*dst.columns)
     return kept.unionByName(src.select(*dst.columns))
 
 

@@ -1,12 +1,22 @@
-"""Streaming incremental materialisation: the sql task's
-``materialisation: incremental`` as a continuous pipeline.
+"""Streaming twins: batch pipeline stages run as continuous
+Structured Streaming queries that materialise into catalog tables.
 
-Each micro-batch of source rows is merged into the destination catalog
-table with the same delete-key semantics as the batch engine
-(plans/materialise.py, ref merge_tables.sql:1-12) via foreachBatch —
-Structured Streaming's hook for sinks that need arbitrary batch logic.
-The checkpoint gives exactly-once *input* processing; the merge itself
-is idempotent on the delete key, so replayed batches converge.
+Every twin is one ``foreachBatch`` query — Structured Streaming's hook
+for sinks that need arbitrary batch logic — started by ``_twin``, which
+owns everything the twins share: the checkpoint and the
+``availableNow`` trigger, the one empty-batch check, the
+``SparkDatabase`` over the batch's session, and refreshing every table
+the trigger wrote in the caller's session.  A twin supplies only
+``body(batch_df, batch_id, db)``, which returns the tables it wrote.
+
+Writes go through ``SparkDatabase.merge_frame``: stage, then merge on a
+delete key with the batch engine's semantics (plans/materialise.py, ref
+merge_tables.sql:1-12), or create the table on the first trigger.  The
+checkpoint gives exactly-once *input* processing, but foreachBatch is
+at-least-once, so every write is idempotent on a replay of the same
+``batch_id``: rows merge on their own key, or are stamped with the
+trigger id (``ingest_id``) and merge on that, so a replayed trigger
+replaces its own rows.
 """
 
 from __future__ import annotations
@@ -14,7 +24,39 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sayn_spark.core.database import SparkDatabase, _tmp_name
+from sayn_spark.core.database import SparkDatabase
+
+
+def _twin(source: DataFrame, checkpoint: str, body):
+    """Start ``source`` as an availableNow foreachBatch query running
+    ``body(batch_df, batch_id, db)`` on every non-empty micro-batch;
+    ``body`` returns the catalog tables it wrote."""
+    # foreachBatch runs in a CLONED session whose relation cache is
+    # separate from the caller's; refresh through the source session so
+    # readers outside the stream see the post-merge files
+    outer_session = source.sparkSession
+
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        for table in body(batch_df, batch_id, SparkDatabase(batch_df.sparkSession)):
+            outer_session.catalog.refreshTable(table)
+
+    return (
+        source.writeStream.foreachBatch(_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _merge_stamped(db: SparkDatabase, dst_table: str, df: DataFrame, batch_id: int) -> list:
+    """Stamp ``df`` with the trigger id and merge it into ``dst_table``
+    delete-before-append on that id: a replayed trigger replaces its
+    own rows instead of duplicating them."""
+    stamped = df.withColumn("ingest_id", F.lit(batch_id).cast("long"))
+    db.merge_frame(dst_table, stamped, "ingest_id", f"_stream_{batch_id}")
+    return [dst_table]
 
 
 def stream_merge_into(
@@ -31,31 +73,11 @@ def stream_merge_into(
     full rebuild.
     """
 
-    # foreachBatch runs in a CLONED session whose relation cache is
-    # separate from the caller's; refresh through the source session so
-    # readers outside the stream see the post-merge files
-    outer_session = source.sparkSession
+    def body(batch_df: DataFrame, batch_id: int, db: SparkDatabase) -> list:
+        db.merge_frame(dst_table, batch_df, delete_key, f"_stream_{batch_id}")
+        return [dst_table]
 
-    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        db = SparkDatabase(spark)
-        if batch_df.isEmpty():
-            return
-        if not db.table_exists(dst_table):
-            db.create_table(dst_table, batch_df, mode="overwrite")
-        else:
-            staging = _tmp_name(dst_table, f"_stream_{batch_id}")
-            db.drop_object(staging)
-            db.create_table(staging, batch_df, mode="overwrite")
-            db.merge_tables(staging, dst_table, delete_key)
-        outer_session.catalog.refreshTable(dst_table)
-
-    return (
-        source.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _twin(source, checkpoint, body)
 
 
 _BAND_BUCKETS = 32  # bucket count for the persisted band index
@@ -94,6 +116,23 @@ def _heal_band_table(spark, db: SparkDatabase, index_table: str, band_table: str
         )
 
 
+def _check_ingest_opts(method: str, band_table: str | None, on_decode_error: str) -> None:
+    """The option checks of dedup_ingest_batch, also run by its
+    streaming twin before ``start()``: a bad option fails the call,
+    not the first non-empty trigger (and not never, on an empty
+    source)."""
+    if method not in ("minhash", "simhash", "editdistance", "phash"):
+        raise ValueError(f"dedup_ingest_batch: unknown method {method!r}")
+    if band_table is not None and method != "minhash":
+        raise ValueError(
+            "dedup_ingest_batch: band_table applies to method='minhash' only"
+        )
+    if on_decode_error != "fail" and method != "phash":
+        raise ValueError(
+            "dedup_ingest_batch: on_decode_error applies to method='phash' only"
+        )
+
+
 def dedup_ingest_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -114,6 +153,9 @@ def dedup_ingest_batch(
     """One trigger of the near-dup ingest — exposed at module level so
     failure-replay (foreachBatch is at-least-once) can be exercised
     directly in tests by calling it twice with the same ``batch_id``.
+    ``batch_df`` must be non-empty: its two callers (the streaming
+    twin's runner and the dedup task's incremental mode) each check
+    that once, so a trigger pays for one empty-batch job, not two.
 
     ``method`` selects the per-document state and the probe, all three
     sharing the same index/matches lifecycle (none of these methods is
@@ -192,23 +234,12 @@ def dedup_ingest_batch(
         simhash_signatures_for,
     )
 
-    if method not in ("minhash", "simhash", "editdistance", "phash"):
-        raise ValueError(f"dedup_ingest_batch: unknown method {method!r}")
+    _check_ingest_opts(method, band_table, on_decode_error)
     if n_bands is None:
         # per-method defaults: simhash ships 8x8-bit, phash 4x16-bit
         n_bands = 4 if method == "phash" else 8
-    if band_table is not None and method != "minhash":
-        raise ValueError(
-            "dedup_ingest_batch: band_table applies to method='minhash' only"
-        )
-    if on_decode_error != "fail" and method != "phash":
-        raise ValueError(
-            "dedup_ingest_batch: on_decode_error applies to method='phash' only"
-        )
     spark = batch_df.sparkSession
     db = SparkDatabase(spark)
-    if batch_df.isEmpty():
-        return
     if method == "minhash":
         state = _mh_sig_frame(
             batch_df.select("doc_id", "text"), spark, sf_dir
@@ -329,15 +360,9 @@ def dedup_ingest_batch(
         "ingest_id", F.lit(batch_id).cast("long")
     ).localCheckpoint()
     if not matches.isEmpty():
-        if db.table_exists(matches_table):
-            staging = _tmp_name(matches_table, f"_stream_{batch_id}")
-            db.drop_object(staging)
-            db.create_table(staging, matches, mode="overwrite")
-            # delete-before-append on the trigger id: replay replaces,
-            # never duplicates (Delta destinations take the MERGE path)
-            db.merge_tables(staging, matches_table, "ingest_id")
-        else:
-            db.create_table(matches_table, matches, mode="overwrite")
+        # delete-before-append on the trigger id: replay replaces,
+        # never duplicates (Delta destinations take the MERGE path)
+        db.merge_frame(matches_table, matches, "ingest_id", f"_stream_{batch_id}")
     kept = sigs.join(
         matches.select(F.col("batch_id").alias("doc_id")).distinct(),
         "doc_id",
@@ -412,9 +437,9 @@ def stream_dedup_ingest(
     and the same call becomes a keyed MERGE touching only that
     trigger's files.
     """
-    outer_session = source.sparkSession
+    _check_ingest_opts(method, band_table, method_opts.get("on_decode_error", "fail"))
 
-    def _ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def body(batch_df: DataFrame, batch_id: int, db: SparkDatabase) -> list:
         dedup_ingest_batch(
             batch_df, batch_id, index_table, matches_table, sf_dir,
             band_table=band_table, method=method, **method_opts,
@@ -424,17 +449,12 @@ def stream_dedup_ingest(
         # rename-swapped per trigger (a stale file listing there is a
         # FileNotFoundException on the outer session's next read, not
         # just stale rows), band_table appends
-        db = SparkDatabase(batch_df.sparkSession)
-        for t in (index_table, matches_table, band_table):
-            if t is not None and db.table_exists(t):
-                outer_session.catalog.refreshTable(t)
+        return [
+            t for t in (index_table, matches_table, band_table)
+            if t is not None and db.table_exists(t)
+        ]
 
-    return (
-        source.writeStream.foreachBatch(_ingest_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _twin(source, checkpoint, body)
 
 
 def stream_decontaminate(
@@ -479,14 +499,10 @@ def stream_decontaminate(
         raise ValueError(
             "stream_decontaminate: min_overlap_frac applies to method=ngram"
         )
-    outer_session = source.sparkSession
     min_ppm = None if min_overlap_frac is None else round(float(min_overlap_frac) * 1_000_000)
 
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        db = SparkDatabase(spark)
-        if batch_df.isEmpty():
-            return
+    def body(batch_df: DataFrame, batch_id: int, db: SparkDatabase) -> list:
+        spark = db.spark
         if method == "semantic":
             contaminated = semantic_contaminated_ids(
                 batch_df.select(id_column, "text"),
@@ -502,24 +518,10 @@ def stream_decontaminate(
                 id_column=id_column,
                 min_overlap_ppm=min_ppm,
             )
-        kept = batch_df.join(contaminated, id_column, "left_anti").withColumn(
-            "ingest_id", F.lit(batch_id).cast("long")
-        )
-        if db.table_exists(dst_table):
-            staging = _tmp_name(dst_table, f"_stream_{batch_id}")
-            db.drop_object(staging)
-            db.create_table(staging, kept, mode="overwrite")
-            db.merge_tables(staging, dst_table, "ingest_id")
-        else:
-            db.create_table(dst_table, kept, mode="overwrite")
-        outer_session.catalog.refreshTable(dst_table)
+        kept = batch_df.join(contaminated, id_column, "left_anti")
+        return _merge_stamped(db, dst_table, kept, batch_id)
 
-    return (
-        source.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _twin(source, checkpoint, body)
 
 
 def stream_surprisal_filter(
@@ -547,39 +549,19 @@ def stream_surprisal_filter(
     """
     from sayn_spark.functions.text import score_against_vocab
 
-    outer_session = source.sparkSession
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        db = SparkDatabase(spark)
-        if batch_df.isEmpty():
-            return
+    def body(batch_df: DataFrame, batch_id: int, db: SparkDatabase) -> list:
         work = batch_df.where(F.col("text").isNotNull())
         scored = score_against_vocab(
             work.select(F.col(id_column).alias("doc_id"), "text"),
-            spark.table(vocab_table),
+            db.spark.table(vocab_table),
         )
         keep_ids = scored.where(F.col("avg_nll") <= float(max_avg_nll)).select(
             F.col("doc_id").alias(id_column)
         )
-        kept = work.join(keep_ids, id_column, "left_semi").withColumn(
-            "ingest_id", F.lit(batch_id).cast("long")
-        )
-        if db.table_exists(dst_table):
-            staging = _tmp_name(dst_table, f"_stream_{batch_id}")
-            db.drop_object(staging)
-            db.create_table(staging, kept, mode="overwrite")
-            db.merge_tables(staging, dst_table, "ingest_id")
-        else:
-            db.create_table(dst_table, kept, mode="overwrite")
-        outer_session.catalog.refreshTable(dst_table)
+        kept = work.join(keep_ids, id_column, "left_semi")
+        return _merge_stamped(db, dst_table, kept, batch_id)
 
-    return (
-        source.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _twin(source, checkpoint, body)
 
 
 def stream_route_media(
@@ -609,31 +591,13 @@ def stream_route_media(
     — and only the typed metadata rows are written."""
     from sayn_spark.functions.multimodal import route_media_frame
 
-    outer_session = source.sparkSession
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        db = SparkDatabase(spark)
-        if batch_df.isEmpty():
-            return
+    def body(batch_df: DataFrame, batch_id: int, db: SparkDatabase) -> list:
         routed = route_media_frame(
             batch_df, id_column=id_column, payload_column=payload_column
-        ).withColumn("ingest_id", F.lit(batch_id).cast("long"))
-        if db.table_exists(dst_table):
-            staging = _tmp_name(dst_table, f"_stream_{batch_id}")
-            db.drop_object(staging)
-            db.create_table(staging, routed, mode="overwrite")
-            db.merge_tables(staging, dst_table, "ingest_id")
-        else:
-            db.create_table(dst_table, routed, mode="overwrite")
-        outer_session.catalog.refreshTable(dst_table)
+        )
+        return _merge_stamped(db, dst_table, routed, batch_id)
 
-    return (
-        source.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _twin(source, checkpoint, body)
 
 
 def stream_ann_ingest(
@@ -661,31 +625,22 @@ def stream_ann_ingest(
     from sayn_spark.functions.similarity import _ANN_LAYOUT, _stored_method
     from sayn_spark.operators.ann import ann_insert_batch
 
-    outer_session = source.sparkSession
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def body(batch_df: DataFrame, batch_id: int, db: SparkDatabase) -> list:
         vecs = batch_df.select(
             F.col(id_column).alias("vec_id"),
             F.expr(f"cast({vector_column} as array<double>)").alias("e"),
         )
-        db = SparkDatabase(spark)
-        ann_insert_batch(spark, db, index, vecs)
+        ann_insert_batch(db.spark, db, index, vecs)
         # every table an insert may append to, per the index's layout:
         # a stale {index}_sq8codes/{index}_binwords in the outer
         # session would silently drop the new vectors from the SQ8 /
         # Hamming shortlist stages of catalog searches
-        for suffix in ("_vectors", *_ANN_LAYOUT[_stored_method(db, index)]):
-            outer_session.catalog.refreshTable(f"{index}{suffix}")
+        return [
+            f"{index}{suffix}"
+            for suffix in ("_vectors", *_ANN_LAYOUT[_stored_method(db, index)])
+        ]
 
-    return (
-        source.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _twin(source, checkpoint, body)
 
 
 def stream_chunk(
@@ -711,13 +666,7 @@ def stream_chunk(
     """
     from sayn_spark.operators.chunk import chunk_frame
 
-    outer_session = source.sparkSession
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        db = SparkDatabase(spark)
-        if batch_df.isEmpty():
-            return
+    def body(batch_df: DataFrame, batch_id: int, db: SparkDatabase) -> list:
         chunks = chunk_frame(
             batch_df,
             chunk_tokens=chunk_tokens,
@@ -725,22 +674,10 @@ def stream_chunk(
             min_tokens=min_tokens,
             id_column=id_column,
             text_column=text_column,
-        ).withColumn("ingest_id", F.lit(batch_id).cast("long"))
-        if db.table_exists(dst_table):
-            staging = _tmp_name(dst_table, f"_stream_{batch_id}")
-            db.drop_object(staging)
-            db.create_table(staging, chunks, mode="overwrite")
-            db.merge_tables(staging, dst_table, "ingest_id")
-        else:
-            db.create_table(dst_table, chunks, mode="overwrite")
-        outer_session.catalog.refreshTable(dst_table)
+        )
+        return _merge_stamped(db, dst_table, chunks, batch_id)
 
-    return (
-        source.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _twin(source, checkpoint, body)
 
 
 def stream_ann_search(
@@ -772,39 +709,16 @@ def stream_ann_search(
     """
     from sayn_spark.functions.similarity import ann_catalog_search
 
-    outer_session = source.sparkSession
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        db = SparkDatabase(spark)
+    def body(batch_df: DataFrame, batch_id: int, db: SparkDatabase) -> list:
         queries = batch_df.select(
             F.col(id_column).alias("query_id"),
             F.expr(f"cast({vector_column} as array<double>)").alias("e"),
         )
         out = ann_catalog_search(
-            spark,
-            db,
-            index,
-            queries,
-            k=k,
-            nprobe=nprobe,
-            shortlist=shortlist,
-            shortlist_binary=shortlist_binary,
+            db.spark, db, index, queries,
+            k=k, nprobe=nprobe, shortlist=shortlist, shortlist_binary=shortlist_binary,
         )
-        if not db.table_exists(dst_table):
-            db.create_table(dst_table, out, mode="overwrite")
-        else:
-            staging = _tmp_name(dst_table, f"_annq_{batch_id}")
-            db.drop_object(staging)
-            db.create_table(staging, out, mode="overwrite")
-            db.merge_tables(staging, dst_table, "query_id")
-        outer_session.catalog.refreshTable(dst_table)
+        db.merge_frame(dst_table, out, "query_id", f"_annq_{batch_id}")
+        return [dst_table]
 
-    return (
-        source.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _twin(source, checkpoint, body)

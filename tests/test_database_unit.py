@@ -53,3 +53,20 @@ def test_execute_returns_last_result(spark):
     db = SparkDatabase(spark)
     result = db.execute("DROP TABLE IF EXISTS ex_t; CREATE TABLE ex_t AS SELECT 5 AS v; SELECT v FROM ex_t")
     assert [r.v for r in result.collect()] == [5]
+
+
+def test_merge_keeps_destination_column_order(spark):
+    """A parquet merge on a key that is not the first column must leave
+    the destination's columns in their order (the stamped streaming
+    twins merge on a trailing ``ingest_id``)."""
+    db = SparkDatabase(spark, use_delta=False)
+    schema = "doc_id long, text string, ingest_id long"
+    db.load_data("mco_dst", [(1, "a", 0), (2, "b", 1)], schema=schema, replace=True)
+    db.load_data("mco_src", [(3, "c", 1)], schema=schema, replace=True)
+    db.merge_tables("mco_src", "mco_dst", "ingest_id")
+    assert spark.table("mco_dst").columns == ["doc_id", "text", "ingest_id"]
+    assert sorted(tuple(r) for r in spark.table("mco_dst").collect()) == [
+        (1, "a", 0),
+        (3, "c", 1),
+    ]
+    db.drop_object("mco_dst")

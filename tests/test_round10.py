@@ -314,56 +314,28 @@ def test_ingest_stateless_docs_converge_per_method(spark):
         _drop(spark, idx, mt)
 
 
-def test_ingest_batch_validation(spark):
-    from sayn_spark.streaming.materialise import dedup_ingest_batch
+def test_ingest_batch_validation(spark, tmp_path):
+    from sayn_spark.streaming.materialise import dedup_ingest_batch, stream_dedup_ingest
 
     b = spark.createDataFrame([(1, "x")], "doc_id long, text string")
     with pytest.raises(ValueError, match="unknown method"):
         dedup_ingest_batch(b, 0, "i", "m", SF, method="jaccard")
     with pytest.raises(ValueError, match="band_table"):
         dedup_ingest_batch(b, 0, "i", "m", SF, method="simhash", band_table="bt")
-
-
-# -- streaming twin dispatch ------------------------------------------------
-
-
-def test_stream_dedup_ingest_simhash_dispatch(spark, tmp_path):
-    """The streaming twin dispatches per method: a simhash ingest
-    stream catches a wave-2 copy of a wave-1 doc against the stored
-    signature index and appends only novel signatures."""
-    from sayn_spark.streaming.materialise import stream_dedup_ingest
-
-    src = tmp_path / "docs_in"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    idx, mt = "stream_sh_idx", "stream_sh_mt"
-    _drop(spark, idx, mt)
-    base = (
-        "the quick brown fox jumps over the lazy dog while the cat "
-        "sleeps near the warm fire and the birds sing in the tall trees"
+    # the streaming twin runs the same checks before start(): a bad
+    # option fails the call even on an empty source, and no query runs
+    stream = spark.readStream.schema("doc_id long, text string").parquet(
+        str(tmp_path)
     )
-    novel = (
-        "completely different content about distributed query engines "
-        "processing enormous datasets with columnar storage vectorized "
-        "execution adaptive optimization and shuffle free joins"
-    )
-
-    def run_wave(name, rows):
-        spark.createDataFrame(rows, schema="doc_id long, text string").coalesce(
-            1
-        ).write.mode("overwrite").parquet(str(src / name))
-        stream = spark.readStream.schema("doc_id long, text string").option(
-            "recursiveFileLookup", "true"
-        ).parquet(str(src))
-        q = stream_dedup_ingest(
-            stream, idx, mt, ckpt, SF, method="simhash", max_hamming=6
+    active = len(spark.streams.active)
+    ckpt = tmp_path / "ckpt"
+    with pytest.raises(ValueError, match="unknown method"):
+        stream_dedup_ingest(stream, "i", "m", str(ckpt), SF, method="jaccard")
+    with pytest.raises(ValueError, match="band_table"):
+        stream_dedup_ingest(
+            stream, "i", "m", str(ckpt), SF, method="simhash", band_table="bt"
         )
-        q.awaitTermination(120)
-
-    run_wave("w1", [(1, base)])
-    run_wave("w2", [(101, base), (102, novel)])
-    matches = {(r.batch_id, r.corpus_id) for r in spark.table(mt).collect()}
-    assert matches == {(101, 1)}
-    assert {r.doc_id for r in spark.table(idx).collect()} == {1, 102}
-    assert spark.table(idx).columns == ["doc_id", "sig"]
-    _drop(spark, idx, mt)
+    with pytest.raises(ValueError, match="on_decode_error"):
+        stream_dedup_ingest(stream, "i", "m", str(ckpt), SF, on_decode_error="skip")
+    assert len(spark.streams.active) == active
+    assert not ckpt.exists()

@@ -308,49 +308,6 @@ def test_phash_incremental_decode_error_modes(ctx, spark):
     _drop(spark, *tables)
 
 
-def test_stream_dedup_ingest_phash_dispatch(spark, tmp_path):
-    """The streaming twin dispatches method=phash: a wave-2 re-encode
-    of a wave-1 image is caught against the stored band index and only
-    novel band state appends."""
-    from sayn_spark.functions.multimodal import bmp_encode, png_encode
-    from sayn_spark.streaming.materialise import stream_dedup_ingest
-
-    src = tmp_path / "imgs_in"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    idx, mt = "stream_ph_idx", "stream_ph_mt"
-    _drop(spark, idx, mt)
-    w, h = 16, 18
-    raws = _images(2, seed=31)
-
-    def run_wave(name, rows):
-        spark.createDataFrame(rows, schema="doc_id long, payload binary").coalesce(
-            1
-        ).write.mode("overwrite").parquet(str(src / name))
-        stream = spark.readStream.schema("doc_id long, payload binary").option(
-            "recursiveFileLookup", "true"
-        ).parquet(str(src))
-        q = stream_dedup_ingest(
-            stream, idx, mt, ckpt, SF, method="phash", max_hamming=12
-        )
-        q.awaitTermination(120)
-
-    run_wave("w1", [(1, bytearray(png_encode(raws[0], w, h)))])
-    run_wave(
-        "w2",
-        [
-            (101, bytearray(bmp_encode(raws[0], w, h))),
-            (102, bytearray(png_encode(raws[1], w, h))),
-        ],
-    )
-    assert {
-        (r.batch_id, r.corpus_id, r.hamming) for r in spark.table(mt).collect()
-    } == {(101, 1, 0)}
-    assert {r.doc_id for r in spark.table(idx).collect()} == {1, 102}
-    assert spark.table(idx).columns == ["doc_id", "ba"]
-    _drop(spark, idx, mt)
-
-
 # --- round-11 part 2: progressive JPEG (SOF2) ---------------------------
 #
 # VERDICT r10 item 1 (the r9 rollover): spectral selection + successive

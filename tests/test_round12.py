@@ -14,9 +14,9 @@
   candidate recall pigeonhole-exact to Hamming 7, ``recall:
   guaranteed`` enforces max_hamming <= n_bands - 1 at config time, and
   a stored incremental index pins its width (the simhash guard,
-  extended);
-- stream_route_media: the media-routing stage as a continuous-ingest
-  twin sharing route_media_frame with the batch pipeline task.
+  extended).
+
+The stream_route_media lifecycle test lives in tests/test_streaming.py.
 """
 
 from __future__ import annotations
@@ -380,75 +380,6 @@ def test_phash_incremental_8band_catches_reencode(spark):
             for r in spark.table(mt).collect()} == {(100, 0, 0)}
     assert {r.doc_id for r in spark.table(idx).collect()} == {0, 1}
     _drop(spark, idx, mt)
-
-
-# --- 4. streaming media routing ------------------------------------------
-
-
-def test_stream_route_media_lifecycle(spark, tmp_path):
-    """Two waves through the streaming twin: typed rows accumulate in
-    the destination (per-track duration and fps for MP4, ANMF frame
-    count/duration for WebP), and unknown (garbage / NULL) payloads
-    persist as 'unknown' rows that survive the next wave — never
-    dropped, never fatal."""
-    from sayn_spark.functions.multimodal import mp3_build, mp4_build, webp_build
-    from sayn_spark.streaming.materialise import stream_route_media
-
-    src = tmp_path / "media_in"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    dst = "stream_media_meta"
-    _drop(spark, dst)
-
-    def run_wave(name, rows):
-        spark.createDataFrame(
-            rows, schema="doc_id long, payload binary"
-        ).coalesce(1).write.mode("overwrite").parquet(str(src / name))
-        stream = spark.readStream.schema("doc_id long, payload binary").option(
-            "recursiveFileLookup", "true"
-        ).parquet(str(src))
-        q = stream_route_media(stream, dst, ckpt)
-        q.awaitTermination(120)
-
-    mp4 = mp4_build(640, 360, 10000, video_n_samples=240,
-                    video_duration_ms=8000)
-    webp = webp_build(200, 100, mode="extended", animated=True,
-                      frame_durations=(400, 500, 600))
-    run_wave("w1", [
-        (1, bytearray(mp4)),
-        (2, bytearray(webp)),
-        (3, bytearray(b"not-anything-parseable")),
-    ])
-    got = {r.doc_id: r for r in spark.table(dst).collect()}
-    assert set(got) == {1, 2, 3}
-    assert (got[1].media_type, got[1].width, got[1].height,
-            got[1].duration_ms, got[1].n_frames, got[1].fps_milli) == (
-        "video/mp4", 640, 360, 8000, 240, 30000)
-    assert (got[2].media_type, got[2].is_animated, got[2].n_frames,
-            got[2].duration_ms) == ("image/webp", 1, 3, 1500)
-    assert got[3].media_type == "unknown"
-
-    mp3 = mp3_build(80, 128, 44100, 2)  # 80 * 1152 / 44100 s ~ 2089 ms
-    from sayn_spark.functions.multimodal import jpeg_encode, wav_encode
-
-    run_wave("w2", [
-        (4, bytearray(mp3)),
-        (5, None),
-        # r13 arms: a still and a PCM clip route typed through the
-        # SAME streaming twin (no code of its own — shared frame)
-        (6, bytearray(jpeg_encode(bytes(64), 8, 8))),
-        (7, bytearray(wav_encode([0] * 24000, 16000))),  # 1500 ms
-    ])
-    got = {r.doc_id: r for r in spark.table(dst).collect()}
-    assert set(got) == {1, 2, 3, 4, 5, 6, 7}
-    assert (got[4].media_type, got[4].duration_ms) == ("audio/mpeg", 2089)
-    assert got[5].media_type == "unknown"
-    assert (got[6].media_type, got[6].width, got[6].height,
-            got[6].n_frames) == ("image/jpeg", 8, 8, 1)
-    assert (got[7].media_type, got[7].duration_ms) == ("audio/wav", 1500)
-    # the wave-1 unknown row survived the restart
-    assert got[3].media_type == "unknown"
-    _drop(spark, dst)
 
 
 def test_dedup_stream_ttl_evicts_and_readmits(spark, tmp_path):

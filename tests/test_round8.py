@@ -276,77 +276,6 @@ def test_image_gray_pixels_jpeg_decodes_and_unknown_raises():
         image_gray_pixels(b"RIFF" + b"\x00" * 32)
 
 
-def test_stream_ann_ingest_heals_cascade_layers(dedup_ctx, spark, tmp_path):
-    """Streaming vector ingest into a method=cascade index must leave
-    ALL THREE stored representations (vectors, sq8codes, binwords)
-    equal to the batch incremental insert over the same rows — the
-    de-elif'd heal chain exercised through the streaming twin."""
-    from pyspark.sql import functions as F  # noqa: F811
-
-    from sayn_spark.operators.ann import AnnIndexTask
-    from sayn_spark.streaming import stream_ann_ingest
-
-    ctx = dedup_ctx
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    seed = emb.where("vec_id < 40")
-    later = emb.where("vec_id >= 40 and vec_id < 56")
-    ctx.db.replace_table("scasc_seed", seed)
-    for index in ("scasc_s", "scasc_b"):
-        t = AnnIndexTask(
-            f"{index}_build",
-            {
-                "source": "scasc_seed",
-                "index": index,
-                "label_column": "label",
-                "method": "cascade",
-            },
-            ctx,
-        )
-        t.config()
-        t.run()
-    ctx.db.replace_table("scasc_all", seed.unionByName(later))
-    bt = AnnIndexTask(
-        "scasc_b_ins",
-        {
-            "source": "scasc_all",
-            "index": "scasc_b",
-            "label_column": "label",
-            "method": "cascade",
-            "mode": "incremental",
-        },
-        ctx,
-    )
-    bt.config()
-    bt.run()
-    src = tmp_path / "scasc_vecs"
-    src.mkdir()
-    later.coalesce(1).write.mode("overwrite").parquet(str(src / "w1"))
-    stream = spark.readStream.schema(emb.schema).option(
-        "recursiveFileLookup", "true"
-    ).parquet(str(src))
-    q = stream_ann_ingest(stream, "scasc_s", str(tmp_path / "scasc_ckpt"))
-    q.awaitTermination(180)
-
-    def snap(index):
-        vecs = sorted(
-            (r.vec_id, r.cell, tuple(r.e)) for r in spark.table(f"{index}_vectors").collect()
-        )
-        codes = sorted(
-            (r.vec_id, r.cell, tuple(r.c))
-            for r in spark.table(f"{index}_sq8codes").collect()
-        )
-        words = sorted(
-            (r.vec_id, r.cell, r.w1, r.w2)
-            for r in spark.table(f"{index}_binwords").collect()
-        )
-        return vecs, codes, words
-
-    assert snap("scasc_s") == snap("scasc_b")
-    n = seed.count() + later.count()
-    assert spark.table("scasc_s_sq8codes").count() == n
-    assert spark.table("scasc_s_binwords").count() == n
-
-
 def test_phash_task_on_decode_error(dedup_ctx, spark):
     """A corrupt payload in the corpus: on_decode_error=skip keeps the
     undecodable doc (it never becomes a candidate) and the rest dedupe

@@ -1,10 +1,15 @@
-"""Streaming tests: availableNow micro-batch runs over the testdata
-events directory; results must equal the equivalent batch queries
-(the streaming twins contract in sayn_spark/streaming/streams.py)."""
+"""Streaming tests: availableNow micro-batch runs over testdata.
+
+The query-shaped streams (sayn_spark/streaming/streams.py and
+stateful.py) must equal the equivalent batch queries.  The foreachBatch
+twins (sayn_spark/streaming/materialise.py) must leave the tables their
+batch tasks leave, and re-running a trigger with the same batch id
+(``replay_last_trigger``) must leave those tables unchanged."""
 
 from __future__ import annotations
 
 import shutil
+from pathlib import Path
 
 import pytest
 
@@ -38,6 +43,27 @@ def run_to_memory(spark, stream_df, name):
     )
     q.awaitTermination(120)
     return spark.table(name)
+
+
+def replay_last_trigger(checkpoint, start):
+    """Re-run the last committed trigger of a foreachBatch stream:
+    delete its ``commits/<N>`` marker and restart with ``start()``.
+    Spark then re-runs batch N with the same batch id and rows — the
+    at-least-once redelivery a crash between a twin's write and the
+    commit causes.  Asserts the restart really ran batch N."""
+    commits = Path(checkpoint) / "commits"
+    last = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
+    for marker in (commits / str(last), commits / f".{last}.crc"):
+        marker.unlink(missing_ok=True)
+    q = start()
+    q.awaitTermination(180)
+    assert any(
+        p["batchId"] == last and p["numInputRows"] > 0 for p in q.recentProgress
+    ), q.recentProgress
+
+
+def table_rows(spark, table):
+    return sorted(tuple(r) for r in spark.table(table).collect())
 
 
 def test_hourly_stream_matches_batch(spark, events_dir):
@@ -173,6 +199,40 @@ def test_stream_merge_into_replaces_keys(spark, tmp_path):
         (2, "b2"),
         (3, "c"),
     ]
+
+    # replay batch 2: the merge on the delete key converges
+    replay_last_trigger(ckpt, lambda: stream_merge_into(stream2, "sm_dst", "id", ckpt))
+    assert table_rows(spark, "sm_dst") == [(1, "a"), (2, "b2"), (3, "c")]
+
+
+def test_stream_merge_into_finishes_crashed_merge_swap(spark, tmp_path):
+    """A crash inside merge_tables' parquet swap — the destination
+    dropped, the merged staging table not yet renamed into place —
+    must not cost the rows merged so far: the next trigger moves the
+    staging table into place and merges its batch, instead of creating
+    the destination from the batch alone."""
+    from sayn_spark.core.database import SparkDatabase, _tmp_name
+    from sayn_spark.streaming.materialise import stream_merge_into
+
+    schema = "id long, v string"
+    db = SparkDatabase(spark)
+    swap = _tmp_name("smc_dst", "_sayn_merge")
+    for t in ("smc_dst", swap):
+        db.drop_object(t)
+    # the catalog as the crash left it: earlier rows in the swap table
+    db.create_table(swap, spark.createDataFrame([(1, "a"), (2, "b")], schema))
+    src = tmp_path / "smc_src"
+    spark.createDataFrame([(2, "b2"), (3, "c")], schema).coalesce(1).write.parquet(
+        str(src / "w1")
+    )
+    stream = spark.readStream.schema(schema).option(
+        "recursiveFileLookup", "true"
+    ).parquet(str(src))
+    q = stream_merge_into(stream, "smc_dst", "id", str(tmp_path / "smc_ckpt"))
+    q.awaitTermination(120)
+    assert table_rows(spark, "smc_dst") == [(1, "a"), (2, "b2"), (3, "c")]
+    assert not spark.catalog.tableExists(swap)
+    db.drop_object("smc_dst")
 
 
 def test_attribution_join_stream_matches_batch(spark, events_dir):
@@ -489,6 +549,11 @@ def test_decontaminate_stream_matches_batch(spark, tmp_path):
     q = stream_decontaminate(stream, "ds_eval", "ds_out", ckpt, ngram=8)
     q.awaitTermination(120)
     got = {r.doc_id for r in spark.table("ds_out").collect()}
+    before = table_rows(spark, "ds_out")
+    replay_last_trigger(
+        ckpt, lambda: stream_decontaminate(stream, "ds_eval", "ds_out", ckpt, ngram=8)
+    )
+    assert table_rows(spark, "ds_out") == before
 
     ev_h = ngram_hash_frame(spark.table("ds_eval"), "text", 8, None)
     d_h = ngram_hash_frame(docs, "text", 8, "doc_id")
@@ -538,6 +603,12 @@ def test_stream_surprisal_filter_matches_frozen_vocab_batch(spark, tmp_path):
     )
     q2 = stream_surprisal_filter(stream, "sv_vocab", "sv_out", ckpt, threshold)
     q2.awaitTermination(120)
+    before = table_rows(spark, "sv_out")
+    replay_last_trigger(
+        ckpt,
+        lambda: stream_surprisal_filter(stream, "sv_vocab", "sv_out", ckpt, threshold),
+    )
+    assert table_rows(spark, "sv_out") == before
 
     got = {r.doc_id for r in spark.table("sv_out").collect()}
     scored = score_against_vocab(docs, spark.table("sv_vocab"))
@@ -721,10 +792,10 @@ def test_ann_ingest_stream_matches_batch_insert(spark, tmp_path):
 
 
 def test_stream_chunk_matches_batch_task(spark, tmp_path):
-    """stream_chunk produces, across two waves (the second replaying
-    wave-1 rows too), exactly the chunks the batch chunk task emits
-    over the union — per-row flatMap semantics plus trigger-id merge
-    idempotence."""
+    """stream_chunk produces, across two waves, exactly the chunks the
+    batch chunk task emits over the union — per-row flatMap semantics —
+    and a replayed trigger leaves them unchanged (trigger-id merge
+    idempotence)."""
     from pyspark.sql import functions as F
 
     from sayn_spark.core.database import SparkDatabase
@@ -741,22 +812,27 @@ def test_stream_chunk_matches_batch_task(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS cks_out")
     ckpt = str(tmp_path / "ck_ckpt")
 
-    def run_wave():
+    def start():
         stream = spark.readStream.schema("doc_id long, text string").option(
             "recursiveFileLookup", "true"
         ).parquet(str(src))
-        q = stream_chunk(stream, "cks_out", ckpt, chunk_tokens=16, stride=12)
-        q.awaitTermination(120)
+        return stream_chunk(stream, "cks_out", ckpt, chunk_tokens=16, stride=12)
+
+    def run_wave():
+        start().awaitTermination(120)
 
     run_wave()
     n1 = spark.table("cks_out").count()
     assert n1 > 0
-    # replay with no new files: no growth
+    # restart with no new files: no batch runs, no growth
     run_wave()
     assert spark.table("cks_out").count() == n1
 
     w2.coalesce(1).write.mode("overwrite").parquet(str(src / "w2"))
     run_wave()
+    before = table_rows(spark, "cks_out")
+    replay_last_trigger(ckpt, start)
+    assert table_rows(spark, "cks_out") == before
     got = sorted(
         tuple(r)
         for r in spark.table("cks_out")
@@ -982,14 +1058,16 @@ def test_ann_search_stream_matches_batch_and_merges(spark, tmp_path):
     schema = "vec_id long, embedding array<float>"
     ckpt = str(tmp_path / "sas_ckpt")
 
-    def _trigger():
+    def _start():
         stream = spark.readStream.schema(schema).option(
             "recursiveFileLookup", "true"
         ).parquet(str(src))
-        q = stream_ann_search(
+        return stream_ann_search(
             stream, "sas_ix", "sas_topk", ckpt, k=3, nprobe=2
         )
-        q.awaitTermination(120)
+
+    def _trigger():
+        _start().awaitTermination(120)
 
     _trigger()
     got1 = {tuple(r) for r in spark.table("sas_topk").collect()}
@@ -1020,6 +1098,10 @@ def test_ann_search_stream_matches_batch_and_merges(spark, tmp_path):
     )
     # every query still carries exactly k rows
     assert out.groupBy("query_id").count().where("count != 3").count() == 0
+    # replay wave 2: the merge on query_id converges
+    before = table_rows(spark, "sas_topk")
+    replay_last_trigger(ckpt, _start)
+    assert table_rows(spark, "sas_topk") == before
 
 
 def test_decontaminate_stream_overlap_frac_matches_batch(spark, tmp_path):
@@ -1196,3 +1278,269 @@ def test_stream_decontaminate_method_validation(spark, tmp_path):
             stream, "e", "d", str(tmp_path / "c2"), method="semantic",
             min_overlap_frac=0.5,
         )
+
+
+# -- foreachBatch twins moved from the round-filed suites -------------------
+
+
+@pytest.fixture
+def ctx(spark, tmp_path):
+    from sayn_spark.core.compiler import Compiler
+    from sayn_spark.core.database import SparkDatabase
+    from sayn_spark.core.objects import DbObjectCompiler
+    from sayn_spark.operators import RunArguments, TaskContext
+
+    return TaskContext(
+        spark=spark,
+        db=SparkDatabase(spark),
+        compiler=Compiler(parameters={}),
+        obj_compiler=DbObjectCompiler(default_db="spark"),
+        run_arguments=RunArguments(),
+        parameters={"sf_dir": SF},
+        connections={},
+        project_dir=tmp_path,
+    )
+
+
+def _drop(spark, *tables):
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def _images(n, seed=11, w=16, h=18):
+    """n deterministic distinct random images as (doc_id, raw bytes):
+    two independent 64-bit dHashes differ ~32 bits on average, so at
+    radius 12 distinct images never false-match."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    return {
+        i: bytes(int(v) for v in rng.integers(0, 256, size=w * h))
+        for i in range(n)
+    }
+
+
+def test_stream_ann_ingest_heals_cascade_layers(ctx, spark, tmp_path):
+    """Streaming vector ingest into a method=cascade index must leave
+    ALL THREE stored representations (vectors, sq8codes, binwords)
+    equal to the batch incremental insert over the same rows — the
+    de-elif'd heal chain exercised through the streaming twin."""
+    from sayn_spark.operators.ann import AnnIndexTask
+    from sayn_spark.streaming import stream_ann_ingest
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    seed = emb.where("vec_id < 40")
+    later = emb.where("vec_id >= 40 and vec_id < 56")
+    ctx.db.replace_table("scasc_seed", seed)
+    for index in ("scasc_s", "scasc_b"):
+        t = AnnIndexTask(
+            f"{index}_build",
+            {
+                "source": "scasc_seed",
+                "index": index,
+                "label_column": "label",
+                "method": "cascade",
+            },
+            ctx,
+        )
+        t.config()
+        t.run()
+    ctx.db.replace_table("scasc_all", seed.unionByName(later))
+    bt = AnnIndexTask(
+        "scasc_b_ins",
+        {
+            "source": "scasc_all",
+            "index": "scasc_b",
+            "label_column": "label",
+            "method": "cascade",
+            "mode": "incremental",
+        },
+        ctx,
+    )
+    bt.config()
+    bt.run()
+    src = tmp_path / "scasc_vecs"
+    src.mkdir()
+    later.coalesce(1).write.mode("overwrite").parquet(str(src / "w1"))
+    stream = spark.readStream.schema(emb.schema).option(
+        "recursiveFileLookup", "true"
+    ).parquet(str(src))
+    q = stream_ann_ingest(stream, "scasc_s", str(tmp_path / "scasc_ckpt"))
+    q.awaitTermination(180)
+
+    def snap(index):
+        vecs = sorted(
+            (r.vec_id, r.cell, tuple(r.e)) for r in spark.table(f"{index}_vectors").collect()
+        )
+        codes = sorted(
+            (r.vec_id, r.cell, tuple(r.c))
+            for r in spark.table(f"{index}_sq8codes").collect()
+        )
+        words = sorted(
+            (r.vec_id, r.cell, r.w1, r.w2)
+            for r in spark.table(f"{index}_binwords").collect()
+        )
+        return vecs, codes, words
+
+    assert snap("scasc_s") == snap("scasc_b")
+    n = seed.count() + later.count()
+    assert spark.table("scasc_s_sq8codes").count() == n
+    assert spark.table("scasc_s_binwords").count() == n
+
+
+def test_stream_dedup_ingest_simhash_dispatch(spark, tmp_path):
+    """The streaming twin dispatches per method: a simhash ingest
+    stream catches a wave-2 copy of a wave-1 doc against the stored
+    signature index and appends only novel signatures."""
+    from sayn_spark.streaming.materialise import stream_dedup_ingest
+
+    src = tmp_path / "docs_in"
+    src.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    idx, mt = "stream_sh_idx", "stream_sh_mt"
+    _drop(spark, idx, mt)
+    base = (
+        "the quick brown fox jumps over the lazy dog while the cat "
+        "sleeps near the warm fire and the birds sing in the tall trees"
+    )
+    novel = (
+        "completely different content about distributed query engines "
+        "processing enormous datasets with columnar storage vectorized "
+        "execution adaptive optimization and shuffle free joins"
+    )
+
+    def run_wave(name, rows):
+        spark.createDataFrame(rows, schema="doc_id long, text string").coalesce(
+            1
+        ).write.mode("overwrite").parquet(str(src / name))
+        stream = spark.readStream.schema("doc_id long, text string").option(
+            "recursiveFileLookup", "true"
+        ).parquet(str(src))
+        q = stream_dedup_ingest(
+            stream, idx, mt, ckpt, SF, method="simhash", max_hamming=6
+        )
+        q.awaitTermination(120)
+
+    run_wave("w1", [(1, base)])
+    run_wave("w2", [(101, base), (102, novel)])
+    matches = {(r.batch_id, r.corpus_id) for r in spark.table(mt).collect()}
+    assert matches == {(101, 1)}
+    assert {r.doc_id for r in spark.table(idx).collect()} == {1, 102}
+    assert spark.table(idx).columns == ["doc_id", "sig"]
+    _drop(spark, idx, mt)
+
+
+def test_stream_dedup_ingest_phash_dispatch(spark, tmp_path):
+    """The streaming twin dispatches method=phash: a wave-2 re-encode
+    of a wave-1 image is caught against the stored band index and only
+    novel band state appends."""
+    from sayn_spark.functions.multimodal import bmp_encode, png_encode
+    from sayn_spark.streaming.materialise import stream_dedup_ingest
+
+    src = tmp_path / "imgs_in"
+    src.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    idx, mt = "stream_ph_idx", "stream_ph_mt"
+    _drop(spark, idx, mt)
+    w, h = 16, 18
+    raws = _images(2, seed=31)
+
+    def run_wave(name, rows):
+        spark.createDataFrame(rows, schema="doc_id long, payload binary").coalesce(
+            1
+        ).write.mode("overwrite").parquet(str(src / name))
+        stream = spark.readStream.schema("doc_id long, payload binary").option(
+            "recursiveFileLookup", "true"
+        ).parquet(str(src))
+        q = stream_dedup_ingest(
+            stream, idx, mt, ckpt, SF, method="phash", max_hamming=12
+        )
+        q.awaitTermination(120)
+
+    run_wave("w1", [(1, bytearray(png_encode(raws[0], w, h)))])
+    run_wave(
+        "w2",
+        [
+            (101, bytearray(bmp_encode(raws[0], w, h))),
+            (102, bytearray(png_encode(raws[1], w, h))),
+        ],
+    )
+    assert {
+        (r.batch_id, r.corpus_id, r.hamming) for r in spark.table(mt).collect()
+    } == {(101, 1, 0)}
+    assert {r.doc_id for r in spark.table(idx).collect()} == {1, 102}
+    assert spark.table(idx).columns == ["doc_id", "ba"]
+    _drop(spark, idx, mt)
+
+
+def test_stream_route_media_lifecycle(spark, tmp_path):
+    """Two waves through the streaming twin: typed rows accumulate in
+    the destination (per-track duration and fps for MP4, ANMF frame
+    count/duration for WebP), and unknown (garbage / NULL) payloads
+    persist as 'unknown' rows that survive the next wave — never
+    dropped, never fatal."""
+    from sayn_spark.functions.multimodal import mp3_build, mp4_build, webp_build
+    from sayn_spark.streaming.materialise import stream_route_media
+
+    src = tmp_path / "media_in"
+    src.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    dst = "stream_media_meta"
+    _drop(spark, dst)
+
+    def run_wave(name, rows):
+        spark.createDataFrame(
+            rows, schema="doc_id long, payload binary"
+        ).coalesce(1).write.mode("overwrite").parquet(str(src / name))
+        stream = spark.readStream.schema("doc_id long, payload binary").option(
+            "recursiveFileLookup", "true"
+        ).parquet(str(src))
+        q = stream_route_media(stream, dst, ckpt)
+        q.awaitTermination(120)
+
+    mp4 = mp4_build(640, 360, 10000, video_n_samples=240,
+                    video_duration_ms=8000)
+    webp = webp_build(200, 100, mode="extended", animated=True,
+                      frame_durations=(400, 500, 600))
+    run_wave("w1", [
+        (1, bytearray(mp4)),
+        (2, bytearray(webp)),
+        (3, bytearray(b"not-anything-parseable")),
+    ])
+    got = {r.doc_id: r for r in spark.table(dst).collect()}
+    assert set(got) == {1, 2, 3}
+    assert (got[1].media_type, got[1].width, got[1].height,
+            got[1].duration_ms, got[1].n_frames, got[1].fps_milli) == (
+        "video/mp4", 640, 360, 8000, 240, 30000)
+    assert (got[2].media_type, got[2].is_animated, got[2].n_frames,
+            got[2].duration_ms) == ("image/webp", 1, 3, 1500)
+    assert got[3].media_type == "unknown"
+
+    mp3 = mp3_build(80, 128, 44100, 2)  # 80 * 1152 / 44100 s ~ 2089 ms
+    from sayn_spark.functions.multimodal import jpeg_encode, wav_encode
+
+    run_wave("w2", [
+        (4, bytearray(mp3)),
+        (5, None),
+        # r13 arms: a still and a PCM clip route typed through the
+        # SAME streaming twin (no code of its own — shared frame)
+        (6, bytearray(jpeg_encode(bytes(64), 8, 8))),
+        (7, bytearray(wav_encode([0] * 24000, 16000))),  # 1500 ms
+    ])
+    got = {r.doc_id: r for r in spark.table(dst).collect()}
+    assert set(got) == {1, 2, 3, 4, 5, 6, 7}
+    assert (got[4].media_type, got[4].duration_ms) == ("audio/mpeg", 2089)
+    assert got[5].media_type == "unknown"
+    assert (got[6].media_type, got[6].width, got[6].height,
+            got[6].n_frames) == ("image/jpeg", 8, 8, 1)
+    assert (got[7].media_type, got[7].duration_ms) == ("audio/wav", 1500)
+    # the wave-1 unknown row survived the restart
+    assert got[3].media_type == "unknown"
+    # replay wave 2: the trigger-id merge converges
+    before = table_rows(spark, dst)
+    stream = spark.readStream.schema("doc_id long, payload binary").option(
+        "recursiveFileLookup", "true"
+    ).parquet(str(src))
+    replay_last_trigger(ckpt, lambda: stream_route_media(stream, dst, ckpt))
+    assert table_rows(spark, dst) == before
+    _drop(spark, dst)
