@@ -474,6 +474,17 @@ class SparkDatabase:
         self.create_table(staging, df, mode="overwrite", **writer_opts)
         self.merge_tables(staging, name, delete_key)
 
+    def append_frame(self, name: str, df: DataFrame, **writer_opts: Any) -> None:
+        """The append twin of merge_frame, for writers whose frame holds
+        only rows ``name`` lacks (an anti-join on the destination made
+        it): create ``name`` from ``df`` when it is missing, otherwise
+        append ``df`` when it has rows, so a run with nothing new writes
+        nothing.  ``writer_opts`` go to create_table."""
+        if not self.table_exists(name):
+            self.create_table(name, df, mode="overwrite", **writer_opts)
+        elif not df.isEmpty():
+            self.create_table(name, df, mode="append", **writer_opts)
+
     # -- data loading (ref: database/__init__.py:513-587) ---------------
 
     def load_data(

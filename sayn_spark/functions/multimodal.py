@@ -39,6 +39,7 @@ spread hot shards.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import struct
 import zlib
@@ -78,6 +79,30 @@ def with_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 # -- real stdlib container codecs (PNG / WAV) --------------------------------
 
+
+def _two_exception_contract(fmt: str, *extra: type):
+    """The crawl-facing error contract of every ``*_parse`` codec: a
+    documented scope boundary raises NotImplementedError, and a
+    truncated or corrupt payload raises ValueError("truncated or
+    corrupt <fmt> payload: ...") — IndexError and struct.error (plus
+    the codec's ``extra`` types) from malformed bytes never escape raw,
+    so media routers and ``on_decode_error: skip`` paths handle exactly
+    two exception types."""
+    low_level = (IndexError, struct.error, *extra)
+
+    def wrap(parse):
+        @functools.wraps(parse)
+        def checked(*args, **kwargs):
+            try:
+                return parse(*args, **kwargs)
+            except low_level as e:
+                raise ValueError(f"truncated or corrupt {fmt} payload: {e!r}") from e
+
+        return checked
+
+    return wrap
+
+
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 # IHDR color type -> samples per pixel
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
@@ -110,6 +135,7 @@ def png_encode(pixels: bytes, width: int, height: int) -> bytes:
     )
 
 
+@_two_exception_contract("PNG", KeyError, zlib.error)
 def png_parse(payload: bytes, want_pixels: bool = False):
     """Parse a PNG: (width, height, bit_depth, channels[, pixels]).
 
@@ -123,15 +149,6 @@ def png_parse(payload: bytes, want_pixels: bool = False):
     struct/zlib/KeyError — a crawl's routers and ``on_decode_error:
     skip`` paths depend on exactly two types (review r13: a truncated
     PNG killed the media router)."""
-    import zlib as _zlib
-
-    try:
-        return _png_parse_impl(payload, want_pixels)
-    except (IndexError, KeyError, struct.error, _zlib.error) as e:
-        raise ValueError(f"truncated or corrupt PNG payload: {e!r}") from e
-
-
-def _png_parse_impl(payload: bytes, want_pixels: bool = False):
     if payload[:8] != _PNG_SIG:
         raise NotImplementedError(
             f"payload magic {bytes(payload[:4])!r} is not PNG — JPEG "
@@ -197,6 +214,7 @@ def wav_encode(samples, sample_rate: int = 16000) -> bytes:
     )
 
 
+@_two_exception_contract("WAV")
 def wav_parse(payload: bytes, want_samples: bool = True):
     """Parse a WAV: (sample_rate, channels, bits_per_sample, samples) —
     samples as an int64 numpy array (s16le PCM decoded for real).  Walks
@@ -211,13 +229,6 @@ def wav_parse(payload: bytes, want_samples: bool = True):
 
     Two-exception contract like jpeg_parse: truncation is ValueError,
     never raw struct.error (review r13)."""
-    try:
-        return _wav_parse_impl(payload, want_samples)
-    except (IndexError, struct.error) as e:
-        raise ValueError(f"truncated or corrupt WAV payload: {e!r}") from e
-
-
-def _wav_parse_impl(payload: bytes, want_samples: bool = True):
     if bytes(payload[:4]) != b"RIFF" or bytes(payload[8:12]) != b"WAVE":
         raise NotImplementedError(
             f"payload magic {bytes(payload[:4])!r} is not RIFF/WAVE — "
@@ -278,6 +289,7 @@ def bmp_encode(pixels: bytes, width: int, height: int) -> bytes:
     return file_header + info_header + b"".join(rows)
 
 
+@_two_exception_contract("BMP")
 def bmp_parse(payload: bytes, want_pixels: bool = False):
     """Parse a BMP: (width, height, bits_per_pixel[, gray_pixels]).
 
@@ -292,13 +304,6 @@ def bmp_parse(payload: bytes, want_pixels: bool = False):
     NotImplementedError only when ``want_pixels`` asks for the
     decode.  Two-exception contract like jpeg_parse: truncation is
     ValueError, never raw struct.error (review r13)."""
-    try:
-        return _bmp_parse_impl(payload, want_pixels)
-    except (IndexError, struct.error) as e:
-        raise ValueError(f"truncated or corrupt BMP payload: {e!r}") from e
-
-
-def _bmp_parse_impl(payload: bytes, want_pixels: bool = False):
     if bytes(payload[:2]) != b"BM":
         raise NotImplementedError(
             f"payload magic {bytes(payload[:2])!r} is not BMP — plug other "
@@ -453,6 +458,7 @@ def gif_encode(pixels: bytes, width: int, height: int) -> bytes:
     return head + gct + img + bytes(blocks) + b"\x3B"
 
 
+@_two_exception_contract("GIF", KeyError)
 def gif_parse(payload: bytes, want_pixels: bool = False):
     """Parse a GIF: (width, height, n_colors[, gray_pixels]).
 
@@ -464,13 +470,6 @@ def gif_parse(payload: bytes, want_pixels: bool = False):
     documented boundary.  Two-exception contract like jpeg_parse:
     truncation is ValueError, never raw IndexError/struct.error
     (review r13)."""
-    try:
-        return _gif_parse_impl(payload, want_pixels)
-    except (IndexError, KeyError, struct.error) as e:
-        raise ValueError(f"truncated or corrupt GIF payload: {e!r}") from e
-
-
-def _gif_parse_impl(payload: bytes, want_pixels: bool = False):
     if bytes(payload[:6]) not in (b"GIF89a", b"GIF87a"):
         raise NotImplementedError(
             f"payload magic {bytes(payload[:6])!r} is not GIF"
@@ -616,6 +615,7 @@ def gif_encode_animated(frames, width: int, height: int, loop: int = 0) -> bytes
     return bytes(out)
 
 
+@_two_exception_contract("GIF", KeyError)
 def gif_frames(payload: bytes, max_frames: int = 0):
     """Decode a (possibly animated) GIF into its COMPOSITED visible
     frames: (width, height, [(delay_cs, gray_bytes), ...]) where each
@@ -642,13 +642,6 @@ def gif_frames(payload: bytes, max_frames: int = 0):
     Same two-exception contract as jpeg_parse: NotImplementedError for
     documented scope boundaries (interlacing, local palettes),
     ValueError for truncated or corrupt payloads."""
-    try:
-        return _gif_frames_impl(payload, max_frames)
-    except (IndexError, KeyError, struct.error) as e:
-        raise ValueError(f"truncated or corrupt GIF payload: {e!r}") from e
-
-
-def _gif_frames_impl(payload: bytes, max_frames: int = 0):
     import numpy as np
 
     if bytes(payload[:6]) not in (b"GIF89a", b"GIF87a"):
@@ -910,6 +903,7 @@ def mp4_build(
     return ftyp + moov + mdat
 
 
+@_two_exception_contract("MP4")
 def mp4_parse(payload: bytes):
     """Headers-only ISO-BMFF metadata: (duration_ms, n_tracks, tracks)
     where tracks = [(handler, codec_4cc, width, height,
@@ -935,13 +929,6 @@ def mp4_parse(payload: bytes):
     content.  Frame/sample decode is out of scope (ffmpeg hook).
     Two-exception contract: NotImplementedError for non-BMFF magic,
     ValueError for truncated or corrupt boxes."""
-    try:
-        return _mp4_parse_impl(payload)
-    except (IndexError, struct.error) as e:
-        raise ValueError(f"truncated or corrupt MP4 payload: {e!r}") from e
-
-
-def _mp4_parse_impl(payload: bytes):
     data = bytes(payload)
     if len(data) < 8 or data[4:8] != b"ftyp":
         raise NotImplementedError(
@@ -1178,6 +1165,7 @@ def webp_build(
     return b"RIFF" + struct.pack("<I", len(riff)) + riff
 
 
+@_two_exception_contract("WebP")
 def webp_parse(payload: bytes):
     """Headers-only WebP metadata: (width, height, codec, has_alpha,
     is_animated, n_frames, duration_ms) with codec in 'vp8' (lossy),
@@ -1197,13 +1185,6 @@ def webp_parse(payload: bytes):
     (VP8 inter-frame leading chunk), ValueError for truncated or
     corrupt containers (including an animation-flagged container with
     no ANMF frames)."""
-    try:
-        return _webp_parse_impl(payload)
-    except (IndexError, struct.error) as e:
-        raise ValueError(f"truncated or corrupt WebP payload: {e!r}") from e
-
-
-def _webp_parse_impl(payload: bytes):
     data = bytes(payload)
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WEBP":
         raise NotImplementedError(
@@ -1351,6 +1332,7 @@ def mp3_build(
     return bytes(out)
 
 
+@_two_exception_contract("MP3")
 def mp3_parse(payload: bytes):
     """Headers-only MPEG audio metadata: (duration_ms, bitrate_kbps,
     sample_rate, channels, n_frames).  Skips a leading ID3v2 tag
@@ -1366,13 +1348,6 @@ def mp3_parse(payload: bytes):
     NotImplementedError for non-MPEG-audio magic and documented scope
     boundaries (Layers I/II, free-format bitrate), ValueError for
     truncated or corrupt streams."""
-    try:
-        return _mp3_parse_impl(payload)
-    except (IndexError, struct.error) as e:
-        raise ValueError(f"truncated or corrupt MP3 payload: {e!r}") from e
-
-
-def _mp3_parse_impl(payload: bytes):
     data = bytes(payload)
     pos = 0
     if data[:3] == b"ID3":
@@ -2456,21 +2431,8 @@ def _skip_entropy(data: bytes, pos: int) -> int:
     raise ValueError("truncated JPEG: scan ends without a terminating marker")
 
 
+@_two_exception_contract("JPEG", KeyError)
 def jpeg_parse(payload: bytes, want_pixels: bool = False, want_planes: bool = False):
-    """Crawl-facing error contract around _jpeg_parse_impl (which holds
-    the full decoder docstring): NotImplementedError = a feature this
-    codec documents as out of scope (arithmetic coding, 12-bit,
-    hierarchical); ValueError = a truncated or corrupt payload —
-    low-level IndexError/KeyError/struct.error from malformed bytes
-    never escape raw, so ``on_decode_error: skip`` callers and per-row
-    error handling can rely on exactly two exception types."""
-    try:
-        return _jpeg_parse_impl(payload, want_pixels, want_planes)
-    except (IndexError, KeyError, struct.error) as e:
-        raise ValueError(f"truncated or corrupt JPEG payload: {e!r}") from e
-
-
-def _jpeg_parse_impl(payload: bytes, want_pixels: bool = False, want_planes: bool = False):
     """Parse a JPEG: (width, height, n_components[, luma]).
 
     Walks the marker stream (APPn/COM skipped by length), reads DQT /
@@ -2495,7 +2457,14 @@ def _jpeg_parse_impl(payload: bytes, want_pixels: bool = False, want_planes: boo
     every component as (comp_width, comp_height, bytes).  Arithmetic
     coding, 12-bit precision, hierarchical frames, and sampled-chroma
     layouts beyond 1x1 raise at the documented boundary (plug libjpeg
-    there)."""
+    there).
+
+    Crawl-facing error contract: NotImplementedError = a feature this
+    codec documents as out of scope (arithmetic coding, 12-bit,
+    hierarchical); ValueError = a truncated or corrupt payload —
+    low-level IndexError/KeyError/struct.error from malformed bytes
+    never escape raw, so ``on_decode_error: skip`` callers and per-row
+    error handling can rely on exactly two exception types."""
     import numpy as np
 
     if bytes(payload[:2]) != b"\xff\xd8":

@@ -76,14 +76,18 @@ _BY_CELL = (_VEC_BUCKETS, ["cell"])  # every per-vector table's bucket spec
 
 
 class AnnIndexTask(Task):
+    kind = "ann_index"
+
     def config(self) -> None:
         c = self.config_dict
-        self.source = self.compile_property(c.get("source"))
-        if not self.source:
-            raise ValueError(f"ann_index task {self.name!r} needs source")
-        self.index = self.compile_property(c.get("index"))
-        if not self.index:
-            raise ValueError(f"ann_index task {self.name!r} needs index (table prefix)")
+        self.declare_table("source", "src_value")
+        # the PHYSICAL base name all side tables derive from: routed
+        # through the dev/prod stringify like every other destination —
+        # writing the raw name would make a dev run (table_prefix: dev)
+        # rebuild the PRODUCTION index tables from dev data while the
+        # DAG believed the stringified outputs were written.
+        # ann_search derives identically.
+        self.declare_table("index", "index", output=True, needs="index (table prefix)")
         self.id_column = c.get("id_column", "vec_id")
         self.vector_column = c.get("vector_column", "embedding")
         self.label_column = c.get("label_column")
@@ -135,27 +139,12 @@ class AnnIndexTask(Task):
         # FAISS `add` path) — frozen centroids/codebook, bucketed
         # appends, anti-join replay safety.  Rebuild (mode: full) to
         # retrain the quantizers.
-        self.mode = c.get("mode", "full")
-        if self.mode not in ("full", "incremental"):
-            raise ValueError(f"ann_index task {self.name!r}: mode must be full|incremental")
-        if self.mode == "incremental" and self.refine_iters:
+        self.read_load_mode()
+        if self.incremental and self.refine_iters:
             raise ValueError(
                 f"ann_index task {self.name!r}: incremental inserts keep centroids "
                 "frozen — refine_iters requires a full rebuild"
             )
-
-        self.src_obj = self.context.obj_compiler.from_string(self.source)
-        self.sources.add(self.src_obj)
-        self.src_value = self.context.obj_compiler.src_value(self.src_obj)
-        # the PHYSICAL base name all side tables derive from: routed
-        # through the dev/prod stringify like every other destination —
-        # writing the raw name would make a dev run (table_prefix: dev)
-        # rebuild the PRODUCTION index tables from dev data while the
-        # DAG believed the stringified outputs were written
-        # (second-pass review r12).  ann_search derives identically.
-        base_obj = self.context.obj_compiler.from_string(self.index)
-        self.outputs.add(base_obj)
-        self.index = self.context.obj_compiler.out_value(base_obj)
         # declared side-table outputs derive from the STRINGIFIED base,
         # exactly like the run-time writes — stringifying the raw
         # compound name instead coincides under table_prefix but
@@ -172,11 +161,7 @@ class AnnIndexTask(Task):
 
     def _emb(self) -> DataFrame:
         df = self.context.spark.table(self.src_value)
-        for col in (self.id_column, self.vector_column):
-            if col not in df.columns:
-                raise ValueError(
-                    f"ann_index task {self.name!r}: column {col!r} not in {self.src_value}"
-                )
+        self.require_columns(df, [self.id_column, self.vector_column])
         if self.label_column:
             # the seed label becomes the BIGINT inverted-file cell key;
             # a non-numeric label would cast to NULL and every probe
@@ -222,7 +207,7 @@ class AnnIndexTask(Task):
 
     def run(self) -> None:
         db = self.context.db
-        if self.mode == "incremental":
+        if self.incremental:
             self._run_incremental()
             return
         # a full build owns exactly its method's side tables: another
@@ -442,9 +427,6 @@ class AnnIndexTask(Task):
             tmp_swap=True,
             bucket_by=_BY_CELL,
         )
-
-    def compile(self) -> None:
-        return None
 
 
 def _residual_frame(spark, index: str, vec: DataFrame) -> DataFrame:

@@ -40,17 +40,22 @@ from sayn_spark.operators.base import Task, TaskStatus
 
 
 class AnnSearchTask(Task):
+    kind = "ann_search"
+
     def config(self) -> None:
         c = self.config_dict
-        self.index = self.compile_property(c.get("index"))
-        if not self.index:
-            raise ValueError(f"ann_search task {self.name!r} needs index")
-        self.queries = self.compile_property(c.get("queries"))
-        if not self.queries:
-            raise ValueError(f"ann_search task {self.name!r} needs queries")
-        dest = self.compile_property(c.get("destination"))
-        if not dest:
-            raise ValueError(f"ann_search task {self.name!r} needs destination")
+        # the PHYSICAL index base name, derived exactly like the
+        # ann_index writer: raw-name reads would hit the prod index
+        # from a dev run.  The BASE object is the declared source — it
+        # matches ann_index's declared base output under every
+        # stringify rule (carrying the DAG edge) and is what
+        # --upstream-prod redirects; the stringified _vectors side name
+        # is declared too, mirroring ann_index's physically-named side
+        # outputs.
+        index = self.declare_table("index", "index")
+        self.sources.add(self.context.obj_compiler.from_string(f"{index}_vectors"))
+        self.declare_table("queries", "q_value")
+        self.declare_table("destination", "dst_value", output=True)
         self.k = int(c.get("k", 5))
         self.nprobe = int(c.get("nprobe", 1))
         self.shortlist = int(c.get("shortlist", 20))
@@ -75,35 +80,7 @@ class AnnSearchTask(Task):
                 )
         self.id_column = c.get("id_column", "vec_id")
         self.vector_column = c.get("vector_column", "embedding")
-
-        self.q_obj = self.context.obj_compiler.from_string(self.queries)
-        self.sources.add(self.q_obj)
-        self.q_value = self.context.obj_compiler.src_value(self.q_obj)
-        self.destination = self.context.obj_compiler.from_string(dest)
-        self.outputs.add(self.destination)
-        self.dst_value = self.context.obj_compiler.out_value(self.destination)
-        # PHYSICAL base name, derived exactly like the ann_index writer
-        # (src_value so from_prod/--upstream-prod can redirect reads):
-        # raw-name reads would hit the prod index from a dev run.  The
-        # BASE object is the declared source — it matches ann_index's
-        # declared base output under every stringify rule (carrying the
-        # DAG edge) and is what --upstream-prod flags for redirect; the
-        # stringified _vectors side name is declared too, mirroring
-        # ann_index's physically-named side outputs (advice r12).
-        self.index_obj = self.context.obj_compiler.from_string(self.index)
-        self.sources.add(self.index_obj)
-        self.index = self.context.obj_compiler.src_value(self.index_obj)
-        self.sources.add(
-            self.context.obj_compiler.from_string(f"{self.index}_vectors")
-        )
         self.status = TaskStatus.READY
-
-    def setup(self) -> None:
-        # secondary source values re-resolve once sources_from_prod is
-        # known (see base.Task.setup)
-        super().setup()
-        self.q_value = self.context.obj_compiler.src_value(self.q_obj)
-        self.index = self.context.obj_compiler.src_value(self.index_obj)
 
     def run(self) -> None:
         from sayn_spark.functions.similarity import ann_catalog_search
@@ -117,12 +94,7 @@ class AnnSearchTask(Task):
                     "run the ann_index build first"
                 )
         qdf = spark.table(self.q_value)
-        for col in (self.id_column, self.vector_column):
-            if col not in qdf.columns:
-                raise ValueError(
-                    f"ann_search task {self.name!r}: column {col!r} "
-                    f"not in {self.q_value}"
-                )
+        self.require_columns(qdf, [self.id_column, self.vector_column], self.q_value)
         queries = qdf.select(
             F.col(self.id_column).alias("query_id"),
             F.expr(f"cast({self.vector_column} as array<double>)").alias("e"),
@@ -137,7 +109,4 @@ class AnnSearchTask(Task):
             shortlist=self.shortlist,
             shortlist_binary=self.shortlist_binary,
         )
-        db.replace_table(self.dst_value, out, **self.destination_writer_opts())
-
-    def compile(self) -> None:
-        return None
+        self.write_destination(out)

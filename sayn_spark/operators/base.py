@@ -12,7 +12,7 @@ from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Any, Optional
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from sayn_spark.core.compiler import Compiler
 from sayn_spark.core.database import SparkDatabase
@@ -78,6 +78,11 @@ _NULL_TRACKER = _NullTracker()
 class Task:
     """One DAG node.  Subclasses implement setup/run/compile/test."""
 
+    # the task type as config errors name it ("dedup task 'x' needs source")
+    kind = "task"
+    # set by read_load_mode; write_destination appends when True
+    incremental = False
+
     def __init__(self, name: str, config: dict, context: TaskContext) -> None:
         self.name = name
         self.group: Optional[str] = config.get("group")
@@ -96,6 +101,8 @@ class Task:
         self.outputs: set[DbObject] = set()
         # in-file config() overrides (ref: tasks/sql.py:279-347)
         self._config_overrides: dict[str, Any] = {}
+        # attribute -> compiled name of every declare_table source
+        self._declared_sources: dict[str, str] = {}
 
     # -- src/out/config macros (ref: tasks/task_wrapper.py:438-457) -----
 
@@ -108,6 +115,36 @@ class Task:
         o = self.context.obj_compiler.from_string(obj, connection=connection, level=level)
         self.outputs.add(o)
         return self.context.obj_compiler.out_value(o)
+
+    def declare_table(
+        self, key: str, attr: str, output: bool = False, needs: Optional[str] = None
+    ) -> str:
+        """The pipeline tasks' src()/out(): Jinja-compile the table that
+        the required config key ``key`` names, register it as a source
+        (an output when ``output``), and set ``self.<attr>`` to its
+        physical name, which is also returned.  setup() resolves every
+        declared source again.  A missing key raises "<kind> task 'x'
+        needs <needs or key>"."""
+        value = self.compile_property(self.config_dict.get(key))
+        if not value:
+            raise ValueError(f"{self.kind} task {self.name!r} needs {needs or key}")
+        if output:
+            name = self.out(value)
+        else:
+            name = self.src(value)
+            self._declared_sources[attr] = value
+        setattr(self, attr, name)
+        return name
+
+    def read_load_mode(self, key: str = "mode") -> None:
+        """Read the ``full|incremental`` config key (default full) into
+        ``self.incremental``."""
+        mode = self.config_dict.get(key, "full")
+        if mode not in ("full", "incremental"):
+            raise ValueError(
+                f"{self.kind} task {self.name!r}: {key} must be full|incremental"
+            )
+        self.incremental = mode == "incremental"
 
     def config_macro(self, **kwargs: Any) -> str:
         """{{ config(...) }} mutates the task during first compile and
@@ -171,18 +208,14 @@ class Task:
         self.status = TaskStatus.READY
 
     def setup(self) -> None:
-        """Re-resolve src()-derived physical names: config() runs
+        """Resolve every declare_table source again: config() runs
         BEFORE the app computes ``sources_from_prod`` (core/app.py
         does that per-execution from the selected tasks), so a
-        config-time ``src_value`` freezes the dev name and
-        --upstream-prod would be a silent no-op for every non-SQL task
-        (second-pass review r12; the sql task gets the same effect via
-        its setup-time Jinja recompile).  Subclasses with SECONDARY
-        source values re-resolve them in their own setup() and call
-        super()."""
-        src_obj = getattr(self, "src_obj", None)
-        if src_obj is not None and getattr(self, "src_value", None) is not None:
-            self.src_value = self.context.obj_compiler.src_value(src_obj)
+        config-time name freezes the dev name and --upstream-prod
+        would be a silent no-op for every non-SQL task (the sql task
+        gets the same effect via its setup-time Jinja recompile)."""
+        for attr, value in self._declared_sources.items():
+            setattr(self, attr, self.src(value))
 
     def run(self) -> None:
         pass
@@ -194,6 +227,36 @@ class Task:
         pass
 
     # -- helpers --------------------------------------------------------
+
+    def require_columns(self, df: DataFrame, cols, table: Optional[str] = None) -> None:
+        """Raise on the first of ``cols`` (None entries skipped) that
+        ``df`` lacks, naming ``table`` (default: the source)."""
+        for col in cols:
+            if col and col not in df.columns:
+                raise ValueError(
+                    f"{self.kind} task {self.name!r}: column {col!r} not in "
+                    f"{table or self.src_value}"
+                )
+
+    def new_rows(self, df: DataFrame, id_column: str) -> DataFrame:
+        """The rows of ``df`` an incremental task still has to process:
+        those whose ``id_column`` the destination lacks.  The anti-join
+        reads only the destination's id column and goes before the
+        task's work, so rows already written are never recomputed.
+        Full tasks, and the first incremental run, get ``df`` back."""
+        if not (self.incremental and self.context.db.table_exists(self.dst_value)):
+            return df
+        seen = self.context.spark.table(self.dst_value).select(id_column)
+        return df.join(seen, id_column, "left_anti")
+
+    def write_destination(self, out: DataFrame) -> None:
+        """Full tasks replace the destination; incremental tasks append
+        ``out`` (built from new_rows) through SparkDatabase.append_frame."""
+        opts = self.destination_writer_opts()
+        if self.incremental:
+            self.context.db.append_frame(self.dst_value, out, **opts)
+        else:
+            self.context.db.replace_table(self.dst_value, out, **opts)
 
     def write_compilation_output(self, content: str, suffix: str = "sql") -> Path:
         """compile/<group>/<task>.sql (ref: tasks/task.py:321-338)."""

@@ -133,14 +133,12 @@ def cdc_chunk_frame(
 
 
 class ChunkTask(Task):
+    kind = "chunk"
+
     def config(self) -> None:
         c = self.config_dict
-        self.source = self.compile_property(c.get("source"))
-        if not self.source:
-            raise ValueError(f"chunk task {self.name!r} needs source")
-        dest = self.compile_property(c.get("destination"))
-        if not dest:
-            raise ValueError(f"chunk task {self.name!r} needs destination")
+        self.declare_table("source", "src_value")
+        self.declare_table("destination", "dst_value", output=True)
         # fixed: stride-spaced context windows (default).  cdc:
         # content-defined boundaries (q_doc_cdc_chunks) — edit-stable
         # chunking for chunk-level dedup; window params don't apply.
@@ -170,43 +168,20 @@ class ChunkTask(Task):
         # incremental: chunk only source rows whose id is not yet in
         # the destination and append — row-local (each doc chunks from
         # its own text alone), so per-batch decisions are idempotent
-        self.mode = c.get("mode", "full")
-        if self.mode not in ("full", "incremental"):
-            raise ValueError(f"chunk task {self.name!r}: mode must be full|incremental")
+        self.read_load_mode()
         self.id_column = c.get("id_column", "doc_id")
         self.text_column = c.get("text_column", "text")
         self.carry_columns = list(c.get("carry_columns", []))
-
-        self.src_obj = self.context.obj_compiler.from_string(self.source)
-        self.sources.add(self.src_obj)
-        self.src_value = self.context.obj_compiler.src_value(self.src_obj)
-        self.destination = self.context.obj_compiler.from_string(dest)
-        self.outputs.add(self.destination)
-        self.dst_value = self.context.obj_compiler.out_value(self.destination)
         self.status = TaskStatus.READY
 
     def run(self) -> None:
-        spark = self.context.spark
-        df = spark.table(self.src_value)
-        for col in [self.id_column, self.text_column, *self.carry_columns]:
-            if col not in df.columns:
-                raise ValueError(
-                    f"chunk task {self.name!r}: column {col!r} not in {self.src_value}"
-                )
+        df = self.context.spark.table(self.src_value)
+        self.require_columns(df, [self.id_column, self.text_column, *self.carry_columns])
         # incremental: restrict to new ids BEFORE tokenize/explode —
         # Catalyst does not push a semi-join below Generate, so gating
         # after the explode would re-tokenize and re-explode the whole
-        # source every run (the decontaminate task's restrict-before-
-        # work pattern).  The anti-join sees only the slim id column.
-        incremental = self.mode == "incremental" and self.context.db.table_exists(
-            self.dst_value
-        )
-        if incremental:
-            df = df.join(
-                spark.table(self.dst_value).select(self.id_column).distinct(),
-                self.id_column,
-                "left_anti",
-            )
+        # source every run.
+        df = self.new_rows(df, self.id_column)
         if self.method == "cdc":
             out = cdc_chunk_frame(
                 df,
@@ -226,18 +201,4 @@ class ChunkTask(Task):
                 text_column=self.text_column,
                 carry_columns=tuple(self.carry_columns),
             )
-        if incremental:
-            if not out.isEmpty():
-                self.context.db.create_table(
-                    self.dst_value,
-                    out,
-                    mode="append",
-                    **self.destination_writer_opts(),
-                )
-        else:
-            self.context.db.replace_table(
-                self.dst_value, out, **self.destination_writer_opts()
-            )
-
-    def compile(self) -> None:
-        return None
+        self.write_destination(out)

@@ -48,24 +48,19 @@ no n-grams and are never contaminated.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sayn_spark.functions.content_filter import contaminated_ids_frame
 from sayn_spark.operators.base import Task, TaskStatus
 
 class DecontaminateTask(Task):
+    kind = "decontaminate"
+
     def config(self) -> None:
         c = self.config_dict
-        self.source = self.compile_property(c.get("source"))
-        if not self.source:
-            raise ValueError(f"decontaminate task {self.name!r} needs source")
-        self.eval_table = self.compile_property(c.get("eval_table"))
-        if not self.eval_table:
-            raise ValueError(f"decontaminate task {self.name!r} needs eval_table")
-        dest = self.compile_property(c.get("destination"))
-        if not dest:
-            raise ValueError(f"decontaminate task {self.name!r} needs destination")
+        self.declare_table("source", "src_value")
+        self.declare_table("eval_table", "eval_value")
+        self.declare_table("destination", "dst_value", output=True)
         self.mode = c.get("mode", "drop")
         if self.mode not in ("drop", "flag"):
             raise ValueError(f"decontaminate task {self.name!r}: mode must be drop|flag")
@@ -128,58 +123,23 @@ class DecontaminateTask(Task):
         # semantics: rows admitted before an eval-table growth are not
         # re-checked — rebuild full after changing the eval set).
         # Named load_mode because ``mode`` already selects drop|flag.
-        self.load_mode = c.get("load_mode", "full")
-        if self.load_mode not in ("full", "incremental"):
-            raise ValueError(
-                f"decontaminate task {self.name!r}: load_mode must be full|incremental"
-            )
+        self.read_load_mode("load_mode")
         self.id_column = c.get("id_column", "doc_id")
         self.text_column = c.get("text_column", "text")
         self.eval_text_column = c.get("eval_text_column", self.text_column)
-
-        self.src_obj = self.context.obj_compiler.from_string(self.source)
-        self.sources.add(self.src_obj)
-        self.src_value = self.context.obj_compiler.src_value(self.src_obj)
-        self.eval_obj = self.context.obj_compiler.from_string(self.eval_table)
-        self.sources.add(self.eval_obj)
-        self.eval_value = self.context.obj_compiler.src_value(self.eval_obj)
-        self.destination = self.context.obj_compiler.from_string(dest)
-        self.outputs.add(self.destination)
-        self.dst_value = self.context.obj_compiler.out_value(self.destination)
         self.status = TaskStatus.READY
-
-    def setup(self) -> None:
-        # eval_table is a secondary source: re-resolve once
-        # sources_from_prod is known (see base.Task.setup)
-        super().setup()
-        self.eval_value = self.context.obj_compiler.src_value(self.eval_obj)
 
     def run(self) -> None:
         spark = self.context.spark
         df = spark.table(self.src_value)
         ev = spark.table(self.eval_value)
-        for col, frame, label in (
-            (self.id_column, df, "source"),
-            (self.text_column, df, "source"),
-            (self.eval_text_column, ev, "eval_table"),
-        ):
-            if col not in frame.columns:
-                raise ValueError(
-                    f"decontaminate task {self.name!r}: column {col!r} not in {label}"
-                )
-        incremental = self.load_mode == "incremental" and self.context.db.table_exists(
-            self.dst_value
-        )
-        if incremental:
-            # restrict BEFORE hashing: already-admitted docs never
-            # re-shingle (the destination holds kept rows only, so the
-            # anti-join also re-checks previously-DROPPED ids — cheap,
-            # idempotent, and self-correcting if the eval set shrank)
-            df = df.join(
-                spark.table(self.dst_value).select(self.id_column).distinct(),
-                self.id_column,
-                "left_anti",
-            )
+        self.require_columns(df, [self.id_column, self.text_column], "source")
+        self.require_columns(ev, [self.eval_text_column], "eval_table")
+        # restrict BEFORE hashing: already-admitted docs never
+        # re-shingle (the destination holds kept rows only, so the
+        # anti-join also re-checks previously-DROPPED ids — cheap,
+        # idempotent, and self-correcting if the eval set shrank)
+        df = self.new_rows(df, self.id_column)
         if self.method == "semantic":
             from sayn_spark.functions.content_filter import semantic_contaminated_ids
 
@@ -211,18 +171,4 @@ class DecontaminateTask(Task):
             ).withColumn(
                 "is_contaminated", F.coalesce("is_contaminated", F.lit(False))
             )
-        if incremental:
-            if not out.isEmpty():
-                self.context.db.create_table(
-                    self.dst_value,
-                    out,
-                    mode="append",
-                    **self.destination_writer_opts(),
-                )
-        else:
-            self.context.db.replace_table(
-                self.dst_value, out, **self.destination_writer_opts()
-            )
-
-    def compile(self) -> None:
-        return None
+        self.write_destination(out)

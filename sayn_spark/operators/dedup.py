@@ -150,14 +150,12 @@ _SPREAD_CHECKS = ("measure", "warn", "strict", "skip")
 
 
 class DedupTask(Task):
+    kind = "dedup"
+
     def config(self) -> None:
         c = self.config_dict
-        self.source = self.compile_property(c.get("source"))
-        if not self.source:
-            raise ValueError(f"dedup task {self.name!r} needs source")
-        self.mode = c.get("mode", "full")
-        if self.mode not in ("full", "incremental"):
-            raise ValueError(f"dedup task {self.name!r}: mode must be full|incremental")
+        self.declare_table("source", "src_value")
+        self.read_load_mode()
         self.method = c.get("method", "minhash")
         if self.method not in _METHODS:
             raise ValueError(
@@ -176,12 +174,12 @@ class DedupTask(Task):
         self.keep = c.get("keep", "min")
         if self.keep not in ("min", "best", "soft"):
             raise ValueError(f"dedup task {self.name!r}: keep must be min|best|soft")
-        if self.keep == "soft" and self.mode == "incremental":
+        if self.keep == "soft" and self.incremental:
             raise ValueError(
                 f"dedup task {self.name!r}: keep=soft is corpus-relative "
                 "(cluster sizes) — full mode only"
             )
-        if self.mode == "incremental":
+        if self.incremental:
             # incremental keeps FIRST-ARRIVAL docs (index order) and
             # gates matches by the method's own metric — an explicit
             # keep/score_column/verify would be silently ignored, so
@@ -461,7 +459,6 @@ class DedupTask(Task):
         if self.keep == "best" and not self.score_column:
             raise ValueError(f"dedup task {self.name!r}: keep=best needs score_column")
 
-        dest = self.compile_property(c.get("destination"))
         self.index_table = self.compile_property(c.get("index_table"))
         self.matches_table = self.compile_property(c.get("matches_table"))
         # incremental STATE tables go through the dev/prod stringify and
@@ -474,12 +471,13 @@ class DedupTask(Task):
         for attr in ("index_table", "matches_table"):
             raw = getattr(self, attr)
             if raw:
-                obj = self.context.obj_compiler.from_string(raw)
-                self.outputs.add(obj)
-                setattr(self, attr, self.context.obj_compiler.out_value(obj))
-        if self.mode == "full":
-            if not dest:
-                raise ValueError(f"dedup task {self.name!r} needs destination")
+                setattr(self, attr, self.out(raw))
+        # full mode requires the destination; incremental non-passages
+        # runs may keep only the index and matches tables
+        self.dst_value = None
+        if not self.incremental or c.get("destination"):
+            self.declare_table("destination", "dst_value", output=True)
+        if not self.incremental:
             if self.index_table or self.matches_table:
                 raise ValueError(
                     f"dedup task {self.name!r}: index/matches tables are "
@@ -502,7 +500,7 @@ class DedupTask(Task):
                     "use mode: full"
                 )
             if self.method == "passages":
-                if not (self.index_table and dest):
+                if not (self.index_table and self.dst_value):
                     raise ValueError(
                         f"dedup task {self.name!r}: incremental passages "
                         "needs index_table and destination"
@@ -518,16 +516,6 @@ class DedupTask(Task):
                     f"dedup task {self.name!r}: incremental mode needs "
                     "index_table and matches_table"
                 )
-
-        self.src_obj = self.context.obj_compiler.from_string(self.source)
-        self.sources.add(self.src_obj)
-        self.src_value = self.context.obj_compiler.src_value(self.src_obj)
-        self.destination = None
-        self.dst_value = None
-        if dest:
-            self.destination = self.context.obj_compiler.from_string(dest)
-            self.outputs.add(self.destination)
-            self.dst_value = self.context.obj_compiler.out_value(self.destination)
         self.status = TaskStatus.READY
 
     # -- helpers ---------------------------------------------------------
@@ -540,11 +528,7 @@ class DedupTask(Task):
             need = (self.id_column, self.embedding_column, self.label_column)
         else:
             need = (self.id_column, self.text_column)
-        for col in need:
-            if col not in df.columns:
-                raise ValueError(
-                    f"dedup task {self.name!r}: column {col!r} not in {self.src_value}"
-                )
+        self.require_columns(df, need)
         return df
 
     def _standard(self, df: DataFrame) -> DataFrame:
@@ -819,7 +803,7 @@ class DedupTask(Task):
     # -- execution -------------------------------------------------------
 
     def run(self) -> None:
-        if self.mode == "incremental":
+        if self.incremental:
             if self.method == "passages":
                 self._run_incremental_passages()
             else:
@@ -842,9 +826,7 @@ class DedupTask(Task):
                 ).hint("shuffle_hash"),
                 self.id_column,
             )
-            self.context.db.replace_table(
-                self.dst_value, out, **self.destination_writer_opts()
-            )
+            self.write_destination(out)
             return
         if self.method == "passages":
             from sayn_spark.functions.dedup import passage_rewrite
@@ -861,9 +843,7 @@ class DedupTask(Task):
                 ).hint("shuffle_hash"),
                 self.id_column,
             )
-            self.context.db.replace_table(
-                self.dst_value, out, **self.destination_writer_opts()
-            )
+            self.write_destination(out)
             from sayn_spark.functions.registry import release_persisted
 
             release_persisted()
@@ -877,18 +857,14 @@ class DedupTask(Task):
                 "weight_ppm",
                 F.coalesce("weight_ppm", F.lit(1000000)).cast("bigint"),
             )
-            self.context.db.replace_table(
-                self.dst_value, out, **self.destination_writer_opts()
-            )
+            self.write_destination(out)
             from sayn_spark.functions.registry import release_persisted
 
             release_persisted()
             return
         dropped = self._dropped(docs)
         kept = docs.join(dropped, self.id_column, "left_anti")
-        self.context.db.replace_table(
-            self.dst_value, kept, **self.destination_writer_opts()
-        )
+        self.write_destination(kept)
         from sayn_spark.functions.registry import release_persisted
 
         release_persisted()
@@ -960,26 +936,7 @@ class DedupTask(Task):
                 F.col("doc_id").alias(self.id_column)
             )
             novel = docs.join(kept_ids, self.id_column)
-            if db.table_exists(self.dst_value):
-                novel = novel.join(
-                    spark.table(self.dst_value).select(self.id_column),
-                    self.id_column,
-                    "left_anti",
-                )
-                if not novel.isEmpty():
-                    db.create_table(
-                        self.dst_value,
-                        novel,
-                        mode="append",
-                        **self.destination_writer_opts(),
-                    )
-            else:
-                db.create_table(
-                    self.dst_value,
-                    novel,
-                    mode="overwrite",
-                    **self.destination_writer_opts(),
-                )
+            self.write_destination(self.new_rows(novel, self.id_column))
 
     def _run_incremental_passages(self) -> None:
         """Recurring-crawl span dedup: the fingerprint index maps every
@@ -1044,10 +1001,7 @@ class DedupTask(Task):
                 new_idx = new_idx.join(
                     spark.table(self.index_table).select("h"), "h", "left_anti"
                 )
-                if not new_idx.isEmpty():
-                    db.create_table(self.index_table, new_idx, mode="append")
-            else:
-                db.create_table(self.index_table, new_idx, mode="overwrite")
+            db.append_frame(self.index_table, new_idx)
             # 2) destination append: every batch doc, text rewritten
             out = docs.drop(self.text_column).join(
                 cleaned.select(
@@ -1056,23 +1010,6 @@ class DedupTask(Task):
                 ).hint("shuffle_hash"),
                 self.id_column,
             )
-            if db.table_exists(self.dst_value):
-                if not out.isEmpty():
-                    db.create_table(
-                        self.dst_value,
-                        out,
-                        mode="append",
-                        **self.destination_writer_opts(),
-                    )
-            else:
-                db.create_table(
-                    self.dst_value,
-                    out,
-                    mode="overwrite",
-                    **self.destination_writer_opts(),
-                )
+            self.write_destination(out)
         finally:
             release_persisted()
-
-    def compile(self) -> None:  # parity with sql tasks: nothing to render
-        return None

@@ -36,7 +36,6 @@ fold, and L2 normalisation is a single array pass.  Output:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sayn_spark.operators.base import Task, TaskStatus
@@ -45,23 +44,19 @@ _TOKENS = "filter(split(lower(text), ' '), x -> x != '')"
 
 
 class EmbedTask(Task):
+    kind = "embed"
+
     def config(self) -> None:
         c = self.config_dict
-        self.source = self.compile_property(c.get("source"))
-        if not self.source:
-            raise ValueError(f"embed task {self.name!r} needs source")
-        dest = self.compile_property(c.get("destination"))
-        if not dest:
-            raise ValueError(f"embed task {self.name!r} needs destination")
+        self.declare_table("source", "src_value")
+        self.declare_table("destination", "dst_value", output=True)
         self.method = c.get("method", "feature_hash")
         if self.method not in ("feature_hash", "model"):
             raise ValueError(f"embed task {self.name!r}: method must be feature_hash|model")
         # incremental: embed only source rows whose id is not yet in the
         # destination and append — a recurring ingest never re-encodes
         # the existing corpus (at 100 TB re-embedding IS the cost)
-        self.mode = c.get("mode", "full")
-        if self.mode not in ("full", "incremental"):
-            raise ValueError(f"embed task {self.name!r}: mode must be full|incremental")
+        self.read_load_mode()
         self.id_column = c.get("id_column", "doc_id")
         self.text_column = c.get("text_column", "text")
         self.dim = int(c.get("dim", 64))
@@ -77,13 +72,6 @@ class EmbedTask(Task):
             raise ValueError(
                 f"embed task {self.name!r}: srp_dim must be in [1, dim)"
             )
-
-        self.src_obj = self.context.obj_compiler.from_string(self.source)
-        self.sources.add(self.src_obj)
-        self.src_value = self.context.obj_compiler.src_value(self.src_obj)
-        self.destination = self.context.obj_compiler.from_string(dest)
-        self.outputs.add(self.destination)
-        self.dst_value = self.context.obj_compiler.out_value(self.destination)
         self.status = TaskStatus.READY
 
     def run(self) -> None:
@@ -94,30 +82,18 @@ class EmbedTask(Task):
                 "runtime is available in this environment — use "
                 "method=feature_hash or plug the encoder in here"
             )
-        spark = self.context.spark
-        df = spark.table(self.src_value)
-        for col in (self.id_column, self.text_column):
-            if col not in df.columns:
-                raise ValueError(
-                    f"embed task {self.name!r}: column {col!r} not in {self.src_value}"
-                )
-        docs = df.select(
-            F.col(self.id_column).alias("doc_id"),
-            F.col(self.text_column).alias("text"),
-        ).where(F.col("text").isNotNull())
-        incremental = self.mode == "incremental" and self.context.db.table_exists(
-            self.dst_value
-        )
-        if incremental:
-            # only new ids get encoded; replay-safe by construction
-            # (already-appended ids leave the batch)
-            docs = docs.join(
-                spark.table(self.dst_value).select(
-                    F.col(self.id_column).alias("doc_id")
-                ),
-                "doc_id",
-                "left_anti",
+        df = self.context.spark.table(self.src_value)
+        self.require_columns(df, [self.id_column, self.text_column])
+        # only new ids get encoded; replay-safe by construction
+        # (already-appended ids leave the batch)
+        docs = (
+            self.new_rows(df, self.id_column)
+            .select(
+                F.col(self.id_column).alias("doc_id"),
+                F.col(self.text_column).alias("text"),
             )
+            .where(F.col("text").isNotNull())
+        )
         toks = docs.select("doc_id", F.explode(F.expr(_TOKENS)).alias("t"))
         bucketed = toks.select(
             "doc_id",
@@ -191,18 +167,4 @@ class EmbedTask(Task):
                 )
             )
         out = emb.select(F.col("doc_id").alias(self.id_column), "embedding")
-        if incremental:
-            if not out.isEmpty():
-                self.context.db.create_table(
-                    self.dst_value,
-                    out,
-                    mode="append",
-                    **self.destination_writer_opts(),
-                )
-        else:
-            self.context.db.replace_table(
-                self.dst_value, out, **self.destination_writer_opts()
-            )
-
-    def compile(self) -> None:
-        return None
+        self.write_destination(out)

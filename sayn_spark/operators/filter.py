@@ -111,14 +111,12 @@ _SCORERS = (
 
 
 class FilterTask(Task):
+    kind = "filter"
+
     def config(self) -> None:
         c = self.config_dict
-        self.source = self.compile_property(c.get("source"))
-        if not self.source:
-            raise ValueError(f"filter task {self.name!r} needs source")
-        dest = self.compile_property(c.get("destination"))
-        if not dest:
-            raise ValueError(f"filter task {self.name!r} needs destination")
+        self.declare_table("source", "src_value")
+        self.declare_table("destination", "dst_value", output=True)
         self.scorer = c.get("scorer", "quality")
         if self.scorer not in _SCORERS:
             raise ValueError(
@@ -129,10 +127,8 @@ class FilterTask(Task):
         # re-scores the existing corpus.  Row-local scorers only: a
         # corpus-relative scorer (surprisal trains its vocabulary on
         # the corpus) would give batch-dependent answers.
-        self.mode = c.get("mode", "full")
-        if self.mode not in ("full", "incremental"):
-            raise ValueError(f"filter task {self.name!r}: mode must be full|incremental")
-        if self.mode == "incremental" and self.scorer in ("surprisal", "dsir"):
+        self.read_load_mode()
+        if self.incremental and self.scorer in ("surprisal", "dsir"):
             # ONE carve-out: surprisal against a FROZEN reference LM
             # with an absolute threshold is per-row (the LM and the cut
             # don't depend on the scored batch), so incremental ingest
@@ -313,41 +309,13 @@ class FilterTask(Task):
                 f"filter task {self.name!r}: boundaries: approx applies to "
                 "scorer: surprisal|dsir with keep_fraction"
             )
-
-        self.src_obj = self.context.obj_compiler.from_string(self.source)
-        self.sources.add(self.src_obj)
-        self.src_value = self.context.obj_compiler.src_value(self.src_obj)
+        # the dsir target and surprisal reference corpora are DAG
+        # sources too (implicit edges, like decontaminate's eval_table)
         if self.scorer == "dsir":
-            # the target corpus is a DAG source too (implicit edge,
-            # like decontaminate's eval_table)
-            self.target_obj = self.context.obj_compiler.from_string(
-                self.compile_property(self.target_table)
-            )
-            self.sources.add(self.target_obj)
-            self.target_value = self.context.obj_compiler.src_value(self.target_obj)
+            self.declare_table("target_table", "target_value")
         if self.scorer == "surprisal" and self.reference_table:
-            self.reference_obj = self.context.obj_compiler.from_string(
-                self.compile_property(self.reference_table)
-            )
-            self.sources.add(self.reference_obj)
-            self.reference_value = self.context.obj_compiler.src_value(
-                self.reference_obj
-            )
-        self.destination = self.context.obj_compiler.from_string(dest)
-        self.outputs.add(self.destination)
-        self.dst_value = self.context.obj_compiler.out_value(self.destination)
+            self.declare_table("reference_table", "reference_value")
         self.status = TaskStatus.READY
-
-    def setup(self) -> None:
-        # dsir target / surprisal reference are secondary sources:
-        # re-resolve once sources_from_prod is known (base.Task.setup)
-        super().setup()
-        if getattr(self, "target_obj", None) is not None:
-            self.target_value = self.context.obj_compiler.src_value(self.target_obj)
-        if getattr(self, "reference_obj", None) is not None:
-            self.reference_value = self.context.obj_compiler.src_value(
-                self.reference_obj
-            )
 
     def run(self) -> None:
         from sayn_spark.functions.text import (
@@ -359,11 +327,7 @@ class FilterTask(Task):
 
         spark = self.context.spark
         df = spark.table(self.src_value)
-        if self.text_column not in df.columns:
-            raise ValueError(
-                f"filter task {self.name!r}: column {self.text_column!r} "
-                f"not in {self.src_value}"
-            )
+        self.require_columns(df, [self.text_column])
         src_cols = df.columns
         # the shared column builders read a column literally named
         # `text`; alias once, restore after.  If the source ALSO has an
@@ -375,22 +339,12 @@ class FilterTask(Task):
         work = work.withColumn("text", F.col(self.text_column)).where(
             F.col("text").isNotNull()
         )
-        incremental = (
-            self.mode == "incremental"
-            and self.context.db.table_exists(self.dst_value)
-        )
-        if self.mode == "incremental":
-            if self.id_column not in src_cols:
-                raise ValueError(
-                    f"filter task {self.name!r}: incremental needs id column "
-                    f"{self.id_column!r} in {self.src_value}"
-                )
-            if incremental:
-                work = work.join(
-                    spark.table(self.dst_value).select(self.id_column),
-                    self.id_column,
-                    "left_anti",
-                )
+        if self.incremental and self.id_column not in src_cols:
+            raise ValueError(
+                f"filter task {self.name!r}: incremental needs id column "
+                f"{self.id_column!r} in {self.src_value}"
+            )
+        work = self.new_rows(work, self.id_column)
         if self.scorer == "quality":
             scored = work.withColumn("_score", quality_score_col())
             kept = scored.where(F.col("_score") >= float(self.min_score))
@@ -825,18 +779,7 @@ class FilterTask(Task):
             out = out.drop("text")
             if clash:
                 out = out.withColumnRenamed("__sayn_orig_text__", "text")
-        if incremental:
-            if not out.isEmpty():
-                self.context.db.create_table(
-                    self.dst_value,
-                    out,
-                    mode="append",
-                    **self.destination_writer_opts(),
-                )
-        else:
-            self.context.db.replace_table(
-                self.dst_value, out, **self.destination_writer_opts()
-            )
+        self.write_destination(out)
         if self.scorer == "surprisal":
             # doc_avg_nll_frame persists the token stream for its two
             # aggregation branches; the write above consumed it
@@ -845,6 +788,3 @@ class FilterTask(Task):
             from sayn_spark.functions.registry import release_persisted
 
             release_persisted()
-
-    def compile(self) -> None:
-        return None

@@ -45,14 +45,12 @@ from sayn_spark.operators.base import Task, TaskStatus
 
 
 class MixtureTask(Task):
+    kind = "mixture"
+
     def config(self) -> None:
         c = self.config_dict
-        self.source = self.compile_property(c.get("source"))
-        if not self.source:
-            raise ValueError(f"mixture task {self.name!r} needs source")
-        dest = self.compile_property(c.get("destination"))
-        if not dest:
-            raise ValueError(f"mixture task {self.name!r} needs destination")
+        self.declare_table("source", "src_value")
+        self.declare_table("destination", "dst_value", output=True)
         self.group_column = c.get("group_column")
         if not self.group_column:
             raise ValueError(f"mixture task {self.name!r} needs group_column")
@@ -110,23 +108,12 @@ class MixtureTask(Task):
             )
         self.id_column = c.get("id_column", "doc_id")
         self.text_column = c.get("text_column", "text")
-
-        self.src_obj = self.context.obj_compiler.from_string(self.source)
-        self.sources.add(self.src_obj)
-        self.src_value = self.context.obj_compiler.src_value(self.src_obj)
-        self.destination = self.context.obj_compiler.from_string(dest)
-        self.outputs.add(self.destination)
-        self.dst_value = self.context.obj_compiler.out_value(self.destination)
         self.status = TaskStatus.READY
 
     def run(self) -> None:
         spark = self.context.spark
         df = spark.table(self.src_value)
-        for col in (self.id_column, self.text_column, self.group_column):
-            if col not in df.columns:
-                raise ValueError(
-                    f"mixture task {self.name!r}: column {col!r} not in {self.src_value}"
-                )
+        self.require_columns(df, [self.id_column, self.text_column, self.group_column])
         n_tokens = F.expr(
             f"size(filter(split(lower({self.text_column}), ' '), x -> x != ''))"
         )
@@ -257,9 +244,4 @@ class MixtureTask(Task):
                 .where(F.col("_rk") <= self.max_docs_per_group)
                 .drop("_hv", "_rk")
             )
-        self.context.db.replace_table(
-            self.dst_value, out, **self.destination_writer_opts()
-        )
-
-    def compile(self) -> None:
-        return None
+        self.write_destination(out)

@@ -34,40 +34,23 @@ from sayn_spark.operators.base import Task, TaskStatus
 
 
 class PackTask(Task):
+    kind = "pack"
+
     def config(self) -> None:
         c = self.config_dict
-        self.source = self.compile_property(c.get("source"))
-        if not self.source:
-            raise ValueError(f"pack task {self.name!r} needs source")
-        dest = self.compile_property(c.get("destination"))
-        if not dest:
-            raise ValueError(f"pack task {self.name!r} needs destination")
+        self.declare_table("source", "src_value")
+        self.declare_table("destination", "dst_value", output=True)
         self.context_window = int(c.get("context_window", 2048))
         if self.context_window < 1:
             raise ValueError(f"pack task {self.name!r}: context_window must be >= 1")
         self.shard_column = c.get("shard_column")
         self.id_column = c.get("id_column", "doc_id")
         self.text_column = c.get("text_column", "text")
-
-        self.src_obj = self.context.obj_compiler.from_string(self.source)
-        self.sources.add(self.src_obj)
-        self.src_value = self.context.obj_compiler.src_value(self.src_obj)
-        self.destination = self.context.obj_compiler.from_string(dest)
-        self.outputs.add(self.destination)
-        self.dst_value = self.context.obj_compiler.out_value(self.destination)
         self.status = TaskStatus.READY
 
     def run(self) -> None:
-        spark = self.context.spark
-        df = spark.table(self.src_value)
-        needed = [self.id_column, self.text_column] + (
-            [self.shard_column] if self.shard_column else []
-        )
-        for col in needed:
-            if col not in df.columns:
-                raise ValueError(
-                    f"pack task {self.name!r}: column {col!r} not in {self.src_value}"
-                )
+        df = self.context.spark.table(self.src_value)
+        self.require_columns(df, [self.id_column, self.text_column, self.shard_column])
         n_tokens = F.expr(
             f"size(filter(split(lower({self.text_column}), ' '), x -> x != ''))"
         )
@@ -82,9 +65,4 @@ class PackTask(Task):
                 / self.context_window
             ).cast("bigint"),
         )
-        self.context.db.replace_table(
-            self.dst_value, out, **self.destination_writer_opts()
-        )
-
-    def compile(self) -> None:
-        return None
+        self.write_destination(out)

@@ -65,14 +65,12 @@ def hash_sample_predicate(
 
 
 class SampleTask(Task):
+    kind = "sample"
+
     def config(self) -> None:
         c = self.config_dict
-        self.source = self.compile_property(c.get("source"))
-        if not self.source:
-            raise ValueError(f"sample task {self.name!r} needs source")
-        dest = self.compile_property(c.get("destination"))
-        if not dest:
-            raise ValueError(f"sample task {self.name!r} needs destination")
+        self.declare_table("source", "src_value")
+        self.declare_table("destination", "dst_value", output=True)
         self.method = c.get("method", "hash")
         if self.method not in _METHODS:
             raise ValueError(
@@ -118,64 +116,27 @@ class SampleTask(Task):
         # incremental == full rebuild over the union, replay-safe).
         # Weighted is corpus-relative (the top-k depends on every row),
         # so it rejects incremental like the surprisal scorer does.
-        self.mode = c.get("mode", "full")
-        if self.mode not in ("full", "incremental"):
-            raise ValueError(
-                f"sample task {self.name!r}: mode must be full|incremental"
-            )
-        if self.mode == "incremental" and self.method != "hash":
+        self.read_load_mode()
+        if self.incremental and self.method != "hash":
             raise ValueError(
                 f"sample task {self.name!r}: method weighted is corpus-relative "
                 "(the top-k depends on every row) — incremental runs would keep "
                 "rows a full run wouldn't; rebuild full instead"
             )
-
-        self.src_obj = self.context.obj_compiler.from_string(self.source)
-        self.sources.add(self.src_obj)
-        self.src_value = self.context.obj_compiler.src_value(self.src_obj)
-        self.destination = self.context.obj_compiler.from_string(dest)
-        self.outputs.add(self.destination)
-        self.dst_value = self.context.obj_compiler.out_value(self.destination)
         self.status = TaskStatus.READY
 
-    def _require_columns(self, df, cols) -> None:
-        missing = [c for c in cols if c and c not in df.columns]
-        if missing:
-            raise ValueError(
-                f"sample task {self.name!r}: columns {missing} not in "
-                f"{self.src_value} (has {df.columns})"
-            )
-
     def run(self) -> None:
-        spark = self.context.spark
-        db = self.context.db
-        df = spark.table(self.src_value)
+        df = self.context.spark.table(self.src_value)
         if self.method == "hash":
-            self._require_columns(df, [self.id_column, self.stratify_by])
-            if self.mode == "incremental" and db.table_exists(self.dst_value):
-                # restrict to unseen ids BEFORE filtering (nothing but
-                # the slim id column of the destination moves), then
-                # append — the predicate is per-row, so the result is
-                # identical to a full rebuild over the union
-                seen = spark.table(self.dst_value).select(self.id_column)
-                new = self._run_hash(df.join(seen, self.id_column, "left_anti"))
-                if not new.isEmpty():
-                    db.create_table(
-                        self.dst_value,
-                        new,
-                        mode="append",
-                        **self.destination_writer_opts(),
-                    )
-                return
-            out = self._run_hash(df)
+            self.require_columns(df, [self.id_column, self.stratify_by])
+            # incremental: restrict to unseen ids BEFORE filtering, then
+            # append — the predicate is per-row, so the result is
+            # identical to a full rebuild over the union
+            out = self._run_hash(self.new_rows(df, self.id_column))
         else:
-            self._require_columns(
-                df, [self.id_column, self.weight_column, self.group_by]
-            )
+            self.require_columns(df, [self.id_column, self.weight_column, self.group_by])
             out = self._run_weighted(df)
-        self.context.db.replace_table(
-            self.dst_value, out, **self.destination_writer_opts()
-        )
+        self.write_destination(out)
 
     def _run_hash(self, df):
         # per-row modulus: the stratum's rate when given, else rate_in —
@@ -217,6 +178,3 @@ class SampleTask(Task):
             .where(F.col("_rk") <= self.k)
             .drop("_rk")
         )
-
-    def compile(self) -> None:
-        return None

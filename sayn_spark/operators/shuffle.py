@@ -30,36 +30,22 @@ from sayn_spark.operators.base import Task, TaskStatus
 
 
 class ShuffleTask(Task):
+    kind = "shuffle"
+
     def config(self) -> None:
         c = self.config_dict
-        self.source = self.compile_property(c.get("source"))
-        if not self.source:
-            raise ValueError(f"shuffle task {self.name!r} needs source")
-        dest = self.compile_property(c.get("destination"))
-        if not dest:
-            raise ValueError(f"shuffle task {self.name!r} needs destination")
+        self.declare_table("source", "src_value")
+        self.declare_table("destination", "dst_value", output=True)
         self.seed = int(c.get("seed", 0))
         self.n_shards = int(c.get("n_shards", 64))
         if self.n_shards < 1:
             raise ValueError(f"shuffle task {self.name!r}: n_shards must be >= 1")
         self.id_column = c.get("id_column", "doc_id")
-
-        self.src_obj = self.context.obj_compiler.from_string(self.source)
-        self.sources.add(self.src_obj)
-        self.src_value = self.context.obj_compiler.src_value(self.src_obj)
-        self.destination = self.context.obj_compiler.from_string(dest)
-        self.outputs.add(self.destination)
-        self.dst_value = self.context.obj_compiler.out_value(self.destination)
         self.status = TaskStatus.READY
 
     def run(self) -> None:
-        spark = self.context.spark
-        df = spark.table(self.src_value)
-        if self.id_column not in df.columns:
-            raise ValueError(
-                f"shuffle task {self.name!r}: column {self.id_column!r} "
-                f"not in {self.src_value}"
-            )
+        df = self.context.spark.table(self.src_value)
+        self.require_columns(df, [self.id_column])
         hv = F.expr(
             f"cast(conv(substr(md5(concat('{self.seed}|', "
             f"cast({self.id_column} as string))), 1, 15), 16, 10) as bigint)"
@@ -70,9 +56,4 @@ class ShuffleTask(Task):
             .repartition(self.n_shards, "shard")
             .sortWithinPartitions("hv")
         )
-        self.context.db.replace_table(
-            self.dst_value, out, **self.destination_writer_opts()
-        )
-
-    def compile(self) -> None:
-        return None
+        self.write_destination(out)

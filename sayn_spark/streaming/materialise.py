@@ -21,6 +21,8 @@ replaces its own rows.
 
 from __future__ import annotations
 
+import inspect
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -437,6 +439,12 @@ def stream_dedup_ingest(
     and the same call becomes a keyed MERGE touching only that
     trigger's files.
     """
+    # bind before start(): a misspelt option (max_haming=6) is a
+    # TypeError here, not inside the first non-empty trigger
+    inspect.signature(dedup_ingest_batch).bind(
+        source, 0, index_table, matches_table, sf_dir,
+        band_table=band_table, method=method, **method_opts,
+    )
     _check_ingest_opts(method, band_table, method_opts.get("on_decode_error", "fail"))
 
     def body(batch_df: DataFrame, batch_id: int, db: SparkDatabase) -> list:

@@ -376,6 +376,88 @@ def test_upstream_prod_reads_prod_names(spark, tmp_path):
     assert [r.env for r in spark.table("updev_child").collect()] == ["dev"]
 
 
+# every source a pipeline task declares, as (attribute, declared name):
+# the primary source and the secondary ones (decontaminate's eval_table,
+# filter's dsir target and surprisal reference, ann_search's queries
+# and index)
+_PIPELINE_SOURCES = {
+    "ann_index": ({"source": "vecs", "index": "idx"}, {"src_value": "vecs"}),
+    "ann_search": (
+        {"index": "idx", "queries": "probes", "destination": "out"},
+        {"index": "idx", "q_value": "probes"},
+    ),
+    "chunk": ({"source": "docs", "destination": "out"}, {"src_value": "docs"}),
+    "decontaminate": (
+        {"source": "docs", "eval_table": "evals", "destination": "out"},
+        {"src_value": "docs", "eval_value": "evals"},
+    ),
+    "dedup": (
+        {"source": "docs", "destination": "out", "method": "exact"},
+        {"src_value": "docs"},
+    ),
+    "embed": ({"source": "docs", "destination": "out"}, {"src_value": "docs"}),
+    "filter-dsir": (
+        {"source": "docs", "destination": "out", "scorer": "dsir",
+         "target_table": "trusted", "keep_fraction": 0.5},
+        {"src_value": "docs", "target_value": "trusted"},
+    ),
+    "filter-surprisal": (
+        {"source": "docs", "destination": "out", "scorer": "surprisal",
+         "reference_table": "ref_corpus", "max_avg_nll": 5.0},
+        {"src_value": "docs", "reference_value": "ref_corpus"},
+    ),
+    "mixture": (
+        {"source": "docs", "destination": "out", "group_column": "lang"},
+        {"src_value": "docs"},
+    ),
+    "pack": ({"source": "docs", "destination": "out"}, {"src_value": "docs"}),
+    "sample": (
+        {"source": "docs", "destination": "out", "rate_in": 2},
+        {"src_value": "docs"},
+    ),
+    "shuffle": ({"source": "docs", "destination": "out"}, {"src_value": "docs"}),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_PIPELINE_SOURCES))
+def test_upstream_prod_applies_to_pipeline_tasks(spark, tmp_path, case):
+    """--upstream-prod must redirect every source a pipeline task reads:
+    config() runs before the app computes sources_from_prod, so a name
+    frozen at config time would make the flag a silent no-op — setup()
+    resolves each declared source again.  Outputs keep their dev
+    names."""
+    from sayn_spark.core.compiler import Compiler
+    from sayn_spark.core.database import SparkDatabase
+    from sayn_spark.core.objects import DbObjectCompiler
+    from sayn_spark.operators import TASK_TYPES, TaskContext
+
+    config, sources = _PIPELINE_SOURCES[case]
+    oc = DbObjectCompiler(default_db="spark", stringify={"table_prefix": "dev"})
+    ctx = TaskContext(
+        spark=spark,
+        db=SparkDatabase(spark),
+        compiler=Compiler(parameters={}),
+        obj_compiler=oc,
+        run_arguments=RunArguments(upstream_prod=True),
+        parameters={},
+        connections={},
+        project_dir=tmp_path,
+    )
+    t = TASK_TYPES[case.split("-")[0]]("up", dict(config), ctx)
+    t.config()
+    for attr, name in sources.items():
+        assert getattr(t, attr) == f"dev_{name}"  # config-time: dev name
+    # the app marks the upstreams as prod-sourced AFTER config
+    oc.sources_from_prod = set(t.sources)
+    t.setup()
+    for attr, name in sources.items():
+        assert getattr(t, attr) == name  # prod name after re-resolve
+    if "destination" in config:
+        assert t.dst_value == "dev_out"
+    else:
+        assert t.index == "dev_idx"  # ann_index's output prefix
+
+
 def test_upstream_prod_double_compile_exactness(spark, tmp_path):
     """The double-compile contract, asserted on the compiled SQL TEXT
     (ref: tasks/task_wrapper.py:324-331 + tasks/sql.py:349-351):

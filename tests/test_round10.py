@@ -337,5 +337,10 @@ def test_ingest_batch_validation(spark, tmp_path):
         )
     with pytest.raises(ValueError, match="on_decode_error"):
         stream_dedup_ingest(stream, "i", "m", str(ckpt), SF, on_decode_error="skip")
+    # a misspelt option is bound against dedup_ingest_batch's signature
+    with pytest.raises(TypeError, match="max_haming"):
+        stream_dedup_ingest(
+            stream, "i", "m", str(ckpt), SF, method="simhash", max_haming=6
+        )
     assert len(spark.streams.active) == active
     assert not ckpt.exists()

@@ -497,41 +497,6 @@ def test_state_tables_respect_dev_stringify(spark, tmp_path):
           "dev_sp_ann_centroids", "dev_sp_ann_vectors", "dev_sp_vecs")
 
 
-def test_upstream_prod_applies_to_pipeline_tasks(spark, tmp_path):
-    """--upstream-prod must redirect non-SQL tasks too: config() runs
-    before the app computes sources_from_prod, so the config-time
-    src_value freeze made the flag a silent no-op for every pipeline
-    task type (second-pass review r12) — setup() now re-resolves."""
-    from sayn_spark.core.compiler import Compiler
-    from sayn_spark.core.database import SparkDatabase
-    from sayn_spark.core.objects import DbObjectCompiler
-    from sayn_spark.operators import RunArguments, TaskContext
-    from sayn_spark.operators.dedup import DedupTask
-
-    oc = DbObjectCompiler(default_db="spark", stringify={"table_prefix": "dev"})
-    ctx = TaskContext(
-        spark=spark,
-        db=SparkDatabase(spark),
-        compiler=Compiler(parameters={}),
-        obj_compiler=oc,
-        run_arguments=RunArguments(upstream_prod=True),
-        parameters={"sf_dir": SF},
-        connections={},
-        project_dir=tmp_path,
-    )
-    t = DedupTask(
-        "up", {"source": "docs", "destination": "out", "method": "exact"}, ctx
-    )
-    t.config()
-    assert t.src_value == "dev_docs"  # config-time: dev name
-    # the app marks the upstream as prod-sourced AFTER config
-    oc.sources_from_prod = {t.src_obj}
-    t.setup()
-    assert t.src_value == "docs"  # prod name after re-resolve
-    # outputs stay dev-named regardless
-    assert t.dst_value == "dev_out"
-
-
 # --- 5. core/plans second-pass review fixes ------------------------------
 
 
