@@ -92,33 +92,27 @@ HEADLINE = [
 ]
 
 
-def _bench_dedup_task(spark, sf_dir: str) -> None:
-    """End-to-end YAML-task-layer benchmark (VERDICT r5 item 6): one
-    cold incremental minhash dedup task run — signature build, band
-    probe, catalog index/band/matches/destination writes, heal scans,
-    anti-join replay guards — so task-layer overhead is tracked
-    round-over-round, not just the registered query's plan.  State
-    tables are dropped before each run (the cost measured IS the
-    fresh-ingest path); the source table is set up once outside the
-    timing loop by main()."""
+def _drop_tables(spark, *tables: str) -> None:
+    """Drop bench tables from the catalog AND the warehouse: an
+    interrupted bench can leave an orphaned managed-table directory
+    (catalog entry gone, files present) that blocks saveAsTable with
+    LOCATION_ALREADY_EXISTS."""
+    import shutil
+
+    wh = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix("file:")
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        if wh:
+            shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
+
+
+def _run_task(spark, task_cls, name: str, config: dict) -> None:
+    """Configure and run one pipeline task on a bare TaskContext."""
     from sayn_spark.core.compiler import Compiler
     from sayn_spark.core.database import SparkDatabase
     from sayn_spark.core.objects import DbObjectCompiler
     from sayn_spark.operators import RunArguments, TaskContext
-    from sayn_spark.operators.dedup import DedupTask
 
-    import shutil
-
-    wh = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix("file:")
-    for t in (
-        "bench_dd_idx",
-        "bench_dd_idx_bands",
-        "bench_dd_mt",
-        "bench_dd_out",
-    ):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        if wh:  # clear orphaned dirs from interrupted runs
-            shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
     ctx = TaskContext(
         spark=spark,
         db=SparkDatabase(spark),
@@ -129,7 +123,26 @@ def _bench_dedup_task(spark, sf_dir: str) -> None:
         connections={},
         project_dir=".",
     )
-    task = DedupTask(
+    task = task_cls(name, config, ctx)
+    task.config()
+    task.run()
+
+
+def _bench_dedup_task(spark, sf_dir: str) -> None:
+    """End-to-end YAML-task-layer benchmark (VERDICT r5 item 6): one
+    cold incremental minhash dedup task run — signature build, band
+    probe, catalog index/band/matches/destination writes, heal scans,
+    anti-join replay guards — so task-layer overhead is tracked
+    round-over-round, not just the registered query's plan.  State
+    tables are dropped before each run (the cost measured IS the
+    fresh-ingest path); the source table is set up once outside the
+    timing loop by main()."""
+    from sayn_spark.operators.dedup import DedupTask
+
+    _drop_tables(spark, "bench_dd_idx", "bench_dd_idx_bands", "bench_dd_mt", "bench_dd_out")
+    _run_task(
+        spark,
+        DedupTask,
         "bench_dedup",
         {
             "source": "bench_dedup_src",
@@ -140,10 +153,7 @@ def _bench_dedup_task(spark, sf_dir: str) -> None:
             "matches_table": "bench_dd_mt",
             "destination": "bench_dd_out",
         },
-        ctx,
     )
-    task.config()
-    task.run()
 
 
 def _bench_filter_task(spark, sf_dir: str) -> None:
@@ -153,29 +163,12 @@ def _bench_filter_task(spark, sf_dir: str) -> None:
     the hottest pipeline stage after dedup has a task-layer number, not
     just its registered query's.  The destination is dropped before
     each run; the source table is set up once by _setup_task_bench."""
-    import shutil
-
-    from sayn_spark.core.compiler import Compiler
-    from sayn_spark.core.database import SparkDatabase
-    from sayn_spark.core.objects import DbObjectCompiler
-    from sayn_spark.operators import RunArguments, TaskContext
     from sayn_spark.operators.filter import FilterTask
 
-    wh = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix("file:")
-    spark.sql("DROP TABLE IF EXISTS bench_filter_out")
-    if wh:
-        shutil.rmtree(os.path.join(wh, "bench_filter_out"), ignore_errors=True)
-    ctx = TaskContext(
-        spark=spark,
-        db=SparkDatabase(spark),
-        compiler=Compiler(parameters={}),
-        obj_compiler=DbObjectCompiler(default_db="spark"),
-        run_arguments=RunArguments(),
-        parameters={},
-        connections={},
-        project_dir=".",
-    )
-    task = FilterTask(
+    _drop_tables(spark, "bench_filter_out")
+    _run_task(
+        spark,
+        FilterTask,
         "bench_filter",
         {
             "source": "bench_dedup_src",
@@ -183,10 +176,7 @@ def _bench_filter_task(spark, sf_dir: str) -> None:
             "scorer": "gopher",
             "min_words": 10,
         },
-        ctx,
     )
-    task.config()
-    task.run()
 
 
 def _bench_ann_search_task(spark, sf_dir: str) -> None:
@@ -195,29 +185,12 @@ def _bench_ann_search_task(spark, sf_dir: str) -> None:
     probe routing, frozen-grid query quantization, the integer
     symmetric scan, exact re-rank, destination tmp-swap write.  The
     destination is dropped before each run."""
-    import shutil
-
-    from sayn_spark.core.compiler import Compiler
-    from sayn_spark.core.database import SparkDatabase
-    from sayn_spark.core.objects import DbObjectCompiler
-    from sayn_spark.operators import RunArguments, TaskContext
     from sayn_spark.operators.ann_search import AnnSearchTask
 
-    wh = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix("file:")
-    spark.sql("DROP TABLE IF EXISTS bench_ann_topk")
-    if wh:
-        shutil.rmtree(os.path.join(wh, "bench_ann_topk"), ignore_errors=True)
-    ctx = TaskContext(
-        spark=spark,
-        db=SparkDatabase(spark),
-        compiler=Compiler(parameters={}),
-        obj_compiler=DbObjectCompiler(default_db="spark"),
-        run_arguments=RunArguments(),
-        parameters={},
-        connections={},
-        project_dir=".",
-    )
-    task = AnnSearchTask(
+    _drop_tables(spark, "bench_ann_topk")
+    _run_task(
+        spark,
+        AnnSearchTask,
         "bench_ann_search",
         {
             "index": "bench_ann_ix",
@@ -227,10 +200,7 @@ def _bench_ann_search_task(spark, sf_dir: str) -> None:
             "nprobe": 2,
             "shortlist": 20,
         },
-        ctx,
     )
-    task.config()
-    task.run()
 
 
 def _bench_ann_cascade_task(spark, sf_dir: str) -> None:
@@ -238,29 +208,12 @@ def _bench_ann_cascade_task(spark, sf_dir: str) -> None:
     one catalog-dispatched run against the method=cascade index built
     once by _setup_task_bench — Hamming tier over the packed words,
     SQ8 re-rank, exact top-k, destination tmp-swap write."""
-    import shutil
-
-    from sayn_spark.core.compiler import Compiler
-    from sayn_spark.core.database import SparkDatabase
-    from sayn_spark.core.objects import DbObjectCompiler
-    from sayn_spark.operators import RunArguments, TaskContext
     from sayn_spark.operators.ann_search import AnnSearchTask
 
-    wh = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix("file:")
-    spark.sql("DROP TABLE IF EXISTS bench_casc_topk")
-    if wh:
-        shutil.rmtree(os.path.join(wh, "bench_casc_topk"), ignore_errors=True)
-    ctx = TaskContext(
-        spark=spark,
-        db=SparkDatabase(spark),
-        compiler=Compiler(parameters={}),
-        obj_compiler=DbObjectCompiler(default_db="spark"),
-        run_arguments=RunArguments(),
-        parameters={},
-        connections={},
-        project_dir=".",
-    )
-    task = AnnSearchTask(
+    _drop_tables(spark, "bench_casc_topk")
+    _run_task(
+        spark,
+        AnnSearchTask,
         "bench_ann_cascade",
         {
             "index": "bench_casc_ix",
@@ -271,10 +224,7 @@ def _bench_ann_cascade_task(spark, sf_dir: str) -> None:
             "shortlist": 20,
             "shortlist_binary": 50,
         },
-        ctx,
     )
-    task.config()
-    task.run()
 
 
 def _bench_dedup_semantic_task(spark, sf_dir: str) -> None:
@@ -282,29 +232,12 @@ def _bench_dedup_semantic_task(spark, sf_dir: str) -> None:
     method=semantic): one cold run over the embeddings table built by
     _setup_task_bench — label-centroid quantizer, in-cell Gram-matrix
     cosine, per-pair keep=min drop, destination tmp-swap write."""
-    import shutil
-
-    from sayn_spark.core.compiler import Compiler
-    from sayn_spark.core.database import SparkDatabase
-    from sayn_spark.core.objects import DbObjectCompiler
-    from sayn_spark.operators import RunArguments, TaskContext
     from sayn_spark.operators.dedup import DedupTask
 
-    wh = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix("file:")
-    spark.sql("DROP TABLE IF EXISTS bench_semdd_out")
-    if wh:
-        shutil.rmtree(os.path.join(wh, "bench_semdd_out"), ignore_errors=True)
-    ctx = TaskContext(
-        spark=spark,
-        db=SparkDatabase(spark),
-        compiler=Compiler(parameters={}),
-        obj_compiler=DbObjectCompiler(default_db="spark"),
-        run_arguments=RunArguments(),
-        parameters={},
-        connections={},
-        project_dir=".",
-    )
-    task = DedupTask(
+    _drop_tables(spark, "bench_semdd_out")
+    _run_task(
+        spark,
+        DedupTask,
         "bench_semdd",
         {
             "source": "bench_ann_src",
@@ -312,10 +245,7 @@ def _bench_dedup_semantic_task(spark, sf_dir: str) -> None:
             "method": "semantic",
             "id_column": "vec_id",
         },
-        ctx,
     )
-    task.config()
-    task.run()
 
 
 TASK_BENCH = {
@@ -418,68 +348,41 @@ def _sentinel(spark, sf_dir: str) -> None:
 
 
 def _setup_task_bench(spark, sf_dir: str) -> None:
-    import shutil
-
     from sayn_spark.core.database import SparkDatabase
+    from sayn_spark.operators.ann import AnnIndexTask
 
-    # a previous interrupted bench can leave an orphaned managed-table
-    # directory (catalog entry gone, files present) that blocks
-    # saveAsTable with LOCATION_ALREADY_EXISTS — clear both layers
-    spark.sql("DROP TABLE IF EXISTS bench_dedup_src")
-    wh = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix("file:")
-    if wh:
-        shutil.rmtree(os.path.join(wh, "bench_dedup_src"), ignore_errors=True)
+    _drop_tables(
+        spark, "bench_dedup_src", "bench_ann_src", "bench_ann_queries",
+        "bench_ann_ix_centroids", "bench_ann_ix_vectors", "bench_ann_ix_sq8grid",
+        "bench_ann_ix_sq8codes", "bench_casc_ix_centroids", "bench_casc_ix_vectors",
+        "bench_casc_ix_sq8grid", "bench_casc_ix_sq8codes", "bench_casc_ix_binwords",
+    )
+    db = SparkDatabase(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
-    SparkDatabase(spark).replace_table("bench_dedup_src", docs)
+    db.replace_table("bench_dedup_src", docs)
     # one ivfsq8 index + a 50-row query table for task_ann_search_sq8
     # (built once here — the benched cost is the SEARCH task run)
-    from sayn_spark.core.compiler import Compiler
-    from sayn_spark.core.objects import DbObjectCompiler
-    from sayn_spark.operators import RunArguments, TaskContext
-    from sayn_spark.operators.ann import AnnIndexTask
-
-    for t in ("bench_ann_src", "bench_ann_queries", "bench_ann_ix_centroids",
-              "bench_ann_ix_vectors", "bench_ann_ix_sq8grid",
-              "bench_ann_ix_sq8codes", "bench_casc_ix_centroids",
-              "bench_casc_ix_vectors", "bench_casc_ix_sq8grid",
-              "bench_casc_ix_sq8codes", "bench_casc_ix_binwords"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        if wh:
-            shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    db = SparkDatabase(spark)
     db.replace_table("bench_ann_src", emb)
     db.replace_table("bench_ann_queries", emb.where("vec_id < 50"))
-    ctx = TaskContext(
-        spark=spark,
-        db=db,
-        compiler=Compiler(parameters={}),
-        obj_compiler=DbObjectCompiler(default_db="spark"),
-        run_arguments=RunArguments(),
-        parameters={},
-        connections={},
-        project_dir=".",
-    )
-    ix = AnnIndexTask(
+    _run_task(
+        spark,
+        AnnIndexTask,
         "bench_ann_build",
         {"source": "bench_ann_src", "index": "bench_ann_ix",
          "label_column": "label", "method": "ivfsq8"},
-        ctx,
     )
-    ix.config()
-    ix.run()
     # a second, cascade-method index for task_ann_cascade (built once —
     # the benched cost is the three-tier SEARCH run)
-    casc = AnnIndexTask(
+    _run_task(
+        spark,
+        AnnIndexTask,
         "bench_casc_build",
         {"source": "bench_ann_src", "index": "bench_casc_ix",
          "label_column": "label", "method": "cascade"},
-        ctx,
     )
-    casc.config()
-    casc.run()
 
 
 def main() -> None:

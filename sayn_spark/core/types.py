@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import datetime as dt
 import decimal
-from typing import Any, Optional, Sequence
+from typing import Optional, Sequence
 
 from pyspark.sql import types as T
 
@@ -109,17 +109,3 @@ def schema_from_ddl_columns(columns: Sequence[dict]) -> T.StructType:
             )
         )
     return T.StructType(fields)
-
-
-def coerce_records(records: Sequence[dict], schema: T.StructType) -> list[dict]:
-    """Light coercion so python records load under a declared schema."""
-    out = []
-    for r in records:
-        row: dict[str, Any] = {}
-        for f in schema.fields:
-            v = r.get(f.name)
-            if v is not None and isinstance(f.dataType, T.DecimalType) and not isinstance(v, decimal.Decimal):
-                v = decimal.Decimal(str(v))
-            row[f.name] = v
-        out.append(row)
-    return out

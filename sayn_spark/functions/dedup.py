@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import os
 import re
+from typing import NamedTuple, Optional
 
 import numpy as np
 import pandas as pd
@@ -3715,3 +3716,238 @@ def q_dedup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
         F.min("id_a").alias("example_id"),
     )
+
+
+# -- the dedup methods' options ------------------------------------------
+#
+# One table for the per-method option rules of the dedup task
+# (operators/dedup.py) and of the incremental ingest
+# (streaming/materialise.py:dedup_ingest_batch and its stream twin),
+# checked by check_dedup_options.  A new method or option adds a row
+# here, not another check in either caller.
+
+
+class _Option(NamedTuple):
+    """A method-specific option: its default (a method row's field of
+    the same name overrides it), the methods it applies to, what its
+    "applies to" error adds after the scope, and the cast of a given
+    value."""
+
+    default: object
+    methods: tuple
+    why: str = ""
+    cast: object = None
+
+
+_OPTIONS = {
+    "n_bands": _Option(
+        None, ("simhash", "phash"), " (the banded 64-bit signatures)", int
+    ),
+    "max_hamming": _Option(
+        None, ("phash", "simhash"), " (the Hamming-verified methods)", int
+    ),
+    "max_edit": _Option(_ED_MAX, ("editdistance",), cast=int),
+    "block_chars": _Option(_ED_BLOCK, ("editdistance",), cast=int),
+    "block_keys": _Option(("prefix", "suffix"), ("editdistance",), cast=tuple),
+    "max_compare_chars": _Option(_ED_MAX_COMPARE, ("editdistance",), cast=int),
+    "max_ratio": _Option(
+        "auto", ("containment",), cast=lambda v: v if v == "auto" else int(v)
+    ),
+    "spread_check": _Option("measure", ("containment",)),
+    "embedding_column": _Option("embedding", ("semantic",)),
+    "label_column": _Option("label", ("semantic",)),
+    "min_cosine": _Option(0.99, ("semantic",), cast=float),
+    "cell_cap": _Option(None, ("semantic",), cast=int),
+    "on_decode_error": _Option("fail", ("phash",)),
+    "payload_column": _Option("payload", ("phash",)),
+    "recall": _Option(
+        "measured",
+        ("phash",),
+        " (simhash is always pigeonhole-exact; minhash uses threshold/verify)",
+    ),
+    # an ingest argument: the task derives it from index_table
+    "band_table": _Option(None, ("minhash",)),
+}
+
+
+class _Method(NamedTuple):
+    """A dedup method: ``incremental`` names the engine of its
+    ``mode: incremental`` ("ingest" = dedup_ingest_batch, "index" = the
+    task's passage fingerprint index, None = full mode only);
+    ``rejects`` maps each generic task option the method does not take
+    to the one value it accepts (None: none), and ``why`` is the error
+    for all of them; ``n_bands`` / ``max_hamming`` are its defaults."""
+
+    incremental: Optional[str] = None
+    rejects: dict = {}
+    why: str = ""
+    n_bands: Optional[int] = None
+    max_hamming: Optional[int] = None
+
+
+_HAMMING_VERIFIED = "is verified by Hamming distance (max_hamming), not threshold/verify"
+_VERIFY_EXACT = (
+    "verify=exact applies to method=minhash (jaccard already verifies "
+    "exactly; exact has no estimate)"
+)
+_SPANS_REMOVED = "(lines/spans are removed, documents kept)"
+
+DEDUP_METHODS = {
+    "exact": _Method(rejects={"verify": "estimate"}, why=_VERIFY_EXACT),
+    "minhash": _Method(incremental="ingest"),
+    "jaccard": _Method(rejects={"verify": "estimate"}, why=_VERIFY_EXACT),
+    "simhash": _Method(
+        incremental="ingest",
+        rejects={"verify": None, "threshold": None},
+        why=f"method=simhash {_HAMMING_VERIFIED}",
+        n_bands=8,
+        max_hamming=6,
+    ),
+    "containment": _Method(
+        rejects={"verify": None},
+        why="method=containment always verifies exactly (overlap coefficient "
+        "on candidate shingle sets) — verify does not apply",
+    ),
+    "semantic": _Method(
+        rejects={"verify": None, "threshold": None, "text_column": None},
+        why="method=semantic reads embedding_column and thresholds on "
+        "min_cosine — threshold/verify/text_column do not apply",
+    ),
+    "editdistance": _Method(
+        incremental="ingest",
+        rejects={"verify": None, "threshold": None},
+        why="method=editdistance is verified by Levenshtein distance "
+        "(max_edit), not threshold/verify",
+    ),
+    "passages": _Method(
+        incremental="index",
+        rejects={"keep": "min", "verify": None},
+        why=f"keep/verify do not apply to method=passages {_SPANS_REMOVED}",
+    ),
+    "lines": _Method(
+        rejects={"keep": "min", "verify": None},
+        why=f"keep/verify do not apply to method=lines {_SPANS_REMOVED}",
+    ),
+    "phash": _Method(
+        incremental="ingest",
+        rejects={"verify": None, "threshold": None},
+        why=f"method=phash {_HAMMING_VERIFIED}",
+        n_bands=4,
+        max_hamming=12,
+    ),
+}
+
+_FULL_MODE_ONLY = (
+    "incremental mode requires a method whose per-document state is "
+    "self-contained — minhash or simhash (signature index), editdistance "
+    "(text index), passages (fingerprint index), or phash (dHash band "
+    "index).  lines/containment/semantic ARE corpus-relative (line "
+    "document-frequency / size-partition spread / quantizer cells); "
+    "jaccard's exact inverted index is the at-scale anti-pattern (use "
+    "minhash); exact is one hash-groupBy per run anyway — use mode: full"
+)
+_SPREAD_CHECKS = ("measure", "warn", "strict", "skip")
+
+
+def check_dedup_options(method: str, opts: dict, incremental, prefix: str) -> dict:
+    """Check ``opts`` (option -> given value, None or absent when not
+    given) against ``method``'s row and return the method's options resolved:
+    the given values cast, the rest defaulted.  ``incremental`` is False
+    (full mode), True (the dedup task's ``mode: incremental``) or
+    "ingest" (dedup_ingest_batch and its stream twin: only the methods
+    whose state that engine keeps, and errors that quote method names
+    as the Python arguments spell them).  Every error is ``prefix`` +
+    its text."""
+    row = DEDUP_METHODS.get(method)
+    ingest = incremental == "ingest"
+    if row is None or (ingest and row.incremental != "ingest"):
+        raise ValueError(f"{prefix}unknown method {method!r}")
+    o = {}
+    for name, option in _OPTIONS.items():
+        value = opts.get(name)
+        if method not in option.methods:
+            if value is not None:
+                scope = "|".join(f"'{m}'" if ingest else m for m in option.methods)
+                raise ValueError(
+                    f"{prefix}{name} applies to method={scope} only{option.why}"
+                )
+        elif value is None:
+            o[name] = getattr(row, name, option.default)
+        else:
+            o[name] = option.cast(value) if option.cast else value
+    # the generic options are the task's; the ingest's threshold is the
+    # minhash gate with its own default, which the other methods ignore
+    if not ingest and any(
+        opts.get(name) not in (None, accepted) for name, accepted in row.rejects.items()
+    ):
+        raise ValueError(prefix + row.why)
+    if incremental and row.incremental is None:
+        raise ValueError(prefix + _FULL_MODE_ONLY)
+
+    def fail(text: str):
+        raise ValueError(prefix + text)
+
+    if "max_hamming" in o and not 0 <= o["max_hamming"] <= 64:
+        fail("max_hamming must be in [0, 64]")
+    if method == "simhash":
+        if not 1 <= o["n_bands"] <= 16 or 64 % o["n_bands"] != 0:
+            fail(
+                "n_bands must divide 64 and be in [1, 16] (wider band sets "
+                "explode the combo probe plan)"
+            )
+        # the engine's pigeonhole recall argument needs at least one
+        # intact band: radius >= n_bands can never work, so fail here,
+        # not deep inside the Spark plan build
+        if o["max_hamming"] >= o["n_bands"]:
+            fail(
+                "method=simhash needs max_hamming < n_bands for exact recall "
+                f"by pigeonhole (got max_hamming={o['max_hamming']}, "
+                f"n_bands={o['n_bands']}) — raise n_bands or lower the radius"
+            )
+    elif method == "phash":
+        if o["on_decode_error"] not in ("fail", "skip"):
+            fail("on_decode_error must be fail|skip")
+        if not 2 <= o["n_bands"] <= 16 or 64 % o["n_bands"] != 0:
+            fail(
+                "n_bands must divide 64 and be in [2, 16] (64-bit dHash packs "
+                "into equal bands)"
+            )
+        if o["recall"] not in ("measured", "guaranteed"):
+            fail("recall must be measured|guaranteed")
+        # recall: guaranteed demands pigeonhole-exact candidates, which
+        # holds iff a pair inside the radius always shares an intact
+        # band
+        if o["recall"] == "guaranteed" and o["max_hamming"] > o["n_bands"] - 1:
+            fail(
+                "recall=guaranteed needs max_hamming <= n_bands - 1 (got "
+                f"max_hamming={o['max_hamming']}, n_bands={o['n_bands']}) — a "
+                f"pair at Hamming {o['n_bands']} can land one flip in every "
+                "band and miss; raise n_bands (8 => exact to 7) or lower the "
+                "radius"
+            )
+    elif method == "editdistance":
+        if o["max_edit"] < 1 or o["block_chars"] < 1:
+            fail("max_edit/block_chars must be >= 1")
+        if o["max_compare_chars"] < 1:
+            fail("max_compare_chars must be >= 1")
+        keys = o["block_keys"]
+        if (
+            not keys
+            or len(set(keys)) != len(keys)
+            or any(k not in ("prefix", "suffix") for k in keys)
+        ):
+            fail(
+                "block_keys must be a non-repeating subset of [prefix, "
+                f"suffix], got {list(keys)!r}"
+            )
+    elif method == "containment":
+        if o["max_ratio"] != "auto" and o["max_ratio"] not in _LE_GATES:
+            fail(f"max_ratio must be 'auto' or one of {tuple(sorted(_LE_GATES))}")
+        if o["spread_check"] not in _SPREAD_CHECKS:
+            fail(f"spread_check must be one of {_SPREAD_CHECKS}")
+    elif method == "semantic":
+        if o["cell_cap"] is not None and o["cell_cap"] < 1:
+            fail("cell_cap must be >= 1")
+        if not 0.0 < o["min_cosine"] <= 1.0:
+            fail("min_cosine must be in (0, 1]")
+    return o

@@ -101,6 +101,12 @@ Methods:
            coding, video) raise — or are conservatively KEPT under
            ``on_decode_error: skip``.
 
+The per-method options above, their defaults, the generic options
+each method rejects and which methods have ``mode: incremental`` are
+one table, functions/dedup.py:DEDUP_METHODS (and ``_OPTIONS``), checked
+by check_dedup_options — the same check dedup_ingest_batch and its
+stream twin run.  A new method or option is a row there.
+
 keep: ``min`` keeps the lowest id per cluster; ``best`` keeps the
 highest ``score_column`` (ties -> lowest id) — the keep-best canonical
 selection from functions/components.py.  ``soft`` keeps EVERY row and
@@ -124,42 +130,21 @@ from pyspark.sql.window import Window
 
 from sayn_spark.operators.base import Task, TaskStatus
 
-# the engine's tokenizer expression (functions/dedup.py:_TOKENS)
-_PASSAGE_TOKENS = "filter(split(lower(text), ' '), x -> x != '')"
-
-_METHODS = (
-    "exact",
-    "minhash",
-    "jaccard",
-    "simhash",
-    "containment",
-    "semantic",
-    "editdistance",
-    "passages",
-    "lines",
-    "phash",
-)
-
-def _le_ratios() -> tuple:
-    """The containment gate contracts, read from the engine's own
-    table so a new gate is task-reachable without a second edit."""
-    from sayn_spark.functions.dedup import _LE_GATES
-
-    return tuple(sorted(_LE_GATES))
-_SPREAD_CHECKS = ("measure", "warn", "strict", "skip")
-
 
 class DedupTask(Task):
     kind = "dedup"
 
     def config(self) -> None:
+        from sayn_spark.functions.dedup import DEDUP_METHODS, check_dedup_options
+
         c = self.config_dict
         self.declare_table("source", "src_value")
         self.read_load_mode()
         self.method = c.get("method", "minhash")
-        if self.method not in _METHODS:
+        if self.method not in DEDUP_METHODS:
             raise ValueError(
-                f"dedup task {self.name!r}: method must be one of {_METHODS}"
+                f"dedup task {self.name!r}: method must be one of "
+                f"{tuple(DEDUP_METHODS)}"
             )
         self.id_column = c.get("id_column", "doc_id")
         self.text_column = c.get("text_column", "text")
@@ -209,13 +194,6 @@ class DedupTask(Task):
                 f"dedup task {self.name!r}: window_tokens must be >= 2"
             )
         self.min_kept_tokens = int(c.get("min_kept_tokens", 1))
-        if self.method in ("passages", "lines"):
-            if self.keep != "min" or c.get("verify") is not None:
-                raise ValueError(
-                    f"dedup task {self.name!r}: keep/verify do not apply to "
-                    f"method={self.method} (lines/spans are removed, "
-                    "documents kept)"
-                )
         # lines: CCNet-style boilerplate removal
         # (q_dedup_boilerplate_lines' engine) — a line in >= min_line_docs
         # distinct docs is removed from every page
@@ -225,236 +203,18 @@ class DedupTask(Task):
                 f"dedup task {self.name!r}: min_line_docs must be >= 2"
             )
         self.min_kept_lines = int(c.get("min_kept_lines", 1))
-        # phash: image near-dedup (q_multimodal_phash_dedup's engine) —
-        # payload BINARY column -> dHash -> 4x16 banded candidates ->
-        # Hamming <= max_hamming verify; keep min|best|soft apply as-is.
-        # simhash shares the max_hamming knob (its verify is also a
-        # Hamming radius) at the Manku/Charikar default of 6/64 bits
-        self.payload_column = c.get("payload_column", "payload")
-        self.max_hamming = int(
-            c.get("max_hamming", 6 if self.method == "simhash" else 12)
+        # every method-specific option (n_bands, max_hamming, the
+        # editdistance / containment / semantic / phash knobs) and which
+        # generic options the method takes: one table, one check
+        # (band_table is the ingest's argument: the task derives it)
+        self.method_opts = check_dedup_options(
+            self.method,
+            {**c, "band_table": None},
+            self.incremental,
+            f"dedup task {self.name!r}: ",
         )
-        if not (0 <= self.max_hamming <= 64):
-            raise ValueError(
-                f"dedup task {self.name!r}: max_hamming must be in [0, 64]"
-            )
-        # simhash: banded 64-bit SimHash (q_dedup_simhash's engine) —
-        # n_bands is the Manku/Charikar selectivity knob (must divide
-        # 64; exact recall needs n_bands > max_hamming, engine-checked).
-        # phash shares the knob over its 64-bit dHash (default 4x16-bit
-        # bands): n_bands=8 makes candidate recall pigeonhole-exact to
-        # Hamming 7 where the default 4 is exact only to 3.
-        self.n_bands = int(c.get("n_bands", 4 if self.method == "phash" else 8))
-        if c.get("n_bands") is not None and self.method not in (
-            "simhash", "phash",
-        ):
-            raise ValueError(
-                f"dedup task {self.name!r}: n_bands applies to "
-                "method=simhash|phash only (the banded 64-bit signatures)"
-            )
-        if self.method == "simhash":
-            if not 1 <= self.n_bands <= 16 or 64 % self.n_bands != 0:
-                raise ValueError(
-                    f"dedup task {self.name!r}: n_bands must divide 64 and "
-                    "be in [1, 16] (wider band sets explode the combo probe "
-                    "plan)"
-                )
-            # the engine's pigeonhole recall argument needs at least one
-            # intact band: radius >= n_bands can never work, so fail at
-            # config time, not deep inside the Spark plan build
-            if self.max_hamming >= self.n_bands:
-                raise ValueError(
-                    f"dedup task {self.name!r}: method=simhash needs "
-                    f"max_hamming < n_bands for exact recall by pigeonhole "
-                    f"(got max_hamming={self.max_hamming}, "
-                    f"n_bands={self.n_bands}) — raise n_bands or lower the "
-                    "radius"
-                )
-            if c.get("verify") is not None or c.get("threshold") is not None:
-                raise ValueError(
-                    f"dedup task {self.name!r}: method=simhash is verified by "
-                    "Hamming distance (max_hamming), not threshold/verify"
-                )
-        # editdistance: dual-key-blocked bounded Levenshtein
-        # (q_dedup_editdistance's engine) — character-level near-dup
-        # that survives token-boundary changes Jaccard cannot
-        self.max_edit = int(c.get("max_edit", 8))
-        self.block_chars = int(c.get("block_chars", 24))
-        from sayn_spark.functions.dedup import _ED_MAX_COMPARE
-
-        # docs longer than this are never editdistance candidates —
-        # Spark's threshold Levenshtein is O(len^2) when the pair is
-        # near-identical (see _ED_MAX_COMPARE's measured costs)
-        self.max_compare_chars = int(c.get("max_compare_chars", _ED_MAX_COMPARE))
-        bk = c.get("block_keys")
-        self.block_keys = tuple(bk) if bk is not None else ("prefix", "suffix")
-        if self.method != "editdistance":
-            for opt in ("max_edit", "block_chars", "block_keys", "max_compare_chars"):
-                if c.get(opt) is not None:
-                    raise ValueError(
-                        f"dedup task {self.name!r}: {opt} applies to "
-                        "method=editdistance only"
-                    )
-        else:
-            if self.max_edit < 1 or self.block_chars < 1:
-                raise ValueError(
-                    f"dedup task {self.name!r}: max_edit/block_chars must be >= 1"
-                )
-            if self.max_compare_chars < 1:
-                raise ValueError(
-                    f"dedup task {self.name!r}: max_compare_chars must be >= 1"
-                )
-            if (
-                not self.block_keys
-                or len(set(self.block_keys)) != len(self.block_keys)
-                or any(k not in ("prefix", "suffix") for k in self.block_keys)
-            ):
-                raise ValueError(
-                    f"dedup task {self.name!r}: block_keys must be a "
-                    "non-repeating subset of [prefix, suffix], got "
-                    f"{list(self.block_keys)!r}"
-                )
-            if c.get("verify") is not None or c.get("threshold") is not None:
-                raise ValueError(
-                    f"dedup task {self.name!r}: method=editdistance is "
-                    "verified by Levenshtein distance (max_edit), not "
-                    "threshold/verify"
-                )
-        # containment: the LSH-Ensemble gate (q_dedup_containment_gated's
-        # engine) — max_ratio is the recall contract ('auto' measures
-        # the corpus spread and picks the narrowest covering gate),
-        # spread_check the out-of-contract response
-        self.max_ratio = c.get("max_ratio", "auto")
-        if c.get("max_ratio") is not None and self.method != "containment":
-            raise ValueError(
-                f"dedup task {self.name!r}: max_ratio applies to "
-                "method=containment only"
-            )
-        if self.max_ratio != "auto":
-            self.max_ratio = int(self.max_ratio)
-            if self.max_ratio not in _le_ratios():
-                raise ValueError(
-                    f"dedup task {self.name!r}: max_ratio must be 'auto' or "
-                    f"one of {_le_ratios()}"
-                )
-        self.spread_check = c.get("spread_check", "measure")
-        if c.get("spread_check") is not None and self.method != "containment":
-            raise ValueError(
-                f"dedup task {self.name!r}: spread_check applies to "
-                "method=containment only"
-            )
-        if self.spread_check not in _SPREAD_CHECKS:
-            raise ValueError(
-                f"dedup task {self.name!r}: spread_check must be one of "
-                f"{_SPREAD_CHECKS}"
-            )
-        if self.method == "containment" and c.get("verify") is not None:
-            raise ValueError(
-                f"dedup task {self.name!r}: method=containment always "
-                "verifies exactly (overlap coefficient on candidate "
-                "shingle sets) — verify does not apply"
-            )
-        # semantic: SemDeDup (q_dedup_semantic's engine) — embeddings,
-        # not text: coarse-quantize on label centroids, in-cell cosine
-        self.embedding_column = c.get("embedding_column", "embedding")
-        self.label_column = c.get("label_column", "label")
-        self.cell_cap = c.get("cell_cap")
-        if self.cell_cap is not None:
-            self.cell_cap = int(self.cell_cap)
-            if self.cell_cap < 1:
-                raise ValueError(
-                    f"dedup task {self.name!r}: cell_cap must be >= 1"
-                )
-        cos = c.get("min_cosine")
-        self.min_cosine = 0.99 if cos is None else float(cos)
-        if not (0.0 < self.min_cosine <= 1.0):
-            raise ValueError(
-                f"dedup task {self.name!r}: min_cosine must be in (0, 1]"
-            )
-        if self.method != "semantic":
-            for opt in ("embedding_column", "label_column", "min_cosine", "cell_cap"):
-                if c.get(opt) is not None:
-                    raise ValueError(
-                        f"dedup task {self.name!r}: {opt} applies to "
-                        "method=semantic only"
-                    )
-        elif (
-            c.get("verify") is not None
-            or c.get("threshold") is not None
-            or c.get("text_column") is not None
-        ):
-            raise ValueError(
-                f"dedup task {self.name!r}: method=semantic reads "
-                "embedding_column and thresholds on min_cosine — "
-                "threshold/verify/text_column do not apply"
-            )
-        # on_decode_error: fail (default — a bad payload is a pipeline
-        # bug on curated corpora) | skip (crawl-scale: an undecodable
-        # image never becomes a candidate, so it is conservatively
-        # KEPT rather than killing the job)
-        self.on_decode_error = c.get("on_decode_error", "fail")
-        if self.on_decode_error not in ("fail", "skip"):
-            raise ValueError(
-                f"dedup task {self.name!r}: on_decode_error must be fail|skip"
-            )
-        if c.get("on_decode_error") is not None and self.method != "phash":
-            raise ValueError(
-                f"dedup task {self.name!r}: on_decode_error applies to "
-                "method=phash only"
-            )
-        if self.method != "phash" and c.get("payload_column") is not None:
-            raise ValueError(
-                f"dedup task {self.name!r}: payload_column applies to "
-                "method=phash only"
-            )
-        if self.method not in ("phash", "simhash") and c.get("max_hamming") is not None:
-            raise ValueError(
-                f"dedup task {self.name!r}: max_hamming applies to "
-                "method=phash|simhash only (the Hamming-verified methods)"
-            )
-        # phash recall contract: 'measured' (default) accepts the LSH
-        # trade at any radius (q_multimodal_phash_recall publishes the
-        # number — 0.987 at radius 12 with 4 bands); 'guaranteed'
-        # demands pigeonhole-exact candidates, which holds iff a pair
-        # inside the radius always shares an intact band: max_hamming
-        # <= n_bands - 1, enforced at config time like simhash.
-        self.recall = c.get("recall", "measured")
-        if c.get("recall") is not None and self.method != "phash":
-            raise ValueError(
-                f"dedup task {self.name!r}: recall applies to method=phash "
-                "only (simhash is always pigeonhole-exact; minhash uses "
-                "threshold/verify)"
-            )
-        if self.method == "phash":
-            if c.get("verify") is not None or c.get("threshold") is not None:
-                raise ValueError(
-                    f"dedup task {self.name!r}: method=phash is verified by "
-                    "Hamming distance (max_hamming), not threshold/verify"
-                )
-            if not 2 <= self.n_bands <= 16 or 64 % self.n_bands != 0:
-                raise ValueError(
-                    f"dedup task {self.name!r}: n_bands must divide 64 and "
-                    "be in [2, 16] (64-bit dHash packs into equal bands)"
-                )
-            if self.recall not in ("measured", "guaranteed"):
-                raise ValueError(
-                    f"dedup task {self.name!r}: recall must be "
-                    "measured|guaranteed"
-                )
-            if self.recall == "guaranteed" and self.max_hamming > self.n_bands - 1:
-                raise ValueError(
-                    f"dedup task {self.name!r}: recall=guaranteed needs "
-                    f"max_hamming <= n_bands - 1 (got max_hamming="
-                    f"{self.max_hamming}, n_bands={self.n_bands}) — a pair "
-                    f"at Hamming {self.n_bands} can land one flip in every "
-                    "band and miss; raise n_bands (8 => exact to 7) or "
-                    "lower the radius"
-                )
-        if self.verify == "exact" and self.method != "minhash":
-            raise ValueError(
-                f"dedup task {self.name!r}: verify=exact applies to method=minhash "
-                "(jaccard already verifies exactly; exact has no estimate)"
-            )
+        for name, value in self.method_opts.items():
+            setattr(self, name, value)
         self.score_column: Optional[str] = c.get("score_column")
         if self.keep == "best" and not self.score_column:
             raise ValueError(f"dedup task {self.name!r}: keep=best needs score_column")
@@ -484,21 +244,6 @@ class DedupTask(Task):
                     "incremental-mode config"
                 )
         else:
-            if self.method not in (
-                "minhash", "simhash", "editdistance", "passages", "phash",
-            ):
-                raise ValueError(
-                    f"dedup task {self.name!r}: incremental mode requires a "
-                    "method whose per-document state is self-contained — "
-                    "minhash or simhash (signature index), editdistance "
-                    "(text index), passages (fingerprint index), or phash "
-                    "(dHash band index).  lines/containment/semantic ARE "
-                    "corpus-relative (line document-frequency / "
-                    "size-partition spread / quantizer cells); jaccard's "
-                    "exact inverted index is the at-scale anti-pattern (use "
-                    "minhash); exact is one hash-groupBy per run anyway — "
-                    "use mode: full"
-                )
             if self.method == "passages":
                 if not (self.index_table and self.dst_value):
                     raise ValueError(
@@ -901,6 +646,19 @@ class DedupTask(Task):
             ingest_id = int(prev) + 1 if prev is not None else 0
         batch = batch.localCheckpoint()  # several probe arms read it
         if not batch.isEmpty():
+            # the task reads the payload column and checks recall itself
+            opts = {
+                k: v
+                for k, v in self.method_opts.items()
+                if k not in ("payload_column", "recall")
+            }
+            if self.method == "minhash":
+                # the pre-bucketed band-key side table is a minhash-only
+                # optimisation; simhash derives combo keys from its 8-int
+                # signatures map-side, editdistance derives block keys
+                # from the indexed text map-side, phash derives (band,
+                # key) rows from its 4 stored band ints map-side
+                opts["band_table"] = f"{self.index_table}_bands"
             dedup_ingest_batch(
                 batch,
                 ingest_id,
@@ -908,22 +666,8 @@ class DedupTask(Task):
                 self.matches_table,
                 self._sf_dir(),
                 threshold=self.threshold,
-                # the pre-bucketed band-key side table is a minhash-only
-                # optimisation; simhash derives combo keys from its 8-int
-                # signatures map-side, editdistance derives block keys from
-                # the indexed text map-side, phash derives (band, key) rows
-                # from its 4 stored band ints map-side
-                band_table=(
-                    f"{self.index_table}_bands" if self.method == "minhash" else None
-                ),
                 method=self.method,
-                n_bands=self.n_bands,
-                max_hamming=self.max_hamming,
-                max_edit=self.max_edit,
-                block_chars=self.block_chars,
-                block_keys=self.block_keys,
-                max_compare_chars=self.max_compare_chars,
-                on_decode_error=self.on_decode_error,
+                **opts,
             )
         if self.dst_value is not None:
             # SELF-HEALING: the destination is defined as "source docs
@@ -952,6 +696,7 @@ class DedupTask(Task):
         — exactly the rows a crashed previous attempt of this batch
         wrote — so a replay neither self-duplicates nor loses spans."""
         from sayn_spark.functions.dedup import (
+            _TOKENS,
             passage_windows,
             rewrite_with_removed_starts,
         )
@@ -969,7 +714,7 @@ class DedupTask(Task):
                 "doc_id",
                 "left_anti",
             )
-        toks = batch.select("doc_id", F.expr(_PASSAGE_TOKENS).alias("toks"))
+        toks = batch.select("doc_id", F.expr(_TOKENS).alias("toks"))
         wins = persist_tracked(passage_windows(toks, self.window_tokens))
         try:
             batch_ids = batch.select("doc_id")

@@ -83,6 +83,7 @@ def stream_merge_into(
 
 
 _BAND_BUCKETS = 32  # bucket count for the persisted band index
+_INGEST = "dedup_ingest_batch: "  # the prefix of the ingest's option errors
 
 
 def _heal_band_table(spark, db: SparkDatabase, index_table: str, band_table: str) -> None:
@@ -109,30 +110,9 @@ def _heal_band_table(spark, db: SparkDatabase, index_table: str, band_table: str
             "left_anti",
         )
     )
-    if not missing.isEmpty():
-        db.create_table(
-            band_table,
-            _mh_band_frame(missing),
-            mode="append",
-            bucket_by=(_BAND_BUCKETS, ["band_sig"]),
-        )
-
-
-def _check_ingest_opts(method: str, band_table: str | None, on_decode_error: str) -> None:
-    """The option checks of dedup_ingest_batch, also run by its
-    streaming twin before ``start()``: a bad option fails the call,
-    not the first non-empty trigger (and not never, on an empty
-    source)."""
-    if method not in ("minhash", "simhash", "editdistance", "phash"):
-        raise ValueError(f"dedup_ingest_batch: unknown method {method!r}")
-    if band_table is not None and method != "minhash":
-        raise ValueError(
-            "dedup_ingest_batch: band_table applies to method='minhash' only"
-        )
-    if on_decode_error != "fail" and method != "phash":
-        raise ValueError(
-            "dedup_ingest_batch: on_decode_error applies to method='phash' only"
-        )
+    db.append_frame(
+        band_table, _mh_band_frame(missing), bucket_by=(_BAND_BUCKETS, ["band_sig"])
+    )
 
 
 def dedup_ingest_batch(
@@ -145,12 +125,12 @@ def dedup_ingest_batch(
     band_table: str | None = None,
     method: str = "minhash",
     n_bands: "int | None" = None,
-    max_hamming: int = 6,
-    max_edit: int = 8,
-    block_chars: int = 24,
-    block_keys: tuple = ("prefix", "suffix"),
+    max_hamming: "int | None" = None,
+    max_edit: "int | None" = None,
+    block_chars: "int | None" = None,
+    block_keys: "tuple | None" = None,
     max_compare_chars: "int | None" = None,
-    on_decode_error: str = "fail",
+    on_decode_error: "str | None" = None,
 ) -> None:
     """One trigger of the near-dup ingest — exposed at module level so
     failure-replay (foreachBatch is at-least-once) can be exercised
@@ -171,6 +151,7 @@ def dedup_ingest_batch(
       Manku/Charikar combo join + Hamming <= ``max_hamming``
       (incremental_simhash_matches, recall exact by pigeonhole);
       matches carry ``hamming``.
+
     - ``editdistance``: state = the document TEXT (the inherent price
       of a character-level metric), probe = dual-key blocked bounded
       Levenshtein <= ``max_edit`` (incremental_editdistance_matches);
@@ -192,6 +173,10 @@ def dedup_ingest_batch(
       converge instead of re-entering every batch.  Image crawls are
       the canonical continuous-ingest workload — this is the method
       that makes ``mode: incremental`` cover them.
+
+    The method options are checked and defaulted by the dedup task's
+    table (functions/dedup.py:DEDUP_METHODS): simhash 8 bands at radius
+    6, phash 4 at radius 12; an option the method does not take raises.
 
     Idempotency contract, stated precisely (method-independent):
 
@@ -230,16 +215,19 @@ def dedup_ingest_batch(
         _fan_out,
         _mh_band_frame,
         _mh_sig_frame,
+        check_dedup_options,
         incremental_editdistance_matches,
         incremental_minhash_matches,
         incremental_simhash_matches,
         simhash_signatures_for,
     )
 
-    _check_ingest_opts(method, band_table, on_decode_error)
-    if n_bands is None:
-        # per-method defaults: simhash ships 8x8-bit, phash 4x16-bit
-        n_bands = 4 if method == "phash" else 8
+    o = check_dedup_options(method, dict(
+        band_table=band_table, n_bands=n_bands, max_hamming=max_hamming,
+        max_edit=max_edit, block_chars=block_chars, block_keys=block_keys,
+        max_compare_chars=max_compare_chars, on_decode_error=on_decode_error,
+    ), "ingest", _INGEST)
+    n_bands, max_hamming = o.get("n_bands"), o.get("max_hamming")
     spark = batch_df.sparkSession
     db = SparkDatabase(spark)
     if method == "minhash":
@@ -271,7 +259,7 @@ def dedup_ingest_batch(
         # fail, bytes(None) would raise inside the UDF instead)
         state = image_dhash_band_frame(
             batch_df.where(F.col("payload").isNotNull()),
-            on_error=on_decode_error,
+            on_error=o["on_decode_error"],
             n_bands=n_bands,
         ).localCheckpoint()
         empty_state = ("ba", "cast(array() as array<bigint>)")
@@ -285,9 +273,7 @@ def dedup_ingest_batch(
         # treat zero-token docs: otherwise every such doc shares the
         # degenerate 'p:'/'s:' block key and the probe verifies
         # O(n_empty^2) Levenshtein-0 pairs per batch
-        from sayn_spark.functions.dedup import _ED_MAX_COMPARE
-
-        ed_cap = _ED_MAX_COMPARE if max_compare_chars is None else int(max_compare_chars)
+        ed_cap = o["max_compare_chars"]
         # over-cap docs route sigless too: the probe could never
         # candidate them (_ed_blocked folds their keys to NULL — the
         # O(len^2) threshold-DP freeze, see _ED_MAX_COMPARE), so
@@ -304,7 +290,7 @@ def dedup_ingest_batch(
 
         def probe(new, old, old_bands=None):
             return incremental_editdistance_matches(
-                new, old, max_edit, block_chars, block_keys, ed_cap
+                new, old, o["max_edit"], o["block_chars"], o["block_keys"], ed_cap
             )
 
     # docs with no usable state are trivially novel, recorded in the
@@ -439,13 +425,16 @@ def stream_dedup_ingest(
     and the same call becomes a keyed MERGE touching only that
     trigger's files.
     """
-    # bind before start(): a misspelt option (max_haming=6) is a
-    # TypeError here, not inside the first non-empty trigger
+    from sayn_spark.functions.dedup import check_dedup_options
+
+    # bind and check before start(): a misspelt option (max_haming=6)
+    # or an out-of-range one (n_bands=7) fails here, not inside the
+    # first non-empty trigger (and not never, on an empty source)
     inspect.signature(dedup_ingest_batch).bind(
         source, 0, index_table, matches_table, sf_dir,
         band_table=band_table, method=method, **method_opts,
     )
-    _check_ingest_opts(method, band_table, method_opts.get("on_decode_error", "fail"))
+    check_dedup_options(method, {**method_opts, "band_table": band_table}, "ingest", _INGEST)
 
     def body(batch_df: DataFrame, batch_id: int, db: SparkDatabase) -> list:
         dedup_ingest_batch(

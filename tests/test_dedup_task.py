@@ -192,28 +192,862 @@ def test_dedup_task_keep_best(ctx, spark):
     assert got == {2, 4}
 
 
-def test_dedup_task_config_validation(ctx):
-    bad = [
-        {},  # no source
-        {"source": "t"},  # full mode without destination
-        {"source": "t", "destination": "o", "method": "nope"},
-        {"source": "t", "destination": "o", "keep": "best"},  # no score_column
-        {"source": "t", "mode": "incremental"},  # no index/matches
-        {
-            "source": "t",
-            "mode": "incremental",
-            "index_table": "i",
-            "matches_table": "m",
-            "method": "jaccard",  # incremental requires minhash
-        },
-        {"source": "t", "destination": "o", "threshold": 1.5},
-        {"source": "t", "destination": "o", "verify": "nope"},
-        {"source": "t", "destination": "o", "method": "jaccard", "verify": "exact"},
-    ]
-    for cfg in bad:
-        t = DedupTask("bad", cfg, ctx)
-        with pytest.raises(ValueError):
-            t.config()
+def _full(**kw):
+    return {"source": "t", "destination": "o", **kw}
+
+
+def _inc(**kw):
+    return {
+        "source": "t",
+        "mode": "incremental",
+        "index_table": "i",
+        "matches_table": "m",
+        **kw,
+    }
+
+
+# one case per raise in DedupTask.config (each config breaks exactly one
+# rule), then the cases folded in from the per-round validation tests;
+# the message follows the "dedup task 'bad': " prefix
+_REJECTS = [
+    pytest.param(
+        {},
+        "dedup task 'bad' needs source",
+        id='needs-source',
+    ),
+    pytest.param(
+        {'source': 't'},
+        "dedup task 'bad' needs destination",
+        id='needs-destination',
+    ),
+    pytest.param(
+        {'source': 't', 'destination': 'o', 'mode': 'nope'},
+        'mode must be full|incremental',
+        id='mode',
+    ),
+    pytest.param(
+        _full(method='nope'),
+        "method must be one of ('exact', 'minhash', 'jaccard', "
+        "'simhash', 'containment', 'semantic', 'editdistance', "
+        "'passages', 'lines', 'phash')",
+        id='method',
+    ),
+    pytest.param(
+        _full(threshold=1.5),
+        'threshold must be in (0, 1]',
+        id='threshold-high',
+    ),
+    pytest.param(
+        _full(threshold=0),
+        'threshold must be in (0, 1]',
+        id='threshold-zero',
+    ),
+    pytest.param(
+        _full(keep='nope'),
+        'keep must be min|best|soft',
+        id='keep',
+    ),
+    pytest.param(
+        _inc(keep='soft'),
+        'keep=soft is corpus-relative (cluster sizes) — full mode only',
+        id='soft-incremental',
+    ),
+    pytest.param(
+        _inc(keep='min'),
+        'keep applies to mode: full only — incremental ingest keeps '
+        'first-arrival documents and its matches are gated by the '
+        "method's own metric (threshold / max_hamming / max_edit)",
+        id='incremental-keep',
+    ),
+    pytest.param(
+        _inc(score_column='q'),
+        'score_column applies to mode: full only — incremental ingest '
+        'keeps first-arrival documents and its matches are gated by the '
+        "method's own metric (threshold / max_hamming / max_edit)",
+        id='incremental-score-column',
+    ),
+    pytest.param(
+        _inc(verify='estimate'),
+        'verify applies to mode: full only — incremental ingest keeps '
+        'first-arrival documents and its matches are gated by the '
+        "method's own metric (threshold / max_hamming / max_edit)",
+        id='incremental-verify',
+    ),
+    pytest.param(
+        _full(verify='nope'),
+        'verify must be estimate|exact',
+        id='verify',
+    ),
+    pytest.param(
+        _full(method='passages', window_tokens=1),
+        'window_tokens must be >= 2',
+        id='window-tokens',
+    ),
+    pytest.param(
+        _full(method='passages', keep='best', score_column='q'),
+        'keep/verify do not apply to method=passages (lines/spans are '
+        'removed, documents kept)',
+        id='passages-keep',
+    ),
+    pytest.param(
+        _full(method='passages', verify='exact'),
+        'keep/verify do not apply to method=passages (lines/spans are '
+        'removed, documents kept)',
+        id='passages-verify',
+    ),
+    pytest.param(
+        _full(method='lines', keep='soft'),
+        'keep/verify do not apply to method=lines (lines/spans are '
+        'removed, documents kept)',
+        id='lines-keep',
+    ),
+    pytest.param(
+        _full(method='lines', verify='estimate'),
+        'keep/verify do not apply to method=lines (lines/spans are '
+        'removed, documents kept)',
+        id='lines-verify',
+    ),
+    pytest.param(
+        _full(method='lines', min_line_docs=1),
+        'min_line_docs must be >= 2',
+        id='min-line-docs',
+    ),
+    pytest.param(
+        _full(method='phash', max_hamming=65),
+        'max_hamming must be in [0, 64]',
+        id='max-hamming-range',
+    ),
+    pytest.param(
+        _full(method='simhash', max_hamming=-1),
+        'max_hamming must be in [0, 64]',
+        id='max-hamming-negative',
+    ),
+    pytest.param(
+        _full(method='minhash', n_bands=8),
+        'n_bands applies to method=simhash|phash only (the banded '
+        '64-bit signatures)',
+        id='n-bands-scope',
+    ),
+    pytest.param(
+        _full(method='simhash', n_bands=7),
+        'n_bands must divide 64 and be in [1, 16] (wider band sets '
+        'explode the combo probe plan)',
+        id='simhash-n-bands',
+    ),
+    pytest.param(
+        _full(method='simhash', n_bands=32),
+        'n_bands must divide 64 and be in [1, 16] (wider band sets '
+        'explode the combo probe plan)',
+        id='simhash-n-bands-wide',
+    ),
+    pytest.param(
+        _full(method='simhash', n_bands=8, max_hamming=8),
+        'method=simhash needs max_hamming < n_bands for exact recall by '
+        'pigeonhole (got max_hamming=8, n_bands=8) — raise n_bands or '
+        'lower the radius',
+        id='simhash-pigeonhole',
+    ),
+    pytest.param(
+        _full(method='simhash', n_bands=4),
+        'method=simhash needs max_hamming < n_bands for exact recall by '
+        'pigeonhole (got max_hamming=6, n_bands=4) — raise n_bands or '
+        'lower the radius',
+        id='simhash-pigeonhole-default-radius',
+    ),
+    pytest.param(
+        _full(method='simhash', threshold=0.8),
+        'method=simhash is verified by Hamming distance (max_hamming), '
+        'not threshold/verify',
+        id='simhash-threshold',
+    ),
+    pytest.param(
+        _full(method='simhash', verify='exact'),
+        'method=simhash is verified by Hamming distance (max_hamming), '
+        'not threshold/verify',
+        id='simhash-verify',
+    ),
+    pytest.param(
+        _full(method='minhash', max_edit=4),
+        'max_edit applies to method=editdistance only',
+        id='max-edit-scope',
+    ),
+    pytest.param(
+        _full(method='jaccard', block_chars=8),
+        'block_chars applies to method=editdistance only',
+        id='block-chars-scope',
+    ),
+    pytest.param(
+        _full(method='simhash', block_keys=['prefix']),
+        'block_keys applies to method=editdistance only',
+        id='block-keys-scope',
+    ),
+    pytest.param(
+        _full(method='exact', max_compare_chars=100),
+        'max_compare_chars applies to method=editdistance only',
+        id='max-compare-chars-scope',
+    ),
+    pytest.param(
+        _full(method='editdistance', max_edit=0),
+        'max_edit/block_chars must be >= 1',
+        id='max-edit',
+    ),
+    pytest.param(
+        _full(method='editdistance', block_chars=0),
+        'max_edit/block_chars must be >= 1',
+        id='block-chars',
+    ),
+    pytest.param(
+        _full(method='editdistance', max_compare_chars=0),
+        'max_compare_chars must be >= 1',
+        id='max-compare-chars',
+    ),
+    pytest.param(
+        _full(method='editdistance', block_keys=['middle']),
+        'block_keys must be a non-repeating subset of [prefix, suffix], '
+        "got ['middle']",
+        id='block-keys-unknown',
+    ),
+    pytest.param(
+        _full(method='editdistance', block_keys=[]),
+        'block_keys must be a non-repeating subset of [prefix, suffix], '
+        'got []',
+        id='block-keys-empty',
+    ),
+    pytest.param(
+        _full(method='editdistance', block_keys=['prefix', 'prefix']),
+        'block_keys must be a non-repeating subset of [prefix, suffix], '
+        "got ['prefix', 'prefix']",
+        id='block-keys-repeated',
+    ),
+    pytest.param(
+        _full(method='editdistance', threshold=0.9),
+        'method=editdistance is verified by Levenshtein distance '
+        '(max_edit), not threshold/verify',
+        id='editdistance-threshold',
+    ),
+    pytest.param(
+        _full(method='editdistance', verify='estimate'),
+        'method=editdistance is verified by Levenshtein distance '
+        '(max_edit), not threshold/verify',
+        id='editdistance-verify',
+    ),
+    pytest.param(
+        _full(method='minhash', max_ratio=8),
+        'max_ratio applies to method=containment only',
+        id='max-ratio-scope',
+    ),
+    pytest.param(
+        _full(method='containment', max_ratio=16),
+        "max_ratio must be 'auto' or one of (8, 32)",
+        id='max-ratio',
+    ),
+    pytest.param(
+        _full(method='minhash', spread_check='measure'),
+        'spread_check applies to method=containment only',
+        id='spread-check-scope',
+    ),
+    pytest.param(
+        _full(method='containment', spread_check='maybe'),
+        "spread_check must be one of ('measure', 'warn', 'strict', "
+        "'skip')",
+        id='spread-check',
+    ),
+    pytest.param(
+        _full(method='containment', verify='exact'),
+        'method=containment always verifies exactly (overlap '
+        'coefficient on candidate shingle sets) — verify does not apply',
+        id='containment-verify',
+    ),
+    pytest.param(
+        _full(method='semantic', cell_cap=0),
+        'cell_cap must be >= 1',
+        id='cell-cap',
+    ),
+    pytest.param(
+        _full(method='semantic', min_cosine=1.5),
+        'min_cosine must be in (0, 1]',
+        id='min-cosine-high',
+    ),
+    pytest.param(
+        _full(method='semantic', min_cosine=0),
+        'min_cosine must be in (0, 1]',
+        id='min-cosine-zero',
+    ),
+    pytest.param(
+        _full(method='exact', embedding_column='e'),
+        'embedding_column applies to method=semantic only',
+        id='embedding-column-scope',
+    ),
+    pytest.param(
+        _full(method='exact', label_column='l'),
+        'label_column applies to method=semantic only',
+        id='label-column-scope',
+    ),
+    pytest.param(
+        _full(method='exact', min_cosine=0.99),
+        'min_cosine applies to method=semantic only',
+        id='min-cosine-scope',
+    ),
+    pytest.param(
+        _full(method='minhash', cell_cap=4),
+        'cell_cap applies to method=semantic only',
+        id='cell-cap-scope',
+    ),
+    pytest.param(
+        _full(method='semantic', threshold=0.9),
+        'method=semantic reads embedding_column and thresholds on '
+        'min_cosine — threshold/verify/text_column do not apply',
+        id='semantic-threshold',
+    ),
+    pytest.param(
+        _full(method='semantic', verify='exact'),
+        'method=semantic reads embedding_column and thresholds on '
+        'min_cosine — threshold/verify/text_column do not apply',
+        id='semantic-verify',
+    ),
+    pytest.param(
+        _full(method='semantic', text_column='body'),
+        'method=semantic reads embedding_column and thresholds on '
+        'min_cosine — threshold/verify/text_column do not apply',
+        id='semantic-text-column',
+    ),
+    pytest.param(
+        _full(method='phash', on_decode_error='maybe'),
+        'on_decode_error must be fail|skip',
+        id='on-decode-error',
+    ),
+    pytest.param(
+        _full(method='minhash', on_decode_error='skip'),
+        'on_decode_error applies to method=phash only',
+        id='on-decode-error-scope',
+    ),
+    pytest.param(
+        _full(method='minhash', payload_column='p'),
+        'payload_column applies to method=phash only',
+        id='payload-column-scope',
+    ),
+    pytest.param(
+        _full(method='minhash', max_hamming=6),
+        'max_hamming applies to method=phash|simhash only (the '
+        'Hamming-verified methods)',
+        id='max-hamming-scope',
+    ),
+    pytest.param(
+        _full(method='simhash', recall='guaranteed'),
+        'recall applies to method=phash only (simhash is always '
+        'pigeonhole-exact; minhash uses threshold/verify)',
+        id='recall-scope',
+    ),
+    pytest.param(
+        _full(method='phash', verify='exact'),
+        'method=phash is verified by Hamming distance (max_hamming), '
+        'not threshold/verify',
+        id='phash-verify',
+    ),
+    pytest.param(
+        _full(method='phash', threshold=0.9),
+        'method=phash is verified by Hamming distance (max_hamming), '
+        'not threshold/verify',
+        id='phash-threshold',
+    ),
+    pytest.param(
+        _full(method='phash', n_bands=3),
+        'n_bands must divide 64 and be in [2, 16] (64-bit dHash packs '
+        'into equal bands)',
+        id='phash-n-bands',
+    ),
+    pytest.param(
+        _full(method='phash', n_bands=1),
+        'n_bands must divide 64 and be in [2, 16] (64-bit dHash packs '
+        'into equal bands)',
+        id='phash-n-bands-one',
+    ),
+    pytest.param(
+        _full(method='phash', recall='sometimes'),
+        'recall must be measured|guaranteed',
+        id='recall',
+    ),
+    pytest.param(
+        _full(method='phash', recall='guaranteed'),
+        'recall=guaranteed needs max_hamming <= n_bands - 1 (got '
+        'max_hamming=12, n_bands=4) — a pair at Hamming 4 can land one '
+        'flip in every band and miss; raise n_bands (8 => exact to 7) '
+        'or lower the radius',
+        id='recall-guaranteed-default',
+    ),
+    pytest.param(
+        _full(method='phash', recall='guaranteed', n_bands=8, max_hamming=8),
+        'recall=guaranteed needs max_hamming <= n_bands - 1 (got '
+        'max_hamming=8, n_bands=8) — a pair at Hamming 8 can land one '
+        'flip in every band and miss; raise n_bands (8 => exact to 7) '
+        'or lower the radius',
+        id='recall-guaranteed-8band',
+    ),
+    pytest.param(
+        _full(method='jaccard', verify='exact'),
+        'verify=exact applies to method=minhash (jaccard already '
+        'verifies exactly; exact has no estimate)',
+        id='verify-exact-jaccard',
+    ),
+    pytest.param(
+        _full(method='exact', verify='exact'),
+        'verify=exact applies to method=minhash (jaccard already '
+        'verifies exactly; exact has no estimate)',
+        id='verify-exact-exact',
+    ),
+    pytest.param(
+        _full(keep='best'),
+        'keep=best needs score_column',
+        id='keep-best-score-column',
+    ),
+    pytest.param(
+        _full(index_table='i'),
+        'index/matches tables are incremental-mode config',
+        id='full-index-table',
+    ),
+    pytest.param(
+        _full(matches_table='m'),
+        'index/matches tables are incremental-mode config',
+        id='full-matches-table',
+    ),
+    pytest.param(
+        _inc(method='jaccard'),
+        'incremental mode requires a method whose per-document state is '
+        'self-contained — minhash or simhash (signature index), '
+        'editdistance (text index), passages (fingerprint index), or '
+        'phash (dHash band index).  lines/containment/semantic ARE '
+        'corpus-relative (line document-frequency / size-partition '
+        "spread / quantizer cells); jaccard's exact inverted index is "
+        'the at-scale anti-pattern (use minhash); exact is one '
+        'hash-groupBy per run anyway — use mode: full',
+        id='incremental-jaccard',
+    ),
+    pytest.param(
+        _inc(method='exact'),
+        'incremental mode requires a method whose per-document state is '
+        'self-contained — minhash or simhash (signature index), '
+        'editdistance (text index), passages (fingerprint index), or '
+        'phash (dHash band index).  lines/containment/semantic ARE '
+        'corpus-relative (line document-frequency / size-partition '
+        "spread / quantizer cells); jaccard's exact inverted index is "
+        'the at-scale anti-pattern (use minhash); exact is one '
+        'hash-groupBy per run anyway — use mode: full',
+        id='incremental-exact',
+    ),
+    pytest.param(
+        _inc(method='lines'),
+        'incremental mode requires a method whose per-document state is '
+        'self-contained — minhash or simhash (signature index), '
+        'editdistance (text index), passages (fingerprint index), or '
+        'phash (dHash band index).  lines/containment/semantic ARE '
+        'corpus-relative (line document-frequency / size-partition '
+        "spread / quantizer cells); jaccard's exact inverted index is "
+        'the at-scale anti-pattern (use minhash); exact is one '
+        'hash-groupBy per run anyway — use mode: full',
+        id='incremental-lines',
+    ),
+    pytest.param(
+        _inc(method='containment'),
+        'incremental mode requires a method whose per-document state is '
+        'self-contained — minhash or simhash (signature index), '
+        'editdistance (text index), passages (fingerprint index), or '
+        'phash (dHash band index).  lines/containment/semantic ARE '
+        'corpus-relative (line document-frequency / size-partition '
+        "spread / quantizer cells); jaccard's exact inverted index is "
+        'the at-scale anti-pattern (use minhash); exact is one '
+        'hash-groupBy per run anyway — use mode: full',
+        id='incremental-containment',
+    ),
+    pytest.param(
+        _inc(method='semantic'),
+        'incremental mode requires a method whose per-document state is '
+        'self-contained — minhash or simhash (signature index), '
+        'editdistance (text index), passages (fingerprint index), or '
+        'phash (dHash band index).  lines/containment/semantic ARE '
+        'corpus-relative (line document-frequency / size-partition '
+        "spread / quantizer cells); jaccard's exact inverted index is "
+        'the at-scale anti-pattern (use minhash); exact is one '
+        'hash-groupBy per run anyway — use mode: full',
+        id='incremental-semantic',
+    ),
+    pytest.param(
+        {'source': 't', 'destination': 'o', 'mode': 'incremental', 'method': 'passages'},
+        'incremental passages needs index_table and destination',
+        id='passages-needs-index',
+    ),
+    pytest.param(
+        {'source': 't', 'mode': 'incremental', 'method': 'passages', 'index_table': 'i'},
+        'incremental passages needs index_table and destination',
+        id='passages-needs-destination',
+    ),
+    pytest.param(
+        _inc(method='passages', destination='o'),
+        'matches_table does not apply to method=passages (spans are '
+        'removed, not reported as doc pairs)',
+        id='passages-matches-table',
+    ),
+    pytest.param(
+        {'source': 't', 'mode': 'incremental'},
+        'incremental mode needs index_table and matches_table',
+        id='incremental-needs-tables',
+    ),
+    pytest.param(
+        {'source': 't', 'mode': 'incremental', 'index_table': 'i'},
+        'incremental mode needs index_table and matches_table',
+        id='incremental-needs-matches',
+    ),
+    pytest.param(
+        {'source': 's',
+         'index_table': 'i',
+         'matches_table': 'm',
+         'mode': 'incremental',
+         'keep': 'soft'},
+        'keep=soft is corpus-relative (cluster sizes) — full mode only',
+        id='soft-incremental-folded',
+    ),
+    pytest.param(
+        {'source': 's', 'destination': 'd', 'method': 'passages', 'keep': 'soft'},
+        'keep/verify do not apply to method=passages (lines/spans are '
+        'removed, documents kept)',
+        id='passages-soft-folded',
+    ),
+    pytest.param(
+        {'source': 'x',
+         'destination': 'y',
+         'method': 'passages',
+         'mode': 'incremental',
+         'index_table': 'i',
+         'matches_table': 'm'},
+        'matches_table does not apply to method=passages (spans are '
+        'removed, not reported as doc pairs)',
+        id='passages-matches-table-folded',
+    ),
+    pytest.param(
+        {'source': 'x', 'destination': 'y', 'method': 'passages', 'mode': 'incremental'},
+        'incremental passages needs index_table and destination',
+        id='passages-needs-index-folded',
+    ),
+    pytest.param(
+        {'source': 'x',
+         'destination': 'y',
+         'method': 'passages',
+         'keep': 'best',
+         'score_column': 's'},
+        'keep/verify do not apply to method=passages (lines/spans are '
+        'removed, documents kept)',
+        id='passages-keep-best-folded',
+    ),
+    pytest.param(
+        {'source': 'x', 'destination': 'y', 'method': 'passages', 'verify': 'exact'},
+        'keep/verify do not apply to method=passages (lines/spans are '
+        'removed, documents kept)',
+        id='passages-verify-folded',
+    ),
+]
+
+
+@pytest.mark.parametrize("cfg, message", _REJECTS)
+def test_dedup_task_rejects(ctx, cfg, message):
+    with pytest.raises(ValueError) as err:
+        DedupTask("bad", cfg, ctx).config()
+    prefix = "" if message.startswith("dedup task") else "dedup task 'bad': "
+    assert str(err.value) == prefix + message
+
+
+# configs accepted at config time, with the options they resolve to
+_ACCEPTS = [
+    pytest.param(
+        _full(method='exact'),
+        {'threshold': 0.8, 'keep': 'min', 'verify': 'estimate'},
+        id='exact',
+    ),
+    pytest.param(
+        _full(),
+        {'threshold': 0.8, 'keep': 'min', 'verify': 'estimate'},
+        id='minhash',
+    ),
+    pytest.param(
+        _full(method='jaccard'),
+        {'threshold': 0.8, 'keep': 'min', 'verify': 'estimate'},
+        id='jaccard',
+    ),
+    pytest.param(
+        _full(method='simhash'),
+        {'threshold': 0.8,
+         'keep': 'min',
+         'verify': 'estimate',
+         'n_bands': 8,
+         'max_hamming': 6},
+        id='simhash',
+    ),
+    pytest.param(
+        _full(method='containment'),
+        {'threshold': 0.9,
+         'keep': 'min',
+         'verify': 'estimate',
+         'max_ratio': 'auto',
+         'spread_check': 'measure'},
+        id='containment',
+    ),
+    pytest.param(
+        _full(method='semantic'),
+        {'threshold': 0.8,
+         'keep': 'min',
+         'verify': 'estimate',
+         'embedding_column': 'embedding',
+         'label_column': 'label',
+         'min_cosine': 0.99,
+         'cell_cap': None},
+        id='semantic',
+    ),
+    pytest.param(
+        _full(method='editdistance'),
+        {'threshold': 0.8,
+         'keep': 'min',
+         'verify': 'estimate',
+         'max_edit': 8,
+         'block_chars': 24,
+         'block_keys': ('prefix', 'suffix'),
+         'max_compare_chars': 10000},
+        id='editdistance',
+    ),
+    pytest.param(
+        _full(method='passages'),
+        {'threshold': 0.8,
+         'keep': 'min',
+         'verify': 'estimate',
+         'window_tokens': 10,
+         'min_kept_tokens': 1},
+        id='passages',
+    ),
+    pytest.param(
+        _full(method='lines'),
+        {'threshold': 0.8,
+         'keep': 'min',
+         'verify': 'estimate',
+         'min_line_docs': 5,
+         'min_kept_lines': 1},
+        id='lines',
+    ),
+    pytest.param(
+        _full(method='phash'),
+        {'threshold': 0.8,
+         'keep': 'min',
+         'verify': 'estimate',
+         'n_bands': 4,
+         'max_hamming': 12,
+         'on_decode_error': 'fail',
+         'payload_column': 'payload',
+         'recall': 'measured'},
+        id='phash',
+    ),
+    pytest.param(
+        _inc(),
+        {'threshold': 0.8,
+         'keep': 'min',
+         'verify': 'estimate',
+         'index_table': 'i',
+         'matches_table': 'm',
+         'dst_value': None},
+        id='minhash-incremental',
+    ),
+    pytest.param(
+        _inc(destination='o', threshold=0.5),
+        {'threshold': 0.5,
+         'keep': 'min',
+         'verify': 'estimate',
+         'index_table': 'i',
+         'matches_table': 'm',
+         'dst_value': 'o'},
+        id='minhash-incremental-destination',
+    ),
+    pytest.param(
+        _inc(method='simhash', n_bands=16, max_hamming=12),
+        {'threshold': 0.8,
+         'keep': 'min',
+         'verify': 'estimate',
+         'n_bands': 16,
+         'max_hamming': 12,
+         'index_table': 'i',
+         'matches_table': 'm',
+         'dst_value': None},
+        id='simhash-incremental',
+    ),
+    pytest.param(
+        _inc(method='editdistance'),
+        {'threshold': 0.8,
+         'keep': 'min',
+         'verify': 'estimate',
+         'max_edit': 8,
+         'block_chars': 24,
+         'block_keys': ('prefix', 'suffix'),
+         'max_compare_chars': 10000,
+         'index_table': 'i',
+         'matches_table': 'm',
+         'dst_value': None},
+        id='editdistance-incremental',
+    ),
+    pytest.param(
+        _inc(method='phash'),
+        {'threshold': 0.8,
+         'keep': 'min',
+         'verify': 'estimate',
+         'n_bands': 4,
+         'max_hamming': 12,
+         'on_decode_error': 'fail',
+         'payload_column': 'payload',
+         'recall': 'measured',
+         'index_table': 'i',
+         'matches_table': 'm',
+         'dst_value': None},
+        id='phash-incremental',
+    ),
+    pytest.param(
+        {'source': 't',
+         'destination': 'o',
+         'mode': 'incremental',
+         'method': 'passages',
+         'index_table': 'i'},
+        {'threshold': 0.8,
+         'keep': 'min',
+         'verify': 'estimate',
+         'window_tokens': 10,
+         'min_kept_tokens': 1,
+         'index_table': 'i',
+         'matches_table': None,
+         'dst_value': 'o'},
+        id='passages-incremental',
+    ),
+    pytest.param(
+        _full(method='phash', recall='guaranteed', n_bands=8, max_hamming=7),
+        {'threshold': 0.8,
+         'keep': 'min',
+         'verify': 'estimate',
+         'n_bands': 8,
+         'max_hamming': 7,
+         'on_decode_error': 'fail',
+         'payload_column': 'payload',
+         'recall': 'guaranteed'},
+        id='phash-guaranteed-8band',
+    ),
+    pytest.param(
+        _full(method='phash', n_bands=16, max_hamming=12),
+        {'threshold': 0.8,
+         'keep': 'min',
+         'verify': 'estimate',
+         'n_bands': 16,
+         'max_hamming': 12,
+         'on_decode_error': 'fail',
+         'payload_column': 'payload',
+         'recall': 'measured'},
+        id='phash-16band',
+    ),
+    pytest.param(
+        _full(
+            method='phash', on_decode_error='skip', payload_column='img',
+            max_hamming=10, recall='measured',
+        ),
+        {'threshold': 0.8,
+         'keep': 'min',
+         'verify': 'estimate',
+         'n_bands': 4,
+         'max_hamming': 10,
+         'on_decode_error': 'skip',
+         'payload_column': 'img',
+         'recall': 'measured'},
+        id='phash-options',
+    ),
+    pytest.param(
+        _full(verify='exact', threshold=0.5),
+        {'threshold': 0.5, 'keep': 'min', 'verify': 'exact'},
+        id='minhash-verify-exact',
+    ),
+    pytest.param(
+        _full(method='exact', verify='estimate'),
+        {'threshold': 0.8, 'keep': 'min', 'verify': 'estimate'},
+        id='exact-verify-estimate',
+    ),
+    pytest.param(
+        _full(method='jaccard', verify='estimate', threshold=0.7),
+        {'threshold': 0.7, 'keep': 'min', 'verify': 'estimate'},
+        id='jaccard-verify-estimate',
+    ),
+    pytest.param(
+        _full(keep='best', score_column='quality'),
+        {'threshold': 0.8,
+         'keep': 'best',
+         'verify': 'estimate',
+         'score_column': 'quality'},
+        id='keep-best',
+    ),
+    pytest.param(
+        _full(method='exact', keep='soft'),
+        {'threshold': 0.8, 'keep': 'soft', 'verify': 'estimate'},
+        id='keep-soft',
+    ),
+    pytest.param(
+        _full(
+            method='editdistance', max_edit=4, block_chars=8,
+            block_keys=['suffix'], max_compare_chars=500,
+        ),
+        {'threshold': 0.8,
+         'keep': 'min',
+         'verify': 'estimate',
+         'max_edit': 4,
+         'block_chars': 8,
+         'block_keys': ('suffix',),
+         'max_compare_chars': 500},
+        id='editdistance-options',
+    ),
+    pytest.param(
+        _full(method='containment', max_ratio=8, spread_check='strict', threshold=0.95),
+        {'threshold': 0.95,
+         'keep': 'min',
+         'verify': 'estimate',
+         'max_ratio': 8,
+         'spread_check': 'strict'},
+        id='containment-options',
+    ),
+    pytest.param(
+        _full(
+            method='semantic', min_cosine=0.95, cell_cap=100,
+            embedding_column='emb', label_column='lab',
+        ),
+        {'threshold': 0.8,
+         'keep': 'min',
+         'verify': 'estimate',
+         'embedding_column': 'emb',
+         'label_column': 'lab',
+         'min_cosine': 0.95,
+         'cell_cap': 100},
+        id='semantic-options',
+    ),
+    pytest.param(
+        _full(method='passages', keep='min', window_tokens=5, min_kept_tokens=3),
+        {'threshold': 0.8,
+         'keep': 'min',
+         'verify': 'estimate',
+         'window_tokens': 5,
+         'min_kept_tokens': 3},
+        id='passages-options',
+    ),
+    pytest.param(
+        _full(method='lines', min_line_docs=3, min_kept_lines=2),
+        {'threshold': 0.8,
+         'keep': 'min',
+         'verify': 'estimate',
+         'min_line_docs': 3,
+         'min_kept_lines': 2},
+        id='lines-options',
+    ),
+]
+
+
+@pytest.mark.parametrize("cfg, resolved", _ACCEPTS)
+def test_dedup_task_accepts(ctx, cfg, resolved):
+    t = DedupTask("ok", cfg, ctx)
+    t.config()
+    assert {k: getattr(t, k) for k in resolved} == resolved
 
 
 def test_dedup_task_incremental_lifecycle(ctx, spark):
@@ -701,28 +1535,3 @@ SELECT g.doc_id, CAST(1000000 // cs.n AS BIGINT) FROM g JOIN cs USING (h)
         assert out[d] == w, (d, out[d], w)
     # planted copies weigh <= 500000, and their originals match
     assert all(out[d + 500000] <= 500000 for d in range(0, 50, 3))
-
-
-def test_dedup_keep_soft_validation(ctx):
-    from sayn_spark.operators.dedup import DedupTask
-
-    t = DedupTask(
-        "bad_soft",
-        {
-            "source": "s",
-            "index_table": "i",
-            "matches_table": "m",
-            "mode": "incremental",
-            "keep": "soft",
-        },
-        ctx,
-    )
-    with pytest.raises(ValueError):
-        t.config()
-    t2 = DedupTask(
-        "bad_soft2",
-        {"source": "s", "destination": "d", "method": "passages", "keep": "soft"},
-        ctx,
-    )
-    with pytest.raises(ValueError):
-        t2.config()

@@ -342,5 +342,18 @@ def test_ingest_batch_validation(spark, tmp_path):
         stream_dedup_ingest(
             stream, "i", "m", str(ckpt), SF, method="simhash", max_haming=6
         )
+    # out-of-range method options fail before start() as well, instead
+    # of inside the first non-empty trigger (or never, on this empty
+    # source)
+    for method, opts, message in (
+        ("simhash", {"n_bands": 7}, r"n_bands must divide 64 and be in \[1, 16\]"),
+        ("simhash", {"n_bands": 8, "max_hamming": 8}, "needs max_hamming < n_bands"),
+        ("phash", {"n_bands": 3}, r"n_bands must divide 64 and be in \[2, 16\]"),
+        ("editdistance", {"block_keys": ["middle"]}, "block_keys must be a"),
+    ):
+        with pytest.raises(ValueError, match=f"^dedup_ingest_batch: .*{message}"):
+            stream_dedup_ingest(
+                stream, "i", "m", str(ckpt), SF, method=method, **opts
+            )
     assert len(spark.streams.active) == active
     assert not ckpt.exists()

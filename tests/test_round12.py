@@ -269,35 +269,6 @@ def test_dhash_bands_nbands_packing_consistent():
             dhash_bands(gray, 24, 20, n_bands=bad)
 
 
-def test_dedup_phash_nbands_recall_validation(ctx):
-    """Config-time contract: recall applies to phash only; guaranteed
-    recall requires max_hamming <= n_bands - 1; n_bands still rejects
-    non-banded methods and non-divisors."""
-    bad = [
-        {"source": "t", "destination": "o", "method": "simhash",
-         "recall": "guaranteed"},
-        {"source": "t", "destination": "o", "method": "phash",
-         "recall": "sometimes"},
-        {"source": "t", "destination": "o", "method": "phash",
-         "recall": "guaranteed"},  # default max_hamming 12 > 4 - 1
-        {"source": "t", "destination": "o", "method": "phash",
-         "recall": "guaranteed", "n_bands": 8, "max_hamming": 8},
-        {"source": "t", "destination": "o", "method": "phash", "n_bands": 3},
-        {"source": "t", "destination": "o", "method": "minhash", "n_bands": 8},
-    ]
-    for cfg in bad:
-        with pytest.raises(ValueError):
-            DedupTask("bad", cfg, ctx).config()
-    # the guarantee-shaped configs pass validation
-    for cfg in (
-        {"source": "t", "destination": "o", "method": "phash",
-         "recall": "guaranteed", "n_bands": 8, "max_hamming": 7},
-        {"source": "t", "destination": "o", "method": "phash",
-         "n_bands": 16, "max_hamming": 12},
-    ):
-        DedupTask("ok", cfg, ctx).config()
-
-
 def test_phash_full_mode_8band_guaranteed(ctx, spark):
     """method=phash with n_bands=8, recall=guaranteed, max_hamming=7:
     a BMP re-encode (Hamming 0) of a PNG donor dedups; distinct images
@@ -350,6 +321,39 @@ def test_phash_incremental_nbands_width_guard(spark):
     # the stored width still ingests fine
     dedup_ingest_batch(b1, 1, idx, mt, SF, method="phash")
     assert {r.doc_id for r in spark.table(idx).collect()} == {1, 2}
+    _drop(spark, idx, mt)
+
+
+def test_phash_ingest_default_radius_follows_the_task(spark):
+    """With max_hamming omitted, the phash ingest verifies at radius 12,
+    the dedup task's phash default: a pair at Hamming 11 that shares a
+    dHash band (so the band join makes it a candidate) is matched."""
+    from sayn_spark.functions.multimodal import dhash_bands, png_encode
+    from sayn_spark.streaming.materialise import dedup_ingest_batch
+
+    idx, mt = "phr_idx", "phr_mt"
+    _drop(spark, idx, mt)
+    w, h = 16, 18
+    rng = np.random.default_rng(3)
+    a = rng.integers(0, 256, size=w * h)
+    b = a.copy()
+    k = int(rng.integers(10, 60))
+    lower = rng.choice(np.arange(w * h // 2, w * h), size=k, replace=False)
+    b[lower] = rng.integers(0, 256, size=k)
+    raw_a, raw_b = (bytes(int(v) for v in img) for img in (a, b))
+    bands_a, bands_b = dhash_bands(raw_a, w, h), dhash_bands(raw_b, w, h)
+    hamming = sum(bin(x ^ y).count("1") for x, y in zip(bands_a, bands_b))
+    assert hamming == 11 and bands_a[0] == bands_b[0]
+    for i, (doc_id, raw) in enumerate(((1, raw_a), (2, raw_b))):
+        batch = spark.createDataFrame(
+            [(doc_id, bytearray(png_encode(raw, w, h)))],
+            "doc_id long, payload binary",
+        )
+        dedup_ingest_batch(batch, i, idx, mt, SF, method="phash")
+    assert {
+        (r.batch_id, r.corpus_id, r.hamming) for r in spark.table(mt).collect()
+    } == {(2, 1, 11)}
+    assert {r.doc_id for r in spark.table(idx).collect()} == {1}
     _drop(spark, idx, mt)
 
 

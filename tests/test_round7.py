@@ -681,29 +681,6 @@ def test_dedup_task_passages_rewrites_text(spark, tmp_path):
     assert "lang" in spark.table("r7_pw_out").columns  # carry columns kept
 
 
-def test_dedup_task_passages_validation(spark, tmp_path):
-    from sayn_spark.operators.dedup import DedupTask
-
-    ctx = _filter_ctx(spark, tmp_path)
-
-    def cfg(**kw):
-        t = DedupTask(
-            "r7_pw_bad",
-            {"source": "x", "destination": "y", "method": "passages", **kw},
-            ctx,
-        )
-        t.config()
-
-    with pytest.raises(ValueError, match="matches_table does not apply"):
-        cfg(mode="incremental", index_table="i", matches_table="m")
-    with pytest.raises(ValueError, match="needs index_table"):
-        cfg(mode="incremental")
-    with pytest.raises(ValueError, match="do not apply"):
-        cfg(keep="best", score_column="s")
-    with pytest.raises(ValueError, match="do not apply"):
-        cfg(verify="exact")
-
-
 # -- q_dedup_passages_winnowed -------------------------------------------
 
 

@@ -236,34 +236,6 @@ def test_phash_task_exact_duplicate_across_formats(dedup_ctx, spark):
     assert got == {1}
 
 
-def test_phash_task_config_validation(dedup_ctx):
-    from sayn_spark.operators.dedup import DedupTask
-
-    bad = [
-        {"source": "t", "destination": "o", "method": "phash", "verify": "exact"},
-        {"source": "t", "destination": "o", "method": "phash", "threshold": 0.9},
-        {"source": "t", "destination": "o", "method": "phash", "max_hamming": 65},
-    ]
-    for cfg in bad:
-        t = DedupTask("bad", cfg, dedup_ctx)
-        with pytest.raises(ValueError):
-            t.config()
-    # incremental phash is a supported mode as of r11 (dHash is
-    # self-contained 64-bit state — the continuous image-crawl shape)
-    ok = DedupTask(
-        "ok",
-        {
-            "source": "t",
-            "mode": "incremental",
-            "index_table": "i",
-            "matches_table": "m",
-            "method": "phash",
-        },
-        dedup_ctx,
-    )
-    ok.config()
-
-
 def test_image_gray_pixels_jpeg_decodes_and_unknown_raises():
     """The sniffing decoder now covers baseline JPEG (r8 codec); a
     genuinely unknown magic still raises at the documented boundary."""

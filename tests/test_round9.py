@@ -437,40 +437,6 @@ def test_semantic_task_rejects_string_ids(dedup_ctx, spark):
         )
 
 
-def test_promoted_methods_config_validation(dedup_ctx):
-    from sayn_spark.operators import TaskStatus
-    from sayn_spark.operators.dedup import DedupTask
-
-    bad = [
-        # cross-method option leakage
-        {"source": "t", "destination": "o", "method": "simhash", "threshold": 0.8},
-        {"source": "t", "destination": "o", "method": "simhash", "verify": "exact"},
-        {"source": "t", "destination": "o", "method": "simhash", "n_bands": 7},
-        {"source": "t", "destination": "o", "method": "minhash", "n_bands": 8},
-        {"source": "t", "destination": "o", "method": "minhash", "max_ratio": 8},
-        {"source": "t", "destination": "o", "method": "containment", "max_ratio": 16},
-        {"source": "t", "destination": "o", "method": "containment", "verify": "exact"},
-        {"source": "t", "destination": "o", "method": "containment",
-         "spread_check": "maybe"},
-        {"source": "t", "destination": "o", "method": "minhash",
-         "spread_check": "measure"},
-        {"source": "t", "destination": "o", "method": "semantic", "threshold": 0.9},
-        {"source": "t", "destination": "o", "method": "semantic", "min_cosine": 1.5},
-        {"source": "t", "destination": "o", "method": "semantic", "cell_cap": 0},
-        {"source": "t", "destination": "o", "method": "exact", "min_cosine": 0.99},
-        {"source": "t", "destination": "o", "method": "exact", "label_column": "l"},
-        # incremental rejections
-        {"source": "t", "mode": "incremental", "index_table": "i",
-         "matches_table": "m", "method": "semantic"},
-        {"source": "t", "mode": "incremental", "index_table": "i",
-         "matches_table": "m", "method": "containment"},
-    ]
-    for cfg in bad:
-        t = DedupTask("bad", cfg, dedup_ctx)
-        with pytest.raises(ValueError):
-            t.config()
-
-
 # -- color baseline JPEG (VERDICT r8 item 4) ------------------------------
 
 from hypothesis import HealthCheck, given, settings  # noqa: E402
