@@ -617,9 +617,6 @@ def _simhash_hamming(n_bands: int = 8) -> str:
     )
 
 
-_SIMHASH_HAMMING = _simhash_hamming(8)
-
-
 def _simhash_allpairs(sig: DataFrame, n_bands: int = 8, radius: int = 6) -> DataFrame:
     """All-pairs Hamming verifier over SimHash signatures — NOT
     registered as a standalone query (O(n^2) nested-loop join is never

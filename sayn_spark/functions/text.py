@@ -976,9 +976,6 @@ def q_text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SB_ALPHA_NUM, _SB_ALPHA_DEN = 4, 10  # backoff factor 0.4, exact rational
 _SB_K = 50
 
-_SB_TRAIN = "lang = 'en' AND doc_id % 2 = 0"
-_SB_SCORE = "lang = 'en' AND doc_id % 2 = 1"
-
 _SB_POS_EXPR = (
     "transform(sequence(1, size(t) - 1), i -> "
     "struct(element_at(t, i) as w1, element_at(t, i + 1) as w2))"

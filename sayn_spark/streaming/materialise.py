@@ -307,7 +307,7 @@ def dedup_ingest_batch(
     # self-probe: larger id matches smaller, each pair reported once
     matches = probe(sigs, sigs).where(F.col("batch_id") > F.col("corpus_id"))
     index_exists = db.table_exists(index_table)
-    if index_exists and method in ("simhash", "phash"):
+    if index_exists and n_bands is not None:
         # a signature index written under a different n_bands would
         # break the probe silently: simhash folds every sig_o[b] /
         # packed probe key to NULL (zero matches), phash equi-joins

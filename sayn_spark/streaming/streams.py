@@ -215,151 +215,53 @@ def content_filter_stream(
     pii: Optional[dict] = None,
     min_entropy: Optional[float] = None,
 ) -> DataFrame:
-    """Streaming twin of the filter task's scorers: quality-score and
-    (optionally) language-gate a document stream with the SAME
-    oracle-verified column expressions the batch path uses
-    (functions/text.py) — stateless map-side predicates, so the stream
-    needs no watermark, no state store, and emits in append mode.
+    """Streaming twin of the filter task's row-local scorers: each stage
+    is the task's own ``SCORERS`` builder (operators/filter.py) with
+    ``with_score`` off — the same oracle-verified column expressions,
+    stateless map-side predicates, so the stream needs no watermark, no
+    state store, and emits in append mode.  Stages run in this order,
+    each only when its argument is given:
+
+    - quality: always, ``min_score``;
+    - langid: ``languages`` (non-empty);
+    - entropy: ``min_entropy`` (nats);
+    - gopher: ``gopher_bounds`` — min_words / max_words /
+      min_mean_word_len / max_mean_word_len / max_symbol_permille /
+      min_alpha_permille / min_stop_words ({} for the published bounds);
+    - c4: ``c4`` — min_sentences / min_words_per_line / rewrite (the
+      task's c4_rewrite);
+    - repetition: ``repetition`` — max_repetition_ratio /
+      max_immediate_repeats / max_dup_line_ppm / max_dup_char_ppm (the
+      n-gram coverage gates join a per-doc aggregate: batch task only);
+    - pii: ``pii`` — action (the task's pii_action, drop|redact) /
+      max_pii, over email and phone.
+
+    Defaults are the task's.  A stage key outside its list, or a stage
+    the task's config check would reject, raises ValueError here,
+    before any query starts.
 
     The continuous-crawl front door: filter at ingest, BEFORE the
     expensive dedup/embed stages ever see rejected documents.
     """
-    from sayn_spark.functions.text import (
-        langid_columns,
-        predicted_lang_col,
-        quality_score_col,
-    )
+    from sayn_spark.operators.filter import apply_scorer, stream_options
 
-    out = docs.where(F.col("text").isNotNull()).where(
-        quality_score_col() >= float(min_score)
-    )
-    if languages:
-        # reserved-prefix staging, same as the batch filter task: a
-        # source column named c_en/has_cjk must survive
-        out = (
-            out.select("*", *langid_columns("__sayn_"))
-            .where(predicted_lang_col("__sayn_").isin(list(languages)))
-            .drop(
-                "__sayn_has_cjk", "__sayn_c_en", "__sayn_c_es",
-                "__sayn_c_fr", "__sayn_c_de",
-            )
-        )
-    if min_entropy is not None:
-        # character-Shannon floor (q_text_char_entropy's row-local
-        # fold) — stateless integer predicate like the rest
-        from sayn_spark.functions.text import char_entropy_col
-
-        out = out.where(
-            char_entropy_col() >= int(round(float(min_entropy) * 100000000))
-        )
-    if gopher_bounds is not None:
-        # the Gopher rule suite is also a stateless integer predicate
-        # (q_quality_gopher_rules' shared builders) — pass {} for the
-        # published defaults, or override any bound
-        from sayn_spark.functions.content_filter import (
-            gopher_pass_col,
-            gopher_signal_cols,
-            repetition_tokens_col,
-        )
-
-        sig = gopher_signal_cols("_t")
-        out = out.withColumn("_t", repetition_tokens_col())
-        for k, col in sig.items():
-            out = out.withColumn(k, col)
-        out = out.where(gopher_pass_col(**gopher_bounds)).drop("_t", *sig)
-    if c4 is not None:
-        # {"min_sentences": 3, "min_words_per_line": 5, "rewrite": True}
-        # — the C4 cleaning heuristics (q_quality_c4_rules' shared
-        # builders) as a stateless stream stage: line retention
-        # rewrites text in place, page rules drop the row
-        from sayn_spark.functions.content_filter import (
-            c4_clean_text_col,
-            c4_keep_col,
-            c4_signal_cols,
-        )
-
-        mwpl = int(c4.get("min_words_per_line", 5))
-        sig = c4_signal_cols("_lines", mwpl)
-        out = out.withColumn("_lines", F.split(F.col("text"), "\n"))
-        for k, col in sig.items():
-            out = out.withColumn(k, col)
-        out = out.where(c4_keep_col(int(c4.get("min_sentences", 3))))
-        if c4.get("rewrite", True):
-            out = out.withColumn("text", c4_clean_text_col("_lines", mwpl))
-        out = out.drop("_lines", *sig)
-    if repetition is not None:
-        # {"max_repetition_ratio": 0.5, "max_immediate_repeats": 3,
-        #  "max_dup_line_ppm": 300000, "max_dup_char_ppm": 200000} —
-        # the filter task's ROW-LOCAL repetition bounds as a stateless
-        # stream stage (the corpus-relative n-gram coverage gates need
-        # the batch path); any subset of the four bounds applies
-        from sayn_spark.functions.content_filter import (
-            dup_line_signal_cols,
-            immediate_repeats_col,
-            repetition_ratio_col,
-            repetition_tokens_col,
-        )
-
-        out = out.withColumn("_t", repetition_tokens_col())
-        cond = F.lit(True)
-        if repetition.get("max_repetition_ratio") is not None:
-            cond = cond & (
-                F.coalesce(repetition_ratio_col("_t"), F.lit(0.0))
-                <= float(repetition["max_repetition_ratio"])
-            )
-        if repetition.get("max_immediate_repeats") is not None:
-            cond = cond & (
-                F.coalesce(immediate_repeats_col("_t"), F.lit(0))
-                <= int(repetition["max_immediate_repeats"])
-            )
-        line_bounds = {
-            k: int(repetition[k])
-            for k in ("max_dup_line_ppm", "max_dup_char_ppm")
-            if repetition.get(k) is not None
-        }
-        if line_bounds:
-            sig = dup_line_signal_cols("_lines")
-            out = out.withColumn("_lines", F.split(F.col("text"), "\n"))
-            for k, col in sig.items():
-                out = out.withColumn(f"_dl_{k}", col)
-            ppm = {
-                "max_dup_line_ppm": F.coalesce(
-                    F.expr("(_dl_n_dup_lines * 1000000) div _dl_n_lines"),
-                    F.lit(0),
-                ),
-                "max_dup_char_ppm": F.coalesce(
-                    F.expr("(_dl_n_dup_chars * 1000000) div _dl_sum_chars"),
-                    F.lit(0),
-                ),
-            }
-            for k, bound in line_bounds.items():
-                cond = cond & (ppm[k] <= F.lit(bound))
-            out = out.drop("_lines", *(f"_dl_{k}" for k in sig))
-        out = out.where(cond).drop("_t")
-    if pii is not None:
-        # {"action": "drop"|"redact", "max_pii": 0} — the filter
-        # task's pii scorer as a stateless stream stage (q_pii_scan's
-        # shared regexes)
-        from sayn_spark.functions.content_filter import _EMAIL_RE, _PHONE_RE
-
-        action = pii.get("action", "drop")
-        if action not in ("drop", "redact"):
-            raise ValueError("pii action must be drop|redact")
-        if action == "drop":
-            n_pii = (
-                F.size(F.regexp_extract_all(F.col("text"), F.lit(_EMAIL_RE), 0))
-                + F.size(F.regexp_extract_all(F.col("text"), F.lit(_PHONE_RE), 0))
-            )
-            out = out.where(n_pii <= int(pii.get("max_pii", 0)))
-        else:
-            out = out.withColumn(
-                "text",
-                F.regexp_replace(
-                    F.regexp_replace(F.col("text"), _EMAIL_RE, "[EMAIL]"),
-                    _PHONE_RE,
-                    "[PHONE]",
-                ),
-            )
+    stages = [
+        ("quality", {"min_score": min_score}),
+        ("langid", {"languages": languages} if languages else None),
+        ("entropy", None if min_entropy is None else {"min_entropy": min_entropy}),
+        ("gopher", gopher_bounds),
+        ("c4", c4),
+        ("repetition", repetition),
+        ("pii", pii),
+    ]
+    checked = [
+        (scorer, stream_options(scorer, stage))
+        for scorer, stage in stages
+        if stage is not None
+    ]
+    out = docs.where(F.col("text").isNotNull())
+    for scorer, opts in checked:
+        out = apply_scorer(out, scorer, opts)
     return out
 
 

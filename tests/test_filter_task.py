@@ -5,14 +5,17 @@ decision over the same rows.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
+import yaml
 from pyspark.sql import functions as F
 
 from sayn_spark.core.compiler import Compiler
 from sayn_spark.core.database import SparkDatabase
 from sayn_spark.core.objects import DbObjectCompiler
 from sayn_spark.functions import REGISTRY
-from sayn_spark.operators import RunArguments, TaskContext
+from sayn_spark.operators import RunArguments, TaskContext, TaskStatus
 from sayn_spark.operators.filter import FilterTask
 
 SF = "/root/testdata/sf0.001"
@@ -135,20 +138,6 @@ def test_filter_length_bounds(ctx, spark, docs_table):
     assert got.where((n < 10) | (n > 40)).count() == 0
     outside = docs_table.where((n < 10) | (n > 40)).count()
     assert got.count() == docs_table.count() - outside
-
-
-def test_filter_config_validation(ctx):
-    for cfg in (
-        {},
-        {"source": "t"},
-        {"source": "t", "destination": "o", "scorer": "nope"},
-        {"source": "t", "destination": "o", "scorer": "quality"},  # no min_score
-        {"source": "t", "destination": "o", "scorer": "langid"},  # no languages
-        {"source": "t", "destination": "o", "scorer": "length"},  # no bounds
-    ):
-        t = FilterTask("bad", cfg, ctx)
-        with pytest.raises(ValueError):
-            t.config()
 
 
 def test_filter_preserves_unrelated_text_column(ctx, spark):
@@ -489,29 +478,6 @@ def test_filter_unigram_frozen_reference_scores_oov_max(ctx, spark, docs_table):
     assert out[900001] == max(out.values())  # all-OOV doc = max surprisal
 
 
-def test_filter_lm_options_validation(ctx):
-    import pytest as _pytest
-
-    for cfg in (
-        {"source": "s", "destination": "d", "scorer": "surprisal",
-         "lm_order": 3, "keep_fraction": 0.5},
-        {"source": "s", "destination": "d", "scorer": "quality",
-         "min_score": 0.5, "lm_order": 2},
-        {"source": "s", "destination": "d", "scorer": "quality",
-         "min_score": 0.5, "reference_table": "r"},
-        # corpus-relative incremental still rejected: keep_fraction
-        {"source": "s", "destination": "d", "scorer": "surprisal",
-         "lm_order": 2, "reference_table": "r", "keep_fraction": 0.5,
-         "mode": "incremental"},
-        # ... and self-trained incremental too
-        {"source": "s", "destination": "d", "scorer": "surprisal",
-         "max_avg_nll": 5.0, "mode": "incremental"},
-    ):
-        t = FilterTask("bad_lm", cfg, ctx)
-        with _pytest.raises(ValueError):
-            t.config()
-
-
 def test_filter_entropy_matches_registered_query(ctx, spark):
     """scorer: entropy must keep exactly the docs q_text_char_entropy
     scores at/above the floor, and must actually drop a planted
@@ -549,9 +515,7 @@ def test_filter_entropy_matches_registered_query(ctx, spark):
 
 
 def test_filter_entropy_validation_and_incremental(ctx, spark):
-    t = FilterTask("bad_ent", {"source": "s", "destination": "d", "scorer": "entropy"}, ctx)
-    with pytest.raises(ValueError):
-        t.config()
+    # (the missing-min_entropy case is test_filter_task_rejects[entropy-needs-min-entropy-folded])
     # row-local: incremental mode is accepted and replays are no-ops
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
     ctx.db.replace_table("fei_src", docs.where("doc_id % 2 = 0"))
@@ -574,3 +538,282 @@ def test_filter_entropy_validation_and_incremental(ctx, spark):
     assert got == {r.doc_id for r in spark.table("fef_out").collect()}
     for t2 in ("fei_src", "fei_out", "fef_out"):
         spark.sql(f"DROP TABLE IF EXISTS {t2}")
+
+
+# -- config contract: every rejected config and its exact message --------
+
+_SCORER_NAMES = (
+    "('quality', 'langid', 'length', 'entropy', 'repetition', 'surprisal', "
+    "'gopher', 'c4', 'pii', 'dsir')"
+)
+_CORPUS_RELATIVE = (
+    "is corpus-relative (trained on the batch corpus) — incremental scoring "
+    "would be batch-dependent; use mode: full, a row-local scorer, or "
+    "surprisal with reference_table + max_avg_nll (frozen LM)"
+)
+_REPETITION_NEEDS = (
+    "repetition needs max_repetition_ratio, max_immediate_repeats, and/or a "
+    "coverage bound (max_top{2,3,4}_ppm / max_dup5_ppm / max_dup_line_ppm / "
+    "max_dup_char_ppm)"
+)
+_APPROX_SCOPE = "boundaries: approx applies to scorer: surprisal|dsir with keep_fraction"
+
+
+def _cfg(scorer, **kw):
+    return {"source": "s", "destination": "d", "scorer": scorer, **kw}
+
+
+def _on(source, scorer, **kw):
+    """A config that passes config() and fails in run() against one of
+    the tables _RUN_TABLES builds."""
+    return {"source": source, "destination": "ftr_out", "scorer": scorer, **kw}
+
+
+_REJECTS = [
+    pytest.param({}, "filter task 'bad' needs source", id="needs-source"),
+    pytest.param({"source": "t"}, "filter task 'bad' needs destination", id="needs-destination"),
+    pytest.param(_cfg("nope"), f"scorer must be one of {_SCORER_NAMES}", id="unknown-scorer"),
+    pytest.param(_cfg("quality", min_score=0.5, mode="append"),
+                 "mode must be full|incremental", id="bad-mode"),
+    pytest.param(_cfg("surprisal", max_avg_nll=5.0, mode="incremental"),
+                 f"surprisal {_CORPUS_RELATIVE}", id="incremental-self-trained-surprisal"),
+    pytest.param(_cfg("surprisal", reference_table="r", keep_fraction=0.5, mode="incremental"),
+                 f"surprisal {_CORPUS_RELATIVE}", id="incremental-reference-keep-fraction"),
+    pytest.param(_cfg("dsir", target_table="t", min_weight_micro8=0, mode="incremental"),
+                 f"dsir {_CORPUS_RELATIVE}", id="incremental-dsir"),
+    pytest.param(_cfg("quality"), "quality needs min_score", id="quality-needs-min-score"),
+    pytest.param(_cfg("langid"), "langid needs languages", id="langid-needs-languages"),
+    pytest.param(_cfg("langid", languages=[]), "langid needs languages", id="langid-empty-languages"),
+    pytest.param(_cfg("length"), "length needs min_tokens and/or max_tokens",
+                 id="length-needs-bound"),
+    pytest.param(_cfg("entropy"), "entropy needs min_entropy (nats)",
+                 id="entropy-needs-min-entropy"),
+    pytest.param(_cfg("entropy", min_entropy="high"),
+                 "could not convert string to float: 'high'", id="entropy-cast"),
+    pytest.param(_cfg("repetition"), _REPETITION_NEEDS, id="repetition-needs-bound"),
+    pytest.param(_cfg("repetition", max_top2_ppm="lots"),
+                 "invalid literal for int() with base 10: 'lots'", id="repetition-ppm-cast"),
+    pytest.param(_cfg("gopher", min_words="many"),
+                 "invalid literal for int() with base 10: 'many'", id="gopher-cast"),
+    pytest.param(_cfg("c4", min_sentences="few"),
+                 "invalid literal for int() with base 10: 'few'", id="c4-cast"),
+    pytest.param(_cfg("pii", pii_types=["email", "iban"]),
+                 "pii_types must be a non-empty subset of email|phone|card (got ['iban'])",
+                 id="pii-unknown-type"),
+    pytest.param(_cfg("pii", pii_types=[]),
+                 "pii_types must be a non-empty subset of email|phone|card (got [])",
+                 id="pii-no-types"),
+    pytest.param(_cfg("pii", pii_action="mask"), "pii_action must be drop|redact",
+                 id="pii-bad-action"),
+    pytest.param(_cfg("pii", max_pii="none"),
+                 "invalid literal for int() with base 10: 'none'", id="pii-max-cast"),
+    pytest.param(_cfg("surprisal", lm_order=3, max_avg_nll=5.0), "lm_order must be 1 or 2",
+                 id="surprisal-lm-order"),
+    pytest.param(_cfg("surprisal"), "surprisal needs max_avg_nll and/or keep_fraction",
+                 id="surprisal-needs-threshold"),
+    pytest.param(_cfg("surprisal", keep_fraction=0.0), "keep_fraction must be in (0, 1]",
+                 id="surprisal-keep-fraction-zero"),
+    pytest.param(_cfg("surprisal", keep_fraction=1.5), "keep_fraction must be in (0, 1]",
+                 id="surprisal-keep-fraction-above-one"),
+    pytest.param(_cfg("quality", min_score=0.5, lm_order=1),
+                 "lm_order/reference_table apply to scorer: surprisal only",
+                 id="lm-order-not-surprisal"),
+    pytest.param(_cfg("length", min_tokens=1, reference_table="r"),
+                 "lm_order/reference_table apply to scorer: surprisal only",
+                 id="reference-table-not-surprisal"),
+    pytest.param(_cfg("dsir", keep_fraction=0.5), "dsir needs target_table",
+                 id="dsir-needs-target"),
+    pytest.param(_cfg("dsir", target_table="t"),
+                 "dsir needs keep_fraction and/or min_weight_micro8", id="dsir-needs-threshold"),
+    pytest.param(_cfg("dsir", target_table="t", keep_fraction=2), "keep_fraction must be in (0, 1]",
+                 id="dsir-keep-fraction-range"),
+    pytest.param(_cfg("surprisal", keep_fraction=0.5, boundaries="fuzzy"),
+                 "boundaries must be exact|approx", id="boundaries-unknown"),
+    pytest.param(_cfg("quality", min_score=0.5, boundaries="approx"), _APPROX_SCOPE,
+                 id="approx-not-ranked-scorer"),
+    pytest.param(_cfg("surprisal", max_avg_nll=4.0, boundaries="approx"), _APPROX_SCOPE,
+                 id="approx-needs-keep-fraction"),
+    pytest.param(_cfg("dsir", target_table="t", keep_fraction=0.5, approx_accuracy="fine"),
+                 "invalid literal for int() with base 10: 'fine'", id="approx-accuracy-cast"),
+    # run-time checks: the id column and the secondary tables' text column
+    pytest.param(_on("ftr_noid", "quality", min_score=0.5, mode="incremental"),
+                 "incremental needs id column 'doc_id' in ftr_noid", id="incremental-needs-id"),
+    pytest.param(_on("ftr_noid", "surprisal", max_avg_nll=4.0),
+                 "surprisal needs id column 'doc_id' in ftr_noid", id="unigram-needs-id"),
+    pytest.param(_on("ftr_noid", "surprisal", lm_order=2, max_avg_nll=4.0),
+                 "surprisal needs id column 'doc_id' in ftr_noid", id="bigram-needs-id"),
+    pytest.param(_on("ftr_noid", "dsir", target_table="ftr_docs", keep_fraction=0.5),
+                 "dsir needs id column 'doc_id' in ftr_noid", id="dsir-needs-id"),
+    pytest.param(_on("ftr_noid", "repetition", max_dup5_ppm=150000),
+                 "n-gram coverage bounds need id column 'doc_id' in ftr_noid",
+                 id="ngram-needs-id"),
+    pytest.param(_on("ftr_docs", "surprisal", reference_table="ftr_notext", max_avg_nll=4.0),
+                 "reference_table 'ftr_notext' needs a text column", id="unigram-reference-text"),
+    pytest.param(_on("ftr_docs", "surprisal", lm_order=2, reference_table="ftr_notext",
+                     max_avg_nll=4.0),
+                 "reference_table 'ftr_notext' needs a text column", id="bigram-reference-text"),
+    pytest.param(_on("ftr_docs", "dsir", target_table="ftr_notext", keep_fraction=0.5),
+                 "target_table 'ftr_notext' needs a text column", id="dsir-target-text"),
+    # folded from the per-scorer validation tests, every case kept
+    pytest.param({"source": "t", "destination": "o", "scorer": "quality"},
+                 "quality needs min_score", id="quality-needs-min-score-folded"),
+    pytest.param({"source": "t", "destination": "o", "scorer": "langid"},
+                 "langid needs languages", id="langid-needs-languages-folded"),
+    pytest.param({"source": "t", "destination": "o", "scorer": "length"},
+                 "length needs min_tokens and/or max_tokens", id="length-needs-bound-folded"),
+    pytest.param({"source": "t", "destination": "o", "scorer": "nope"},
+                 f"scorer must be one of {_SCORER_NAMES}", id="unknown-scorer-folded"),
+    pytest.param(_cfg("surprisal", lm_order=3, keep_fraction=0.5), "lm_order must be 1 or 2",
+                 id="surprisal-lm-order-folded"),
+    pytest.param(_cfg("quality", min_score=0.5, lm_order=2),
+                 "lm_order/reference_table apply to scorer: surprisal only",
+                 id="lm-order-not-surprisal-folded"),
+    pytest.param(_cfg("quality", min_score=0.5, reference_table="r"),
+                 "lm_order/reference_table apply to scorer: surprisal only",
+                 id="reference-table-not-surprisal-folded"),
+    pytest.param(_cfg("surprisal", lm_order=2, reference_table="r", keep_fraction=0.5,
+                      mode="incremental"),
+                 f"surprisal {_CORPUS_RELATIVE}", id="incremental-bigram-keep-fraction-folded"),
+    pytest.param(_cfg("surprisal", max_avg_nll=5.0, mode="incremental"),
+                 f"surprisal {_CORPUS_RELATIVE}", id="incremental-self-trained-folded"),
+    pytest.param(_cfg("entropy"), "entropy needs min_entropy (nats)",
+                 id="entropy-needs-min-entropy-folded"),
+    pytest.param({"source": "r6_filter_src", "destination": "r6_filter_out",
+                  "scorer": "repetition"},
+                 _REPETITION_NEEDS, id="repetition-requires-threshold-folded"),
+    pytest.param({"source": "r6_filter_src", "destination": "r6_filter_out",
+                  "scorer": "surprisal"},
+                 "surprisal needs max_avg_nll and/or keep_fraction",
+                 id="surprisal-requires-threshold-folded"),
+    pytest.param({"source": "r6_filter_src", "destination": "r6_filter_out",
+                  "scorer": "surprisal", "max_avg_nll": 5.0, "mode": "incremental"},
+                 f"surprisal {_CORPUS_RELATIVE}", id="incremental-rejects-surprisal-folded"),
+    pytest.param({"source": "x", "destination": "y", "scorer": "dsir", "keep_fraction": 0.5},
+                 "dsir needs target_table", id="dsir-needs-target-folded"),
+    pytest.param({"source": "x", "destination": "y", "scorer": "dsir", "target_table": "t"},
+                 "dsir needs keep_fraction and/or min_weight_micro8",
+                 id="dsir-needs-threshold-folded"),
+    pytest.param({"source": "x", "destination": "y", "scorer": "dsir", "target_table": "t",
+                  "keep_fraction": 0.5, "mode": "incremental"},
+                 f"dsir {_CORPUS_RELATIVE}", id="dsir-incremental-folded"),
+    pytest.param({"source": "x", "destination": "y", "scorer": "pii", "pii_types": ["iban"]},
+                 "pii_types must be a non-empty subset of email|phone|card (got ['iban'])",
+                 id="pii-types-folded"),
+    pytest.param({"source": "x", "destination": "y", "scorer": "repetition"},
+                 _REPETITION_NEEDS, id="repetition-needs-some-bound-folded"),
+]
+
+# the tables the run-time cases read: a source with no id column, a
+# corpus with one, and a secondary table with no text column
+_RUN_TABLES = {
+    "ftr_noid": ("text string", [("a b c",)]),
+    "ftr_docs": ("doc_id long, text string", [(1, "a b c")]),
+    "ftr_notext": ("doc_id long, body string", [(1, "a b c")]),
+}
+
+
+@pytest.mark.parametrize("cfg, message", _REJECTS)
+def test_filter_task_rejects(ctx, spark, cfg, message):
+    for name in {cfg.get("source"), cfg.get("reference_table"), cfg.get("target_table")}:
+        if name in _RUN_TABLES and not spark.catalog.tableExists(name):
+            schema, rows = _RUN_TABLES[name]
+            ctx.db.replace_table(name, spark.createDataFrame(rows, schema))
+    t = FilterTask("bad", cfg, ctx)
+    with pytest.raises(ValueError) as err:
+        t.config()
+        t.run()
+    # the cast errors are Python's own int()/float() messages
+    unprefixed = ("filter task", "invalid literal", "could not convert")
+    prefix = "" if message.startswith(unprefixed) else "filter task 'bad': "
+    assert str(err.value) == prefix + message
+    assert not spark.catalog.tableExists("ftr_out")
+
+
+# configs accepted at config time: (scorer, incremental, declared sources)
+_ACCEPTS = [
+    pytest.param(_cfg("quality", min_score=0.5), ("quality", False, ["src_value"]),
+                 id="quality"),
+    pytest.param({"source": "s", "destination": "d", "min_score": 0.5},
+                 ("quality", False, ["src_value"]), id="default-scorer"),
+    pytest.param(_cfg("quality", min_score=0.5, with_score=True, text_column="body",
+                      id_column="key", boundaries="exact"),
+                 ("quality", False, ["src_value"]), id="quality-common-options"),
+    pytest.param(_cfg("langid", languages=["en", "zh"]), ("langid", False, ["src_value"]),
+                 id="langid"),
+    pytest.param(_cfg("length", min_tokens=10), ("length", False, ["src_value"]),
+                 id="length-min"),
+    pytest.param(_cfg("length", max_tokens=40, mode="incremental"),
+                 ("length", True, ["src_value"]), id="length-max-incremental"),
+    pytest.param(_cfg("entropy", min_entropy=2.0, mode="incremental"),
+                 ("entropy", True, ["src_value"]), id="entropy-incremental"),
+    pytest.param(_cfg("repetition", max_repetition_ratio=0.5),
+                 ("repetition", False, ["src_value"]), id="repetition-ratio"),
+    pytest.param(_cfg("repetition", max_immediate_repeats=1, mode="incremental"),
+                 ("repetition", True, ["src_value"]), id="repetition-repeats-incremental"),
+    pytest.param(_cfg("repetition", max_top2_ppm=200000, max_top3_ppm=180000,
+                      max_top4_ppm=160000, max_dup5_ppm=150000),
+                 ("repetition", False, ["src_value"]), id="repetition-ngram"),
+    pytest.param(_cfg("repetition", max_dup_line_ppm=300000, max_dup_char_ppm=200000),
+                 ("repetition", False, ["src_value"]), id="repetition-dup-lines"),
+    pytest.param(_cfg("gopher"), ("gopher", False, ["src_value"]), id="gopher-defaults"),
+    pytest.param(_cfg("gopher", min_words=30, max_words=1000, min_mean_word_len=2,
+                      max_mean_word_len=12, max_symbol_permille=50, min_alpha_permille=700,
+                      min_stop_words=1, mode="incremental"),
+                 ("gopher", True, ["src_value"]), id="gopher-bounds-incremental"),
+    pytest.param(_cfg("c4"), ("c4", False, ["src_value"]), id="c4-defaults"),
+    pytest.param(_cfg("c4", min_sentences=2, min_words_per_line=3, c4_rewrite=False),
+                 ("c4", False, ["src_value"]), id="c4-no-rewrite"),
+    pytest.param(_cfg("pii"), ("pii", False, ["src_value"]), id="pii-defaults"),
+    pytest.param(_cfg("pii", pii_types=["card"], pii_action="redact", max_pii=1,
+                      mode="incremental"),
+                 ("pii", True, ["src_value"]), id="pii-card-redact-incremental"),
+    pytest.param(_cfg("surprisal", max_avg_nll=4.0), ("surprisal", False, ["src_value"]),
+                 id="surprisal-threshold"),
+    pytest.param(_cfg("surprisal", keep_fraction=1), ("surprisal", False, ["src_value"]),
+                 id="surprisal-keep-all"),
+    pytest.param(_cfg("surprisal", lm_order=2, keep_fraction=0.5, boundaries="approx",
+                      approx_accuracy=100),
+                 ("surprisal", False, ["src_value"]), id="bigram-approx"),
+    pytest.param(_cfg("surprisal", reference_table="r", max_avg_nll=4.0, mode="incremental"),
+                 ("surprisal", True, ["reference_value", "src_value"]),
+                 id="frozen-unigram-incremental"),
+    pytest.param(_cfg("surprisal", lm_order=2, reference_table="r", max_avg_nll=3.4,
+                      mode="incremental"),
+                 ("surprisal", True, ["reference_value", "src_value"]),
+                 id="frozen-bigram-incremental"),
+    pytest.param(_cfg("dsir", target_table="t", min_weight_micro8=0),
+                 ("dsir", False, ["src_value", "target_value"]), id="dsir-min-weight"),
+    pytest.param(_cfg("dsir", target_table="t", keep_fraction=0.2),
+                 ("dsir", False, ["src_value", "target_value"]), id="dsir-keep-fraction"),
+]
+
+
+# the example corpus pipeline's filter tasks, as its YAML writes them
+_PIPELINE = yaml.safe_load(
+    (Path(__file__).parents[1] / "examples/corpus_pipeline/tasks/pipeline.yaml").read_text()
+)["tasks"]
+_ACCEPTS += [
+    pytest.param(_PIPELINE[name], want, id=f"pipeline-{name}")
+    for name, want in {
+        "documents_pii_redacted": ("pii", False, ["src_value"]),
+        "documents_gopher_filtered": ("gopher", False, ["src_value"]),
+        "documents_quality_filtered": ("quality", False, ["src_value"]),
+        "documents_repetition_filtered": ("repetition", False, ["src_value"]),
+        "documents_surprisal_filtered": ("surprisal", False, ["src_value"]),
+        "documents_dsir_selected": ("dsir", False, ["src_value", "target_value"]),
+        "documents_bigram_filtered": ("surprisal", False, ["reference_value", "src_value"]),
+        "documents_c4_cleaned": ("c4", False, ["src_value"]),
+        "documents_entropy_gated": ("entropy", False, ["src_value"]),
+    }.items()
+]
+assert {n for n, c in _PIPELINE.items() if c.get("type") == "filter"} == {
+    p.id[len("pipeline-"):] for p in _ACCEPTS if p.id.startswith("pipeline-")
+}
+
+
+@pytest.mark.parametrize("cfg, want", _ACCEPTS)
+def test_filter_task_accepts(ctx, cfg, want):
+    t = FilterTask("ok", cfg, ctx)
+    t.config()
+    assert t.status == TaskStatus.READY
+    assert (t.scorer, t.incremental, sorted(t._declared_sources)) == want

@@ -147,11 +147,6 @@ def test_filter_task_repetition_max_immediate_repeats(spark, tmp_path):
     assert {r.doc_id for r in out.collect()} == {1, 3}
 
 
-def test_filter_task_repetition_requires_threshold(spark, tmp_path):
-    with pytest.raises(ValueError, match="repetition needs"):
-        _run_filter(spark, tmp_path, [(1, "a b c")], scorer="repetition")
-
-
 # -- 3. hyperplane family cap -------------------------------------------
 
 
@@ -674,11 +669,6 @@ def test_filter_task_surprisal_keep_fraction_exact_rank(spark, tmp_path):
     assert kept == {r.doc_id for r in scored[:15]}
 
 
-def test_filter_task_surprisal_requires_threshold(spark, tmp_path):
-    with pytest.raises(ValueError, match="surprisal needs"):
-        _run_filter(spark, tmp_path, [(1, "a b c")], scorer="surprisal")
-
-
 # -- 10. filter task: incremental mode ----------------------------------
 
 
@@ -727,18 +717,6 @@ def test_filter_task_incremental_appends_only_new_rows(spark, tmp_path):
     )
     assert sorted(r.doc_id for r in out3.collect()) == [1, 3, 4]
     spark.sql("DROP TABLE IF EXISTS r6_filter_out")
-
-
-def test_filter_task_incremental_rejects_surprisal(spark, tmp_path):
-    with pytest.raises(ValueError, match="corpus-relative"):
-        _run_filter(
-            spark,
-            tmp_path,
-            [(1, "a b c")],
-            scorer="surprisal",
-            max_avg_nll=5.0,
-            mode="incremental",
-        )
 
 
 def test_residual_pq_encoding_improves_recall_and_guards_inserts(spark, tmp_path):

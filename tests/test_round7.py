@@ -516,27 +516,6 @@ def test_filter_dsir_keeps_target_like_docs(spark, tmp_path):
     assert "w_micro8" in spark.table("r7_dsir_out").columns
 
 
-def test_filter_dsir_validation(spark, tmp_path):
-    from sayn_spark.operators.filter import FilterTask
-
-    ctx = _filter_ctx(spark, tmp_path)
-
-    def cfg(**kw):
-        t = FilterTask(
-            "r7_dsir_bad",
-            {"source": "x", "destination": "y", "scorer": "dsir", **kw},
-            ctx,
-        )
-        t.config()
-
-    with pytest.raises(ValueError, match="needs target_table"):
-        cfg(keep_fraction=0.5)
-    with pytest.raises(ValueError, match="keep_fraction"):
-        cfg(target_table="t")
-    with pytest.raises(ValueError, match="corpus-relative"):
-        cfg(target_table="t", keep_fraction=0.5, mode="incremental")
-
-
 # -- q_dedup_passage_rewrite ---------------------------------------------
 
 
@@ -900,19 +879,6 @@ def test_filter_pii_card_luhn(spark, tmp_path):
     assert red[4].text == "no digits at all"
 
 
-def test_filter_pii_types_validation(spark, tmp_path):
-    from sayn_spark.operators.filter import FilterTask
-
-    ctx = _filter_ctx(spark, tmp_path)
-    t = FilterTask(
-        "r7_card_bad",
-        {"source": "x", "destination": "y", "scorer": "pii", "pii_types": ["iban"]},
-        ctx,
-    )
-    with pytest.raises(ValueError, match="pii_types"):
-        t.config()
-
-
 # -- mixture task: allow_upsample ----------------------------------------
 
 
@@ -978,7 +944,7 @@ def test_mixture_upsample_validation(spark, tmp_path):
         t.config()
 
 
-# -- C4 cleaning rules (query + filter task scorer + stream stage) ------
+# -- C4 cleaning rules (filter task scorer) ----------------------------
 
 
 def test_filter_c4_rewrites_and_drops(spark, tmp_path):
@@ -1038,53 +1004,6 @@ def test_filter_c4_min_sentences_and_no_rewrite(spark, tmp_path):
     t.run()
     rows = spark.table("r7_c42_out").collect()
     assert len(rows) == 1 and rows[0].text == short  # untouched, kept
-
-
-def test_content_filter_stream_c4_matches_batch(spark, tmp_path):
-    """The streaming c4 stage must keep and rewrite exactly as the
-    batch scorer (same shared builders, stateless)."""
-    from sayn_spark.operators.filter import FilterTask
-    from sayn_spark.streaming import content_filter_stream
-
-    ctx = _filter_ctx(spark, tmp_path)
-    pages = []
-    for i in range(40):
-        lines = [f"w{j} alpha beta gamma delta epsilon." for j in range(i % 5)]
-        lines.append("tail line without punct here now")
-        if i % 7 == 0:
-            lines.append("lorem ipsum dolor sit amet.")
-        pages.append((i, "\n".join(lines)))
-    docs = spark.createDataFrame(pages, "doc_id long, text string")
-    src = tmp_path / "c4_docs"
-    src.mkdir()
-    docs.coalesce(1).write.mode("overwrite").parquet(str(src / "w1"))
-    stream = spark.readStream.schema("doc_id long, text string").option(
-        "recursiveFileLookup", "true"
-    ).parquet(str(src))
-    q = (
-        content_filter_stream(stream, min_score=0.0, c4={"min_sentences": 2})
-        .writeStream.format("memory")
-        .queryName("c4s_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r.doc_id: r.text for r in spark.table("c4s_out").collect()}
-
-    ctx.db.replace_table("r7_c4s_src", docs)
-    t = FilterTask(
-        "r7_c4s",
-        {"source": "r7_c4s_src", "destination": "r7_c4s_out", "scorer": "c4",
-         "min_sentences": 2},
-        ctx,
-    )
-    t.config()
-    t.run()
-    want = {r.doc_id: r.text for r in spark.table("r7_c4s_out").collect()}
-    assert got == want
-    assert 0 < len(got) < len(pages)
-    assert spark.table("c4s_out").columns == ["doc_id", "text"]
 
 
 # -- boilerplate line dedup (dedup task method: lines) ------------------
@@ -1182,19 +1101,6 @@ def test_filter_repetition_dup_line_bounds(spark, tmp_path):
     assert run("r7_dl_b", max_dup_char_ppm=200_000) == {1, 4}
     # loose bound keeps the 1/3-dup page but not the all-dup one
     assert run("r7_dl_c", max_dup_line_ppm=400_000) == {1, 2, 4}
-
-
-def test_filter_repetition_needs_some_bound(spark, tmp_path):
-    from sayn_spark.operators.filter import FilterTask
-
-    ctx = _filter_ctx(spark, tmp_path)
-    t = FilterTask(
-        "r7_dl_bad",
-        {"source": "x", "destination": "y", "scorer": "repetition"},
-        ctx,
-    )
-    with pytest.raises(ValueError, match="dup_line"):
-        t.config()
 
 
 # -- perceptual-hash image dedup ----------------------------------------

@@ -1200,6 +1200,87 @@ def test_content_filter_stream_entropy_matches_batch(spark, tmp_path):
     assert 0 < len(got) < docs.count()
 
 
+@pytest.mark.parametrize(
+    "stage, message",
+    [
+        pytest.param(
+            {"repetition": {"max_top2_ppm": 200000}},
+            "repetition takes ['max_dup_char_ppm', 'max_dup_line_ppm', "
+            "'max_immediate_repeats', 'max_repetition_ratio'], not ['max_top2_ppm']",
+            id="repetition-ngram-gate",
+        ),
+        pytest.param(
+            {"pii": {"pii_types": ["card"]}},
+            "pii takes ['action', 'max_pii'], not ['pii_types']",
+            id="pii-types",
+        ),
+        pytest.param(
+            {"c4": {"c4_rewrite": False}},
+            "c4 takes ['min_sentences', 'min_words_per_line', 'rewrite'], "
+            "not ['c4_rewrite']",
+            id="c4-task-key",
+        ),
+    ],
+)
+def test_content_filter_stream_rejects_unread_stage_keys(spark, tmp_path, stage, message):
+    """A stage key the stream does not read raises when the stream is
+    built, before any query starts — it was dropped without a word, so
+    the gate the caller asked for never applied."""
+    from sayn_spark.streaming import content_filter_stream
+
+    stream = spark.readStream.schema("doc_id long, text string").parquet(str(tmp_path))
+    with pytest.raises(ValueError) as err:
+        content_filter_stream(stream, min_score=0.0, **stage)
+    assert str(err.value) == f"content_filter_stream: {message}"
+    assert spark.streams.active == []
+
+
+def test_content_filter_stream_c4_matches_batch(spark, tmp_path, ctx):
+    """The streaming c4 stage must keep and rewrite exactly as the
+    batch scorer (same shared builders, stateless)."""
+    from sayn_spark.operators.filter import FilterTask
+    from sayn_spark.streaming import content_filter_stream
+
+    pages = []
+    for i in range(40):
+        lines = [f"w{j} alpha beta gamma delta epsilon." for j in range(i % 5)]
+        lines.append("tail line without punct here now")
+        if i % 7 == 0:
+            lines.append("lorem ipsum dolor sit amet.")
+        pages.append((i, "\n".join(lines)))
+    docs = spark.createDataFrame(pages, "doc_id long, text string")
+    src = tmp_path / "c4_docs"
+    src.mkdir()
+    docs.coalesce(1).write.mode("overwrite").parquet(str(src / "w1"))
+    stream = spark.readStream.schema("doc_id long, text string").option(
+        "recursiveFileLookup", "true"
+    ).parquet(str(src))
+    q = (
+        content_filter_stream(stream, min_score=0.0, c4={"min_sentences": 2})
+        .writeStream.format("memory")
+        .queryName("c4s_out")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = {r.doc_id: r.text for r in spark.table("c4s_out").collect()}
+
+    ctx.db.replace_table("r7_c4s_src", docs)
+    t = FilterTask(
+        "r7_c4s",
+        {"source": "r7_c4s_src", "destination": "r7_c4s_out", "scorer": "c4",
+         "min_sentences": 2},
+        ctx,
+    )
+    t.config()
+    t.run()
+    want = {r.doc_id: r.text for r in spark.table("r7_c4s_out").collect()}
+    assert got == want
+    assert 0 < len(got) < len(pages)
+    assert spark.table("c4s_out").columns == ["doc_id", "text"]
+
+
 def test_decontaminate_semantic_stream_matches_batch(spark, tmp_path):
     """method=semantic streaming twin (VERDICT r8 item 5): micro-batches
     screened by embedding-cosine against the frozen reversed-token eval
