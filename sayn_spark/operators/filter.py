@@ -592,13 +592,15 @@ _COMMON = {"text_column": ("text", None), "with_score": (False, bool), "id_colum
 
 
 def scorer_options(c: dict) -> dict:
-    """Every scorer's options read from ``c``: given values cast, the
-    rest defaulted (a None default stays None)."""
+    """Every scorer's options read from ``c`` and cast, absent ones
+    defaulted; an option with no default stays None when absent or null."""
     o = {}
     for options in (_COMMON, *(s.options for s in SCORERS.values())):
         for name, (default, cast) in options.items():
             value = c.get(name, default)
-            o[name] = value if value is None or cast is None else cast(value)
+            if cast is not None and not (value is None and default is None):
+                value = cast(value)
+            o[name] = value
     return o
 
 
